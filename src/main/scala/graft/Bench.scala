@@ -30,6 +30,21 @@ object Bench {
       .map(b => math.max(0L, b.getCollectionTime)).sum
   }
 
+  /** Seconds at 3 decimals, in `Locale.ROOT`: the JVM default locale
+    * would print `0,583` under de_DE and the JSON would not parse. */
+  private[graft] def sec3(v: Double): String =
+    "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  private def jsonList(names: Seq[String]): String =
+    names.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  /** The compact final line: total, query count, failures and the
+    * contamination self-report. */
+  private[graft] def summaryLine(total: Double, nQueries: Int,
+      failed: Seq[String], stealJiffies: Long, gcMs: Long,
+      sf: String): String =
+    s"""{"metric":"total","value":${sec3(total)},"unit":"sec","n_queries":$nQueries,"failed":${jsonList(failed)},"steal_jiffies":$stealJiffies,"gc_ms":$gcMs,"sf":"$sf"}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -86,11 +101,10 @@ object Bench {
     // FRONT, so the line never parsed (r14/r15 BENCH artifacts both carry
     // parsed:null). Rounding shrinks the map; the compact summary line
     // below is the always-parseable fallback.
-    def sec3(v: Double): String = f"$v%.3f"
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + sec3(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    val failedJson = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = jsonList(failed)
     // Contamination self-report: delta of host steal jiffies and JVM GC ms
     // over the timed window. steal_jiffies is -1 when /proc/stat is absent;
     // otherwise a large value (hundreds+ of jiffies while individual queries
@@ -103,7 +117,8 @@ object Bench {
     // above): small enough (~200 B) that any bounded tail capture retains it
     // whole, so the run's total/failed/contamination read remains machine-
     // parseable even when the map line is truncated.
-    println(s"""{"metric":"total","value":${sec3(total)},"unit":"sec","n_queries":${results.size},"failed":$failedJson,"steal_jiffies":$stealDelta,"gc_ms":$gcDelta,"sf":"$sfDir"}""")
+    println(summaryLine(total, results.size, failed, stealDelta, gcDelta,
+      sfDir))
     spark.stop()
   }
 }

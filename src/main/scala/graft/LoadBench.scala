@@ -19,6 +19,13 @@ import org.apache.spark.sql.SparkSession
   * Usage: spark-submit --class graft.LoadBench <jar> [nRecords]
   */
 object LoadBench {
+  /** The one JSON result line; seconds format in `Locale.ROOT` (the JVM
+    * default locale would print `1,23` under de_DE). */
+  private[graft] def resultLine(rows: Long, sec: Double): String =
+    s"""{"metric":"load_records_per_sec","value":${(rows / sec).round},""" +
+      s""""unit":"rec/sec","records":$rows,""" +
+      s""""seconds":${"%.2f".formatLocal(java.util.Locale.ROOT, sec)}}"""
+
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(200000)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -59,8 +66,7 @@ object LoadBench {
     val sec = (System.nanoTime() - t0) / 1e9
     val rows = report.rowsPerStream.values.sum
     require(rows == n, s"expected $n rows loaded, got $rows")
-    println(s"""{"metric":"load_records_per_sec","value":${(rows / sec).round},""" +
-      s""""unit":"rec/sec","records":$rows,"seconds":${"%.2f".format(sec)}}""")
+    println(resultLine(rows, sec))
     spark.stop()
   }
 }

@@ -630,7 +630,9 @@ object AvroManifests {
     // the old per-call pool churned 8 threads on every commit); results
     // keep the sorted file order (futures joined in order), so manifests
     // are byte-identical. Failures rethrow their ORIGINAL cause, matching
-    // the serial path's exception surface, and cancel the queued reads.
+    // the serial path's exception surface. ANY abort — a failed read, or
+    // the committing thread interrupted in get() — cancels the queued
+    // reads, so an abandoned commit never keeps the shared pool busy.
     if (files.lengthCompare(2) < 0) files.map(entryOf)
     else {
       val futures = files.map(f => footerPool.submit(
@@ -639,16 +641,19 @@ object AvroManifests {
         }))
       try futures.map(_.get())
       catch {
-        case e: java.util.concurrent.ExecutionException =>
+        case e: Throwable =>
           futures.foreach(_.cancel(false))
-          throw e.getCause
+          throw (e match {
+            case ee: java.util.concurrent.ExecutionException => ee.getCause
+            case other => other
+          })
       }
     }
   }
 
   /** Shared bounded executor for commit-time footer reads (daemon threads
     * — never pins the JVM). One pool per JVM instead of one per commit. */
-  private lazy val footerPool: java.util.concurrent.ExecutorService =
+  private[lake] lazy val footerPool: java.util.concurrent.ExecutorService =
     java.util.concurrent.Executors.newFixedThreadPool(8,
       new java.util.concurrent.ThreadFactory {
         private val n = new java.util.concurrent.atomic.AtomicInteger

@@ -210,7 +210,7 @@ final class BatchLoader(
             partitionBy.getOrElse(stream, Nil))
           // the table may have more columns than this segment declares
           // (earlier schemas/feeds) — align by name, null-fill the rest
-          val aligned = alignTo(mapped, catalog.load(namespace, target).schema)
+          val aligned = alignTo(mapped, catalog.tableSchema(namespace, target))
           // ACTIVATE_VERSION swaps the table on the FIRST write, appends after
           val overwrite = version.isDefined && i == 0
           val sortCols = sortedBy.getOrElse(stream, Nil)
@@ -253,7 +253,7 @@ final class BatchLoader(
           if (catalog.tableExists(namespace, target)) {
             // an INDEPENDENT empty frame — overwriting with a limit(0) read
             // of the same table is rejected (UNSUPPORTED_OVERWRITE)
-            val schema = catalog.load(namespace, target).schema
+            val schema = catalog.tableSchema(namespace, target)
             catalog.overwrite(namespace, target, spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
             Some(target -> ((0L, 0L)))

@@ -85,6 +85,11 @@ trait LakeCatalog {
                       targetFiles: Option[Int] = None): Unit =
     overwrite(ns, table, shapeSorted(df, sortCols, targetFiles))
   def load(ns: String, table: String): DataFrame
+  /** The schema [[load]] exposes, without planning the read where the
+    * carrier can answer from its metadata (the loader asks on every
+    * sync). */
+  def tableSchema(ns: String, table: String): StructType =
+    load(ns, table).schema
   def dropNamespace(ns: String): Unit
   /** Small-file compaction: rewrite the table into ~`targetFiles` files,
     * PRESERVING its partition layout (partition pruning must survive

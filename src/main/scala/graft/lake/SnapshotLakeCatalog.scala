@@ -3,7 +3,8 @@ package graft.lake
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, lit, not, struct, when}
+import org.apache.spark.sql.functions.{coalesce, col, lit, not,
+  regexp_extract, struct, typedLit, when}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 import java.nio.file.{Files, Path}
@@ -1496,6 +1497,19 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
 
   override def load(ns: String, table: String): DataFrame =
     loadSnapshot(ns, table, None)
+
+  /** [[load]]'s schema off the metadata document alone — no manifest
+    * sweep, no relation: the current schema minus tombstones, nullable
+    * throughout once the table has data (file reads report every column
+    * nullable), as declared while it has none. */
+  override def tableSchema(ns: String, table: String): StructType = {
+    val meta = readMeta(ns, table)
+    val visible = StructType(metaSchema(meta).fields
+      .filterNot(f => SnapshotLakeCatalog.isTombstone(f.name)))
+    if (currentSnapNode(meta).exists(liveDirsOf(_).nonEmpty))
+      deepNullable(visible).asInstanceOf[StructType]
+    else visible
+  }
 
   /** Time travel (Iceberg `VERSION AS OF`): read the table as of any
     * snapshot in the log — snapshots are immutable directory sets, so a
@@ -3222,10 +3236,27 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
   private val PosFileTag = "_graft_file"
   private val PosPosTag = "_graft_pos"
   private val SeqTag = "_graft_seq"
+  /** The snapshot-dir name in a `_metadata.file_path`: the last path
+    * segment before the file that is not a Hive `name=value` partition
+    * dir (partition subdirs always carry `=`; snapshot dir names never
+    * do). Anchored at the file name, so the data root — spaces and all —
+    * never takes part. The path column is URI-encoded, but catalog-
+    * written dir names (`snap-`/`del-`/`stream-`, nanos, UUID) encode to
+    * themselves, so the segment IS the dir name. */
+  private val DirSegment = "/([^/=]+)(?:/[^/]*=[^/]*)*/[^/]+$"
 
   /** Scan `dirs` (⊆ the snapshot's live set) with the snapshot's DELETE
     * FILES applied — the merge-on-read reader shared by load/time-travel,
     * the copy-on-write locate/rewrite passes, and the MOR delete writers.
+    *
+    * Read plan: every dir is planned off its Avro manifest ([[planDir]]);
+    * all FLAT dirs sharing a physical schema read as ONE parquet relation,
+    * so a table costs one scan node per schema generation, not one per
+    * snapshot directory (an append-only history of any depth plans one
+    * scan). Partitioned and pre-manifest dirs read on their own. The two
+    * per-directory values a scan may need — the source-dir `tag` and the
+    * equality-delete sequence — are one expression over
+    * `_metadata.file_path` ([[DirSegment]]) shared by every frame.
     *
     * Application shape (all distributed joins, never a collect): position
     * deletes are ONE (file_path, pos) anti-join over the unioned scan —
@@ -3242,7 +3273,7 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     * `delFilter`: restrict WHICH delete-file groups apply (the debt
     * report's per-group masking counts need a partial view).
     *
-    * Evolution alignment (read-time, Iceberg semantics): each dir frame
+    * Evolution alignment (read-time, Iceberg semantics): each frame
     * first maps RENAMED columns — a frame missing a current name but
     * carrying one of its former names ([[aliasesOf]]) reads that physical
     * column under the current name; then unionByName fills columns a
@@ -3264,8 +3295,7 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     val eqDels = dels.filter(_.kind == "equality")
     val posDels = dels.filter(_.kind == "position")
     val needPos = withPos || posDels.nonEmpty
-    val seqs = if (eqDels.isEmpty) Map.empty[String, Long]
-               else manifestListSeqs(sn)
+    val needFile = needPos || tag.isDefined || eqDels.nonEmpty
     def aliasFix(df0: DataFrame): DataFrame =
       aliases.foldLeft(df0) { case (d, (cur, olds)) =>
         if (d.columns.contains(cur)) d
@@ -3276,20 +3306,22 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
           case None    => d
         }
       }
-    val frames = dirs.flatMap { d =>
-      rawDirFrame(ns, table, d, fileFilter).map { dfRaw =>
-        val df0 = aliasFix(dfRaw)
-        var df = if (needPos) df0.select(col("*"),
-            col("_metadata.file_path").as(PosFileTag),
-            col("_metadata.row_index").as(PosPosTag))
-          else df0
-        tag.foreach(t => df = df.withColumn(t, lit(d)))
-        if (eqDels.nonEmpty)
-          df = df.withColumn(SeqTag,
-            lit(seqs.getOrElse(d, Long.MaxValue)))
-        df
-      }
+    val plans = dirs.flatMap(d => planDir(ns, table, d, fileFilter))
+    val flat = plans.collect { case Left(p) => p }
+    val grouped = flat.map(_._1).distinct.map { st =>
+      spark.read.schema(st)
+        .parquet(flat.filter(_._1 == st).flatMap(_._2): _*)
     }
+    val frames = (grouped ++ plans.collect { case Right(df) => df })
+      .map { raw =>
+        val df0 = aliasFix(raw)
+        if (needPos) df0.select(col("*"),
+          col("_metadata.file_path").as(PosFileTag),
+          col("_metadata.row_index").as(PosPosTag))
+        else if (needFile)
+          df0.select(col("*"), col("_metadata.file_path").as(PosFileTag))
+        else df0
+      }
     val extraCols = tag.toSeq ++ (if (withPos) Seq(PosFileTag, PosPosTag)
                                   else Seq.empty)
     // DROPPED columns (tombstone fields) exist internally — old files
@@ -3310,6 +3342,11 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
       if (df.columns.contains(c)) df
       else df.withColumn(c, lit(null).cast(schema(c).dataType))
     }
+    def dirOf = regexp_extract(col(PosFileTag), DirSegment, 1)
+    tag.foreach(t => out = out.withColumn(t, dirOf))
+    if (eqDels.nonEmpty)
+      out = out.withColumn(SeqTag, coalesce(
+        typedLit(manifestListSeqs(sn)).apply(dirOf), lit(Long.MaxValue)))
     if (posDels.nonEmpty) {
       val pd = posDels.map(r => readFlatDir(
           dataDir(ns, table).resolve(r.dir)))
@@ -3365,17 +3402,6 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
                           declared: DataType): Column =
     SchemaShape.alignColumn(c, phys, declared)
 
-  /** Read one snapshot data dir with ITS layout (basePath recovers
-    * partition columns) — the per-directory half of the read-time
-    * evolution [[scanWithDeletes]] performs.
-    *
-    * Scan planning reads each directory's Avro MANIFEST (the per-file
-    * source of truth, as an Iceberg reader would): the exact data-file
-    * list goes to the parquet reader, no directory listing — which is
-    * what makes manifest-level pruning (partition tuples, file counts)
-    * possible without touching storage. A directory written before the
-    * manifest layer (no manifest yet — one materializes on the table's
-    * next write commit) falls back to directory listing. */
   /** Physical Spark schema of a catalog-written parquet file, read driver-
     * side off the footer's `org.apache.spark.sql.parquet.row.metadata` key
     * — the exact schema Spark's own inference returns for Spark-written
@@ -3446,46 +3472,63 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
       .parquet(path.toString)
   }
 
-  private def rawDirFrame(ns: String, table: String, s: String,
-      fileFilter: Option[AvroManifests.DataFileEntry => Boolean] = None)
-      : Option[DataFrame] = {
+  /** One snapshot data dir's scan plan, off its Avro manifest (the per-
+    * file source of truth, as an Iceberg reader would): the exact data-
+    * file list after `fileFilter`, no directory listing — which is what
+    * makes manifest-level pruning possible without touching storage.
+    *
+    * `Left((schema, files))`: a FLAT dir whose physical schema comes off
+    * the footer key ([[footerSparkSchema]], no inference job) —
+    * [[scanWithDeletes]] reads every flat dir sharing that schema as one
+    * relation. `Right(frame)`: a dir that reads on its own with `basePath`
+    * partition inference — partitioned layouts, a flat dir without the
+    * Spark footer key, and a dir written before the manifest layer (no
+    * manifest yet — one materializes on the table's next write commit;
+    * it cannot prune, and the full read stays CORRECT: callers always
+    * re-apply the exact row-level bound). None: nothing to scan (every
+    * file pruned, or an empty partitioned write). */
+  private def planDir(ns: String, table: String, s: String,
+      fileFilter: Option[AvroManifests.DataFileEntry => Boolean])
+      : Option[Either[(StructType, Seq[String]), DataFrame]] = {
     val dir = dataDir(ns, table).resolve(s).toString
     val mp = manifestPathFor(ns, table, s)
-    if (Files.exists(mp)) {
-      val files = AvroManifests.readManifest(mp)
-        .filter(e => e.content == 0 && fileFilter.forall(_(e)))
-        .map(_.filePath)
-      // a zero-file snapshot dir (empty partitioned write) scans nothing
-      if (files.isEmpty) None
-      else {
-        // flat dir: physical schema off the footer key — no inference job.
-        // Partitioned dirs (files under key=value subdirs) keep inference
-        // on their FIRST read — partition-column TYPES come from Spark's
-        // per-value path inference, which an explicit schema would have to
-        // replicate bit-for-bit — but the resolved schema is memoized per
-        // exact FILE SET (dirs are write-once, inference is deterministic),
-        // so the repeat reads every lifecycle query issues skip the job.
-        val flat = files.forall(f =>
-          Option(Path.of(f).getParent).exists(_.toString == dir))
-        val rd = spark.read.option("basePath", dir)
-        if (flat)
-          Some(footerSparkSchema(files.head).map(rd.schema).getOrElse(rd)
-            .parquet(files: _*))
-        else {
-          val key = dir + "::" + files.mkString(" ")
-          Option(fileSchemaMemo.get(key)).flatten match {
-            case Some(st) => Some(rd.schema(st).parquet(files: _*))
-            case None =>
-              val df = rd.parquet(files: _*) // resolves (one inference job)
-              fileSchemaMemo.put(key, Some(df.schema))
-              Some(df)
-          }
-        }
+    val rd = spark.read.option("basePath", dir)
+    if (!Files.exists(mp)) return Some(Right(rd.parquet(dir)))
+    val files = AvroManifests.readManifest(mp)
+      .filter(e => e.content == 0 && fileFilter.forall(_(e)))
+      .map(_.filePath)
+    if (files.isEmpty) return None
+    val flat = files.forall(f =>
+      Option(Path.of(f).getParent).exists(_.toString == dir))
+    if (flat) Some(footerSparkSchema(files.head) match {
+      case Some(st) => Left((st, files))
+      case None     => Right(rd.parquet(files: _*))
+    })
+    else {
+      // Partitioned dirs keep inference on their FIRST read — partition-
+      // column TYPES come from Spark's per-value path inference, which an
+      // explicit schema would have to replicate bit-for-bit — but the
+      // resolved schema is memoized per exact FILE SET (dirs are write-
+      // once, inference is deterministic), so repeat reads skip the job.
+      val key = dir + "::" + files.mkString(" ")
+      Option(fileSchemaMemo.get(key)).flatten match {
+        case Some(st) => Some(Right(rd.schema(st).parquet(files: _*)))
+        case None =>
+          val df = rd.parquet(files: _*) // resolves (one inference job)
+          fileSchemaMemo.put(key, Some(df.schema))
+          Some(Right(df))
       }
-    } else Some(spark.read.option("basePath", dir).parquet(dir))
-    // a pre-manifest legacy dir cannot prune (full read stays CORRECT:
-    // callers always re-apply the exact row-level bound)
+    }
   }
+
+  /** One dir as its own frame (the merge/upsert key read-back of a just-
+    * written dir). */
+  private def rawDirFrame(ns: String, table: String,
+                          s: String): Option[DataFrame] =
+    planDir(ns, table, s, None).map {
+      case Left((st, files)) => spark.read.schema(st).parquet(files: _*)
+      case Right(df)         => df
+    }
 
   protected def deleteTree(dir: Path): Unit =
     if (Files.exists(dir)) {

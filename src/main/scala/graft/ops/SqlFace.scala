@@ -47,11 +47,13 @@ object SqlFace {
 
   /** Distinct parquet files the scan PLANNED (bin-packing folds many
     * files into one input partition, so partition counts can't see
-    * pruning — file identity can). Planning-time file identity needs no
-    * execution: `BatchScanExec.inputPartitions` is fixed when the scan
-    * plans (manifest pruning is driver-side), so the old `df.collect()`
-    * here — a full execution of the probe query per sentinel — bought
-    * nothing the initial physical plan doesn't already hold. */
+    * pruning — file identity can), read off the initial physical plan
+    * without executing the query. This reflects PLAN-TIME pruning only
+    * (static pushed filters, driver-side manifest pruning): the scan also
+    * supports runtime filtering, which can shrink the file set during
+    * execution, so a sentinel that means to observe join-driven (runtime
+    * or dynamic partition) pruning must execute the query first and
+    * read the executed plan instead. */
   private def scanFiles(df: DataFrame): Int = {
     deepCollect(finalPlan(df)) { case b: BatchScanExec => b }
       .flatMap(_.inputPartitions)

@@ -180,4 +180,52 @@ class LoadPathRegressionSpec extends AnyFunSuite {
     assert(spark.table(s"`$ns`.s").count() == 0,
       "stale rows must not survive a version swap")
   }
+
+  test("an interrupted commit cancels its queued footer reads: the shared " +
+    "pool drains and the next commit lands") {
+    val pool = AvroManifests.footerPool
+      .asInstanceOf[java.util.concurrent.ThreadPoolExecutor]
+    val dir = java.nio.file.Files.createTempDirectory("graft-footer-")
+      .resolve("d")
+    val nFiles = 24
+    spark.range(0, nFiles.toLong, 1, nFiles).write.parquet(dir.toString)
+    // occupy every pool thread, so the scan's reads can only queue
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val busy = new java.util.concurrent.CountDownLatch(pool.getMaximumPoolSize)
+    val blockers = (1 to pool.getMaximumPoolSize).map(_ =>
+      pool.submit(new Runnable {
+        override def run(): Unit = { busy.countDown(); gate.await() }
+      }))
+    val queued =
+      try {
+        assert(busy.await(30, java.util.concurrent.TimeUnit.SECONDS))
+        val thrown = new java.util.concurrent.atomic.AtomicReference[Throwable]
+        val committer = new Thread(() =>
+          try { AvroManifests.scanDataDir(dir, Seq.empty); () }
+          catch { case e: Throwable => thrown.set(e) })
+        committer.start()
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (pool.getQueue.size < nFiles && System.nanoTime() < deadline)
+          Thread.sleep(5)
+        assert(pool.getQueue.size >= nFiles, "the scan's reads never queued")
+        committer.interrupt()
+        committer.join(30000)
+        assert(thrown.get().isInstanceOf[InterruptedException],
+          s"the committer must abort on the interrupt, got ${thrown.get()}")
+        pool.purge() // drops cancelled tasks from the queue
+        pool.getQueue.size
+      } finally {
+        gate.countDown()
+        blockers.foreach(_.get())
+      }
+    assert(queued == 0,
+      s"$queued footer reads of the aborted commit stayed queued")
+    // the pool serves the next commit (multi-file, so it reads in parallel)
+    val cat = DirectoryLakeCatalog.temp(spark)
+    val ns = freshNs()
+    val df = spark.range(0, 40, 1, 4).toDF("id")
+    cat.ensureTable(ns, "t", df.schema)
+    cat.append(ns, "t", df)
+    assert(cat.load(ns, "t").count() == 40)
+  }
 }
