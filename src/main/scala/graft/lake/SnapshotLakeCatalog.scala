@@ -265,19 +265,6 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
   //    unscaled two's-complement); the one omission left is INT96
   //    timestamp stats (parquet deprecates them; Spark 4 writes INT64).
 
-  /** Spark catalogString → Iceberg primitive type name. Nested types keep
-    * the Spark string (documented divergence above). */
-  private def icebergType(catalogString: String): String =
-    catalogString match {
-      case "bigint"                   => "long"
-      case "smallint" | "tinyint"     => "int"
-      case "timestamp"                => "timestamptz"
-      case "timestamp_ntz"            => "timestamp"
-      case other                      => other // int/string/double/float/
-                                               // boolean/date/binary/
-                                               // decimal(p,s) already match
-    }
-
   /** One spec-layout schema object: struct type, schema-id, field list
     * with id/name/required/type (ids assigned at the top level, the simple
     * half of SchemaConv's Singer assignment), plus the exact Spark schema
@@ -292,7 +279,8 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
       fn.put("id", i + 1)
       fn.put("name", f.name)
       fn.put("required", !f.nullable)
-      fn.put("type", icebergType(f.dataType.catalogString))
+      fn.put("type",
+        SnapshotLakeCatalog.icebergType(f.dataType.catalogString))
     }
     node.put("spark-schema", schema.json)
     node
@@ -310,85 +298,18 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     DataType.fromJson(currentSchemaNode(meta).get("spark-schema").asText())
       .asInstanceOf[StructType]
 
-  /** The write-side derivation of a spec transform, or None for identity
-    * (the data column itself partitions). Shared by the write layout and
-    * [[loadSlice]]'s bound evaluation so the two can never diverge.
-    * Formats follow Iceberg's (day `yyyy-MM-dd`, month `yyyy-MM`, hour
-    * `yyyy-MM-dd-HH`, year `yyyy` — all lexicographically ordered);
-    * truncate[W] floors integers (`v - pmod(v, W)`, exact for negatives)
-    * and prefixes strings. */
-  private def transformColumn(transform: String, src: String,
-                              srcType: DataType): Option[Column] = {
-    val c = col(s"`$src`")
-    transform match {
-      case "identity" => None
-      case "day"      => Some(org.apache.spark.sql.functions
-        .date_format(c, "yyyy-MM-dd"))
-      case "month"    => Some(org.apache.spark.sql.functions
-        .date_format(c, "yyyy-MM"))
-      case "hour"     => Some(org.apache.spark.sql.functions
-        .date_format(c, "yyyy-MM-dd-HH"))
-      case "year"     => Some(org.apache.spark.sql.functions
-        .date_format(c, "yyyy"))
-      case t if t.startsWith("truncate[") =>
-        val w = t.stripPrefix("truncate[").stripSuffix("]").toInt
-        srcType match {
-          case org.apache.spark.sql.types.StringType =>
-            Some(org.apache.spark.sql.functions.substring(c, 1, w))
-          case _ =>
-            Some(c - org.apache.spark.sql.functions.pmod(c, lit(w)))
-        }
-      case t if t.startsWith("bucket[") =>
-        // the spec's hash transform, as the codegen'd native expression
-        // (registered idempotently on this session for the loadSlice
-        // bound evaluation; writeSnapshot registers on the frame's own
-        // session before applying the layout)
-        val nb = t.stripPrefix("bucket[").stripSuffix("]").toInt
-        graft.functions.IcebergBucket.ensureRegistered(spark)
-        Some(org.apache.spark.sql.functions
-          .call_function("iceberg_bucket", c, lit(nb)))
-      case other => throw new IllegalArgumentException(
-        s"unsupported partition transform: $other")
-    }
-  }
-
-  /** The physical directory layout of the default spec: one
-    * (name, derive) per partition field — identity fields partition by
-    * the data column itself (derive = None); transform fields
-    * (day/month/hour/year/truncate[W]/bucket[N]) by a derived column
-    * computed at write time, recovered from the Hive path at read time,
-    * and DROPPED from query output (it is spec metadata, not a table
-    * column). EXCEPTION: on a legacy writeBucketed table (non-null
-    * `bucket-spec`) the bucket[N] spec fields describe whole-table row
-    * CLUSTERING, not directories, and are skipped here — the spec-driven
-    * `bucket(N, col)` partition transform (bucket-spec null) is a real
-    * directory layout. */
-  private def partitionLayout(meta: ObjectNode)
-      : Seq[(String, Option[Column])] = {
-    val schema = metaSchema(meta)
-    val specId = meta.get("default-spec-id").asInt()
-    val clusterOnlyBuckets = !meta.get("bucket-spec").isNull
-    meta.get("partition-specs").elements().asScala
-      .find(_.get("spec-id").asInt() == specId)
-      .map(_.get("fields").elements().asScala
-        .filter(f => !(clusterOnlyBuckets &&
-          f.get("transform").asText().startsWith("bucket[")))
-        .map { f =>
-          val src = schema.fields(f.get("source-id").asInt() - 1)
-          f.get("name").asText() -> transformColumn(
-            f.get("transform").asText(), src.name, src.dataType)
-        }.toSeq)
-      .getOrElse(Seq.empty)
-  }
-
-  /** Partition fields of the default spec as the manifest layer needs
-    * them: spec field name + the Avro type its path-parsed tuple values
-    * carry (None = not path-derivable: the legacy writeBucketed
-    * clustering fields). Identity transforms on long/int sources and
-    * spec-driven bucket[N] fields type natively; everything else rides
-    * the Hive path string ([[AvroManifests]]' documented divergence). */
-  private def manifestPartitionFields(meta: ObjectNode)
-      : Seq[AvroManifests.PartitionField] = {
+  /** The default spec's partition fields, walked once for every
+    * consumer: spec field name, transform, SOURCE column (name and type,
+    * by source id in the current schema) and the Avro carrier its
+    * path-parsed manifest tuple values ride — identity long/int keep
+    * their numerics, spec-driven bucket[N] fields are ints, every other
+    * field rides the Hive path string ([[AvroManifests]]' documented
+    * divergence). EXCEPTION: on a legacy writeBucketed table (non-null
+    * `bucket-spec`) the bucket[N] fields describe whole-table row
+    * CLUSTERING, not directories: their carrier is None (not
+    * path-derivable), and layouts and pruning skip them. */
+  private[lake] def specFields(meta: ObjectNode)
+      : Seq[SnapshotLakeCatalog.PartField] = {
     val schema = metaSchema(meta)
     val specId = meta.get("default-spec-id").asInt()
     val clusterOnlyBuckets = !meta.get("bucket-spec").isNull
@@ -396,21 +317,40 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
       .find(_.get("spec-id").asInt() == specId)
       .map(_.get("fields").elements().asScala.map { f =>
         val transform = f.get("transform").asText()
-        val srcIdx = f.get("source-id").asInt() - 1
-        val avroType =
+        val src = schema.fields(f.get("source-id").asInt() - 1)
+        val carrier =
           if (transform.startsWith("bucket["))
             (if (clusterOnlyBuckets) None else Some("int"))
-          else if (transform == "identity")
-            schema.fields.lift(srcIdx).map(_.dataType) match {
-              case Some(org.apache.spark.sql.types.LongType)    => Some("long")
-              case Some(org.apache.spark.sql.types.IntegerType) => Some("int")
-              case _                                            => Some("string")
-            }
+          else if (transform == "identity") src.dataType match {
+            case org.apache.spark.sql.types.LongType    => Some("long")
+            case org.apache.spark.sql.types.IntegerType => Some("int")
+            case _                                      => Some("string")
+          }
           else Some("string") // days/months/hours/truncate path values
-        AvroManifests.PartitionField(f.get("name").asText(), avroType)
+        SnapshotLakeCatalog.PartField(f.get("name").asText(), transform,
+          src.name, src.dataType, carrier)
       }.toSeq)
       .getOrElse(Seq.empty)
   }
+
+  /** The physical directory layout of the default spec: one
+    * (name, derive) per path-derivable partition field — identity fields
+    * partition by the data column itself (derive = None); transform
+    * fields (day/month/hour/year/truncate[W]/bucket[N]) by a derived
+    * column computed at write time, recovered from the Hive path at read
+    * time, and DROPPED from query output (it is spec metadata, not a
+    * table column). */
+  private def partitionLayout(meta: ObjectNode)
+      : Seq[(String, Option[Column])] =
+    specFields(meta).filter(_.carrier.isDefined).map(f =>
+      f.specName -> SnapshotLakeCatalog.transformColumn(f.transform,
+        f.srcName, f.srcType))
+
+  /** The spec fields as the manifest layer types their tuples. */
+  private def manifestPartitionFields(meta: ObjectNode)
+      : Seq[AvroManifests.PartitionField] =
+    specFields(meta).map(f =>
+      AvroManifests.PartitionField(f.specName, f.carrier))
 
   /** The per-directory manifest file: immutable once written, reused by
     * every snapshot referencing the directory (Iceberg manifest reuse —
@@ -1686,11 +1626,7 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
               "the stream")
           val base = dataDir(ns, table).resolve(d)
           AvroManifests.readManifest(mp).filter(_.content == 0)
-            .map(e => SqlDataFile(
-              if (e.filePath.startsWith("/")) e.filePath
-              else base.resolve(e.filePath).toString,
-              e.fileSizeInBytes, e.recordCount, e.partition.toMap,
-              e.lowerBounds, e.upperBounds))
+            .map(e => SqlDataFile.of(base.resolve(e.filePath).toString, e))
         }
       }
     }
@@ -2602,23 +2538,20 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
   }
 
   /** Partition-pruned range scan — Iceberg SCAN PLANNING over the Avro
-    * manifests: read ONLY the data files whose partition tuple admits
-    * `column` values in [`from`, `to`] (inclusive; literals given as
-    * strings in the column's natural format, e.g. `"2024-01-02 00:00:00"`
-    * for a timestamp), then apply the exact row-level bound on the
-    * survivors, merge-on-read deletes applied. This is where the
-    * day/month/hour/year/truncate[W] transforms pay off at 100 TB: a
-    * time-bounded query touches only the matching partitions' FILES —
-    * decided from manifest metadata on the driver, zero storage I/O for
-    * the pruned ones.
+    * manifests: read ONLY the data files whose partition tuple and column
+    * bounds admit `column` values in [`from`, `to`] (inclusive; literals
+    * given as strings in the column's natural format, e.g.
+    * `"2024-01-02 00:00:00"` for a timestamp), then apply the exact
+    * row-level bound on the survivors, merge-on-read deletes applied.
+    * This is where the day/month/hour/year/truncate[W] transforms pay off
+    * at 100 TB: a time-bounded query touches only the matching
+    * partitions' FILES — decided from manifest metadata before any task
+    * runs, zero storage I/O for the pruned ones.
     *
-    * Exactness is never at stake: files whose tuple value is missing
-    * (legacy dirs, non-derivable transforms) are kept, and the row bound
-    * re-applies on everything read — pruning only removes files the
-    * transform PROVES cannot match. Bound comparison mirrors the
-    * write-side derivation exactly ([[transformColumn]] evaluated on the
-    * literals — one local 1-row job): date formats compare
-    * lexicographically, numeric identity/truncate compare numerically. */
+    * Exactness is never at stake: pruning only removes files the
+    * manifests PROVE cannot match ([[ManifestPruning]], the evaluator
+    * the SQL scan shares), and the row bound re-applies on everything
+    * read. */
   def loadSlice(ns: String, table: String, column: String,
                 from: String, to: String): DataFrame =
     loadSlice(ns, table, Seq((column, from, to)))
@@ -2627,234 +2560,46 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     * bounds in ONE plan — `Seq(("ts", d0, d1), ("user_id", k, k))` prunes
     * by the day partition AND the user's manifest bounds/bucket before a
     * byte is read, which is how a real 100 TB query filters (time range
-    * AND key, not one or the other). Each column contributes its own
-    * partition-tier + stats-tier file filter; a file survives only if
-    * EVERY bound admits it; the exact row predicate (AND of all bounds)
-    * re-applies on the survivors, so unprunable columns degrade to
-    * row-filtering, never to wrong results. */
+    * AND key, not one or the other). Each bound becomes
+    * `column >= from AND column <= to` (`column = from` when the two
+    * match, so bucket point lookups prune), its literals cast up front
+    * with Catalyst `Cast` in the session zone — the row filter's own
+    * cast. A file survives only if EVERY bound admits it; the exact
+    * row predicate re-applies on the survivors, so unprunable columns
+    * degrade to row-filtering, never to wrong results. */
   def loadSlice(ns: String, table: String,
                 bounds: Seq[(String, String, String)]): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, LessThanOrEqual}
     require(bounds.nonEmpty, "loadSlice needs at least one column bound")
     val meta = readMeta(ns, table)
     val schema = metaSchema(meta)
-    val perCol = bounds.map { case (column, from, to) =>
-      columnSliceFilters(meta, schema, column, from, to)
+    val zone = spark.sessionState.conf.sessionLocalTimeZone
+    val rowBound = bounds.map { case (c, from, to) =>
+      val t = schema(c).dataType
+      col(s"`$c`") >= lit(from).cast(t) && col(s"`$c`") <= lit(to).cast(t)
+    }.reduce(_ && _)
+    val filters = bounds.flatMap { case (c, from, to) =>
+      def value(v: String): Option[Any] =
+        try Option(Cast(Literal(v), schema(c).dataType, Some(zone)).eval())
+        catch { case scala.util.control.NonFatal(_) => None }
+      if (from == to) value(from).map(EqualTo(c, _)).toSeq
+      else value(from).map(GreaterThanOrEqual(c, _)).toSeq ++
+        value(to).map(LessThanOrEqual(c, _))
     }
-    val rowBound = perCol.map(_._1).reduce(_ && _)
     val sn = currentSnapNode(meta) match {
       case None => return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       case Some(s0) => s0
     }
-    val filters = perCol.flatMap(_._2)
-    val combined: Option[AvroManifests.DataFileEntry => Boolean] =
-      if (filters.isEmpty) None
-      else Some(e => filters.forall(_(e)))
-    // DIR TIER: drop whole dirs off the manifest-list field_summary
-    // bounds BEFORE any per-dir manifest is read — planning cost scales
-    // with surviving dirs on the library face too (dirs without
-    // summaries are kept; every surviving file still passes the exact
-    // per-file tiers and the row bound)
-    val dirFilters = perCol.flatMap(_._3)
-    val live = liveDirsOf(sn)
-    val dirs =
-      if (dirFilters.isEmpty) live
-      else {
-        val sums = manifestListSummaries(meta, sn)
-        live.filter(d => sums.get(d).forall(sm => dirFilters.forall(_(sm))))
-      }
-    scanWithDeletes(ns, table, meta, sn, dirs,
-      fileFilter = combined).filter(rowBound)
-  }
-
-  /** One column's slice machinery: the exact row predicate plus (when
-    * derivable) the manifest-level file filter combining the partition
-    * tier and the stats tier — shared by the single- and compound-bound
-    * [[loadSlice]] faces. */
-  private def columnSliceFilters(meta: ObjectNode, schema: StructType,
-                                 column: String, from: String, to: String)
-      : (Column, Option[AvroManifests.DataFileEntry => Boolean],
-         Option[Map[String, AvroManifests.FieldSummary] => Boolean]) = {
-    val srcType = schema(column).dataType
-    val rowBound = col(s"`$column`") >= lit(from).cast(srcType) &&
-      col(s"`$column`") <= lit(to).cast(srcType)
-    val specId = meta.get("default-spec-id").asInt()
-    // bucket[N] fields prune POINT LOOKUPS only (from == to): the hash
-    // destroys ordering, so a genuine range can never prune by bucket —
-    // and only when the field is a spec-driven directory layout, never a
-    // legacy writeBucketed clustering field (no path tuple to prune on)
-    val clusterOnlyBuckets = !meta.get("bucket-spec").isNull
-    val fieldOpt = meta.get("partition-specs").elements().asScala
-      .find(_.get("spec-id").asInt() == specId)
-      .flatMap(_.get("fields").elements().asScala.find { f =>
-        schema.fields(f.get("source-id").asInt() - 1).name == column &&
-          (!f.get("transform").asText().startsWith("bucket[") ||
-            (!clusterOnlyBuckets && from == to))
-      })
-    val partFilters = fieldOpt.map { f =>
-      val fname = f.get("name").asText()
-      val transform = f.get("transform").asText()
-      val numeric = transform.startsWith("bucket[") ||
-        (transform != "day" && transform != "month" &&
-          transform != "hour" && transform != "year" &&
-          (srcType == org.apache.spark.sql.types.LongType ||
-            srcType == org.apache.spark.sql.types.IntegerType))
-      // evaluate the WRITE-SIDE derivation on the two literals (a local
-      // 1-row job — control plane), so pruning can never disagree with
-      // the directory layout
-      def bound(v: String): String = {
-        val one = spark.range(1)
-          .select(lit(v).cast(srcType).as(column))
-        transformColumn(transform, column, srcType) match {
-          case None    => v
-          case Some(e) => one.select(e.cast("string")).head().getString(0)
-        }
-      }
-      val (lo, hi) = (bound(from), bound(to))
-      val fileF = (e: AvroManifests.DataFileEntry) =>
-        e.partition.find(_._1 == fname).flatMap(_._2) match {
-          case None => true // not derivable from this file: cannot prune
-          case Some(v) =>
-            if (numeric) v.toLong >= lo.toLong && v.toLong <= hi.toLong
-            else v >= lo && v <= hi
-        }
-      // DIR TIER: the same [lo, hi] window against the manifest-list
-      // field_summary range — a dir whose whole tuple range misses the
-      // window is dropped BEFORE its manifest is opened (missing or
-      // undecodable bounds keep it; superset-safe like every tier)
-      val carrier = if (numeric)
-        (if (!transform.startsWith("bucket[") &&
-             srcType == org.apache.spark.sql.types.LongType) "long"
-         else "int")
-      else "string"
-      val (loB, hiB) = (lo.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        hi.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      val dirF = (sm: Map[String, AvroManifests.FieldSummary]) =>
-        sm.get(fname) match {
-          case None => true
-          case Some(fs) =>
-            def dec(b: Option[Array[Byte]]): Option[Any] =
-              b.flatMap(AvroManifests.decodeBound(carrier, _))
-            def n(x: Any): Option[Long] = x match {
-              case i: Int  => Some(i.toLong)
-              case j: Long => Some(j)
-              case _       => None
-            }
-            (dec(fs.lowerBound), dec(fs.upperBound)) match {
-              case (Some(l), Some(u)) if numeric =>
-                (n(l), n(u)) match {
-                  case (Some(ll), Some(uu)) =>
-                    uu >= lo.toLong && ll <= hi.toLong
-                  case _ => true
-                }
-              case (Some(l: Array[Byte]), Some(u: Array[Byte])) =>
-                AvroManifests.compareUnsigned(u, loB) >= 0 &&
-                  AvroManifests.compareUnsigned(l, hiB) <= 0
-              case _ => true
-            }
-        }
-      (fileF, dirF)
-    }
-    // STATS TIER: manifest lower/upper bounds prune on ANY covered column
-    // — the partition tier above only fires when `column` drives the
-    // layout; bounds make file skipping work on unpartitioned tables and
-    // non-partition columns too. A file without bounds for the column
-    // (pre-stats manifest, uncovered type, broken chunk stats) is KEPT —
-    // pruning is an optimization, never a semantics change; the exact
-    // rowBound always re-applies.
-    val statId = schema.fieldNames.indexOf(column) + 1
-    val icType = currentSchemaNode(meta).get("fields").elements().asScala
-      .find(_.get("name").asText() == column)
-      .map(_.get("type").asText()).getOrElse("")
-    // the two literals land in the SAME comparable domain decodeBound
-    // reads back (micros for timestamps, epoch days for dates, UTF-8
-    // bytes for strings) — evaluated through Spark's own Cast expression
-    // so literal parsing can never disagree with the engine's.
-    // optimization r16: evaluated DRIVER-SIDE (Catalyst Cast.eval on a
-    // literal) instead of `spark.range(1).select(...).head()`, which ran a
-    // one-task Spark JOB — plan + codegen + scheduling — per pruning bound
-    // (several per sliced query). The Cast expression, session timezone,
-    // and ANSI eval mode are identical, and the INTERNAL values it yields
-    // (micros for timestamps, epoch days for dates) are exactly what the
-    // old external-row round trip reconstructed.
-    def litPrim(v: String): Option[Any] = {
-      import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-      val zone = Option(spark.sessionState.conf.sessionLocalTimeZone)
-      def castTo(t: DataType): Option[Any] =
-        Option(Cast(Literal(v), t, zone).eval())
-      icType match {
-        case "string" =>
-          Some(v.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        case "timestamp" =>
-          // NTZ: parquet stores WALL-CLOCK micros (isAdjustedToUTC=false)
-          // and the internal NTZ value IS wall-clock micros — no timezone
-          // hop, so a non-UTC session cannot wrong-prune
-          castTo(srcType).map(_.asInstanceOf[Long])
-        case "timestamptz" =>
-          // tz-adjusted micros: an instant, zone-independent (the internal
-          // TimestampType value is exactly unix_micros)
-          castTo(org.apache.spark.sql.types.TimestampType)
-            .map(_.asInstanceOf[Long])
-        case "date" =>
-          // internal DateType value is epoch days — the old datediff
-          castTo(org.apache.spark.sql.types.DateType)
-            .map(d => d.asInstanceOf[Int])
-        case "long" | "int" | "double" | "float" =>
-          castTo(srcType).map { r =>
-            icType match {
-              // Number: smallint/tinyint sources cast to Short/Byte, a
-              // bare Int unbox would ClassCastException on the boxed value
-              case "long"   => r.asInstanceOf[Number].longValue()
-              case "int"    => r.asInstanceOf[Number].intValue()
-              case "double" => r.asInstanceOf[Number].doubleValue()
-              case "float"  => r.asInstanceOf[Number].floatValue()
-            }
-          }
-        case t if t.startsWith("decimal(") =>
-          // the cast to the column's DecimalType fixes the scale, so the
-          // unscaled BigInteger compares directly against the manifest's
-          // Appendix-D decimal bounds (same-scale by construction)
-          castTo(srcType).map(
-            _.asInstanceOf[org.apache.spark.sql.types.Decimal]
-              .toJavaBigDecimal.unscaledValue())
-        case _ => None
-      }
-    }
-    def cmp(a: Any, b: Any): Int = (a, b) match {
-      case (x: Long, y: Long) => java.lang.Long.compare(x, y)
-      case (x: Int, y: Int)   => Integer.compare(x, y)
-      // + 0.0 collapses -0.0 to +0.0 first: the prune side must not use
-      // a total order stricter than the row filter's IEEE comparison, or
-      // a file whose max is -0.0 is wrongly pruned for a 0.0 lower bound
-      case (x: Double, y: Double) =>
-        java.lang.Double.compare(x + 0.0d, y + 0.0d)
-      case (x: Float, y: Float) =>
-        java.lang.Float.compare(x + 0.0f, y + 0.0f)
-      case (x: Array[Byte], y: Array[Byte]) =>
-        AvroManifests.compareUnsigned(x, y)
-      case (x: java.math.BigInteger, y: java.math.BigInteger) =>
-        x.compareTo(y)
-      case _ => 0 // incomparable: never prune
-    }
-    val statFilter: Option[AvroManifests.DataFileEntry => Boolean] =
-      (litPrim(from), litPrim(to)) match {
-        case (Some(loV), Some(hiV)) => Some { e =>
-          val lower = e.lowerBounds.find(_._1 == statId).map(_._2)
-            .flatMap(AvroManifests.decodeBound(icType, _))
-          val upper = e.upperBounds.find(_._1 == statId).map(_._2)
-            .flatMap(AvroManifests.decodeBound(icType, _))
-          upper.forall(u => cmp(u, loV) >= 0) &&
-            lower.forall(l => cmp(l, hiV) <= 0)
-        }
-        case _ => None
-      }
-    val fileFilter = partFilters.map(_._1)
-    val combined = (fileFilter, statFilter) match {
-      case (Some(a), Some(b)) =>
-        Some((e: AvroManifests.DataFileEntry) => a(e) && b(e))
-      case (a, b) => a.orElse(b)
-    }
-    (rowBound, combined, partFilters.map(_._2))
+    val pruning = new ManifestPruning(schema, specFields(meta), filters, zone)
+    // DIR TIER first: whole dirs drop off the manifest-list field_summary
+    // bounds before any per-dir manifest is read
+    val sums = manifestListSummaries(meta, sn)
+    val dirs = liveDirsOf(sn).filter(d => pruning.dirCanMatch(sums.get(d)))
+    scanWithDeletes(ns, table, meta, sn, dirs, fileFilter = Some(e =>
+      pruning.fileCanMatch(SnapshotLakeCatalog.SqlDataFile.of(
+        e.filePath, e)))).filter(rowBound)
   }
 
   /** Delete-file DEBT report — one row per delete-file group of the
@@ -3220,10 +2965,13 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
       : Map[String, Map[String, AvroManifests.FieldSummary]] = {
     val pfNames = manifestPartitionFields(meta).map(_.name)
     if (pfNames.isEmpty) return Map.empty
+    val specId = meta.get("default-spec-id").asInt()
     Option(sn.get("manifest-list")).map(_.asText())
       .filter(p => p.endsWith(".avro") && Files.exists(Path.of(p)))
       .map(p => AvroManifests.readManifestList(Path.of(p))
-        .filter(_.content == 0)
+        // summaries zip to field names by POSITION: only a manifest
+        // written under the default spec carries this spec's fields
+        .filter(e => e.content == 0 && e.partitionSpecId == specId)
         .flatMap(e => e.partitions
           .filter(_.size == pfNames.size)
           .map(ss => Path.of(e.manifestPath).getFileName.toString
@@ -3993,24 +3741,12 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     * library read faces price. */
   private[graft] def sqlScanState(ns: String, table: String,
       at: Option[Long]): SnapshotLakeCatalog.SqlScanState = {
-    import SnapshotLakeCatalog.{SqlDataFile, SqlPartField, SqlScanState}
+    import SnapshotLakeCatalog.{SqlDataFile, SqlScanState}
     val meta = readMeta(ns, table)
     val schema = metaSchema(meta)
-    val specId = meta.get("default-spec-id").asInt()
     val clusterOnlyBuckets = !meta.get("bucket-spec").isNull
-    val specFields: Seq[SqlPartField] =
-      meta.get("partition-specs").elements().asScala
-        .find(_.get("spec-id").asInt() == specId)
-        .map(_.get("fields").elements().asScala
-          .filter(f => !(clusterOnlyBuckets &&
-            f.get("transform").asText().startsWith("bucket[")))
-          .map { f =>
-            val src = schema.fields(f.get("source-id").asInt() - 1)
-            SqlPartField(f.get("name").asText(),
-              f.get("transform").asText(), src.name, src.dataType)
-          }.toSeq)
-        .getOrElse(Seq.empty)
-    val partitionStrings = specFields.map { f =>
+    val partFields = specFields(meta).filter(_.carrier.isDefined)
+    val partitionStrings = partFields.map { f =>
       f.transform match {
         case "identity" => f.srcName
         case "day"      => s"days(${f.srcName})"
@@ -4050,43 +3786,28 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
         "partition-spec evolution (per-generation directory layouts)",
       dirs.exists(d => !Files.exists(manifestPathFor(ns, table, d))) ->
         "pre-manifest legacy data directory",
-      specFields.exists(f => f.transform == "identity" &&
+      partFields.exists(f => f.transform == "identity" &&
         !nativeIdentityTypes.contains(f.srcType)) ->
         "identity partition source type outside long/int/string/date"
     ).collect { case (true, r) => r }
     val composed = if (reasons.isEmpty) None else Some(reasons.mkString("; "))
-    // dir-level pruning bounds off the manifest LIST (one read), keyed
-    // by manifest path; per-dir manifests stay CLOSED until a scan
-    // build proves the dir can match (or no filter prunes it)
-    val pfNames = manifestPartitionFields(meta).map(_.name)
-    val mlSummaries: Map[String, Seq[AvroManifests.FieldSummary]] =
-      if (composed.isDefined || pfNames.isEmpty) Map.empty
-      else snOpt.flatMap(sn0 => Option(sn0.get("manifest-list"))
-          .map(_.asText()))
-        .filter(p => p.endsWith(".avro") && Files.exists(Path.of(p)))
-        .map(p => AvroManifests.readManifestList(Path.of(p))
-          .filter(_.content == 0)
-          .flatMap(e => e.partitions.map(e.manifestPath -> _)).toMap)
-        .getOrElse(Map.empty)
+    // dir-level pruning bounds off the manifest LIST (one read); per-dir
+    // manifests stay CLOSED until a scan build proves the dir can match
+    // (or no filter prunes it)
     val dirEntries =
       if (composed.isDefined) Seq.empty[SnapshotLakeCatalog.SqlDirEntry]
-      else dirs.map { d =>
-        val mp = manifestPathFor(ns, table, d).toString
-        SnapshotLakeCatalog.SqlDirEntry(d,
-          mlSummaries.get(mp).filter(_.size == pfNames.size)
-            .map(ss => pfNames.zip(ss).toMap))
+      else {
+        val sums = snOpt.map(manifestListSummaries(meta, _))
+          .getOrElse(Map.empty)
+        dirs.map(d => SnapshotLakeCatalog.SqlDirEntry(d, sums.get(d)))
       }
     val loadDir: String => Seq[SqlDataFile] = d => {
       val base = dataDir(ns, table).resolve(d)
       AvroManifests.readManifest(manifestPathFor(ns, table, d))
         .filter(_.content == 0)
-        .map(e => SqlDataFile(
-          if (e.filePath.startsWith("/")) e.filePath
-          else base.resolve(e.filePath).toString,
-          e.fileSizeInBytes, e.recordCount, e.partition.toMap,
-          e.lowerBounds, e.upperBounds))
+        .map(e => SqlDataFile.of(base.resolve(e.filePath).toString, e))
     }
-    val bucket = specFields.filter(_.transform.startsWith("bucket[")) match {
+    val bucket = partFields.filter(_.transform.startsWith("bucket[")) match {
       case Seq(f) => Some((f.srcName,
         f.transform.stripPrefix("bucket[").stripSuffix("]").toInt))
       case _ => None
@@ -4094,7 +3815,7 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     SqlScanState(
       StructType(schema.fields.filterNot(f =>
         SnapshotLakeCatalog.isTombstone(f.name))),
-      snapshotId, composed, specFields, bucket,
+      snapshotId, composed, partFields, bucket,
       dirEntries, loadDir,
       partitionStrings, clusterBucketed = clusterOnlyBuckets,
       properties = Option(meta.get("properties"))
@@ -4172,12 +3893,75 @@ object SnapshotLakeCatalog {
   val DroppedPrefix = "__graft_dropped_"
   def isTombstone(name: String): Boolean = name.startsWith(DroppedPrefix)
 
-  /** One partition field of the default spec, as the SQL face plans with
-    * it: the spec field name (= the Hive dir key), the spec transform
-    * (`identity`/`day`/`bucket[N]`/...), and the SOURCE column. */
-  case class SqlPartField(specName: String, transform: String,
-                          srcName: String,
-                          srcType: org.apache.spark.sql.types.DataType)
+  /** One partition field of the default spec
+    * ([[SnapshotLakeCatalog.specFields]]): the spec field name (= the
+    * Hive dir key), the spec transform (`identity`/`day`/`bucket[N]`/...),
+    * the SOURCE column, and the Avro carrier of its manifest tuple values
+    * (None = not path-derivable: legacy writeBucketed clustering). */
+  case class PartField(specName: String, transform: String,
+                       srcName: String,
+                       srcType: org.apache.spark.sql.types.DataType,
+                       carrier: Option[String])
+
+  /** The write-side derivation of a spec transform, or None for identity
+    * (the data column itself partitions) — the batch writer's column
+    * form of [[ManifestPruning.deriver]], which yields the same strings
+    * per value. Time formats are [[ManifestPruning.TimePattern]] (day
+    * `yyyy-MM-dd`, month `yyyy-MM`, hour `yyyy-MM-dd-HH`, year `yyyy` —
+    * lexicographically ordered for years 0000-9999), a timestamptz in
+    * the session zone, a wall-clock NTZ zone-free;
+    * truncate[W] floors integers (`v - pmod(v, W)`, exact for negatives)
+    * and prefixes strings. */
+  private[lake] def transformColumn(transform: String, src: String,
+                              srcType: DataType): Option[Column] = {
+    val c = col(s"`$src`")
+    transform match {
+      case "identity" => None
+      case t if ManifestPruning.TimePattern.contains(t) =>
+        val pattern = ManifestPruning.TimePattern(t)
+        Some(if (srcType == org.apache.spark.sql.types.TimestampNTZType) {
+          // date_format would cast the wall time to an instant in the
+          // session zone, moving one the zone skips (02:30 on a
+          // spring-forward day) into the next hour; in UTC it stays put
+          import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+          import org.apache.spark.sql.catalyst.expressions.{Cast, DateFormatClass, Literal}
+          org.apache.spark.sql.graft.GraftSqlBridge.column(DateFormatClass(
+            Cast(UnresolvedAttribute.quoted(src),
+              org.apache.spark.sql.types.TimestampType, Some("UTC")),
+            Literal(pattern), Some("UTC")))
+        } else org.apache.spark.sql.functions.date_format(c, pattern))
+      case t if t.startsWith("truncate[") =>
+        val w = t.stripPrefix("truncate[").stripSuffix("]").toInt
+        srcType match {
+          case org.apache.spark.sql.types.StringType =>
+            Some(org.apache.spark.sql.functions.substring(c, 1, w))
+          case _ =>
+            Some(c - org.apache.spark.sql.functions.pmod(c, lit(w)))
+        }
+      case t if t.startsWith("bucket[") =>
+        // the spec's hash transform, as the codegen'd native expression
+        // (writeSnapshot registers it on the frame's own session before
+        // applying the layout)
+        val nb = t.stripPrefix("bucket[").stripSuffix("]").toInt
+        Some(org.apache.spark.sql.functions
+          .call_function("iceberg_bucket", c, lit(nb)))
+      case other => throw new IllegalArgumentException(
+        s"unsupported partition transform: $other")
+    }
+  }
+
+  /** Spark catalogString → Iceberg primitive type name. Nested types keep
+    * the Spark string (a documented divergence of the schema writer). */
+  private[lake] def icebergType(catalogString: String): String =
+    catalogString match {
+      case "bigint"                   => "long"
+      case "smallint" | "tinyint"     => "int"
+      case "timestamp"                => "timestamptz"
+      case "timestamp_ntz"            => "timestamp"
+      case other                      => other // int/string/double/float/
+                                               // boolean/date/binary/
+                                               // decimal(p,s) already match
+    }
 
   /** The composed-read reason a MOR-debt snapshot carries — named so the
     * SQL face can recognize DEBT-ONLY composition: append streaming stays
@@ -4195,12 +3979,19 @@ object SnapshotLakeCatalog {
   /** One live data file of a snapshot (manifest-sourced — no directory
     * listing): absolute path, size, row count, the partition tuple
     * (spec field name → path value, None = null/not derivable), and the
-    * manifest's per-column Appendix-D bounds (field id → encoded
-    * lower/upper, the stats-tier file-skipping input). */
+    * manifest's per-column Appendix-D bounds and NaN counts (field id →
+    * encoded lower/upper, count — the stats-tier file-skipping input). */
   case class SqlDataFile(path: String, sizeBytes: Long, rows: Long,
                          partition: Map[String, Option[String]],
                          lower: Seq[(Int, Array[Byte])] = Nil,
-                         upper: Seq[(Int, Array[Byte])] = Nil)
+                         upper: Seq[(Int, Array[Byte])] = Nil,
+                         nan: Seq[(Int, Long)] = Nil)
+
+  object SqlDataFile {
+    def of(path: String, e: AvroManifests.DataFileEntry): SqlDataFile =
+      SqlDataFile(path, e.fileSizeInBytes, e.recordCount,
+        e.partition.toMap, e.lowerBounds, e.upperBounds, e.nanValueCounts)
+  }
 
   /** One live data DIRECTORY of a snapshot, as scan planning first sees
     * it: just the name and the manifest-list `field_summary` bounds
@@ -4224,7 +4015,7 @@ object SnapshotLakeCatalog {
       schema: org.apache.spark.sql.types.StructType,
       snapshotId: Long,
       composed: Option[String],
-      partFields: Seq[SqlPartField],
+      partFields: Seq[PartField],
       bucket: Option[(String, Int)],
       dirEntries: Seq[SqlDirEntry],
       loadDir: String => Seq[SqlDataFile],

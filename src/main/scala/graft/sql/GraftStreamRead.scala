@@ -1,7 +1,7 @@
 package graft.sql
 
-import graft.lake.SnapshotLakeCatalog
-import graft.lake.SnapshotLakeCatalog.{SqlDataFile, SqlPartField}
+import graft.lake.{ManifestPruning, SnapshotLakeCatalog}
+import graft.lake.SnapshotLakeCatalog.{PartField, SqlDataFile}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxFiles, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
@@ -168,11 +168,10 @@ class GraftMicroBatchStream(spark: SparkSession, table: GraftTable,
     val to = GraftStreamOffset.of(end).snapshotId
     if (from == to) return Array.empty
     val st = table.state
+    val pruning = new ManifestPruning(st.schema, st.partFields, pushed.toSeq)
     val files = lake
       .sqlAppendSlice(ns, tableName, from, to, skipDeletes, skipOverwrites)
-      .filter(f => pushed.forall(flt =>
-        GraftPartitionPruning.mayMatch(f, st.partFields, flt) &&
-          GraftPartitionPruning.statsMayMatch(f, st.schema, flt)))
+      .filter(pruning.fileCanMatch)
     GraftParquetRead.pack(spark,
       GraftParquetRead.slices(files, reqPart))
   }
@@ -201,14 +200,16 @@ private[sql] object GraftParquetRead {
   /** Slices with identity-partition values restored from the spec tuple
     * (in the scan's required-partition-column order). */
   def slices(files: Seq[SqlDataFile],
-             reqPart: StructType): Array[GraftFileSlice] =
+             reqPart: StructType): Array[GraftFileSlice] = {
+    val parsers = reqPart.fields.map(pf =>
+      pf.name -> ManifestPruning.identityParser(pf.dataType))
     files.map { f =>
-      val values: Array[Any] = reqPart.fields.map { pf =>
-        GraftPartitionPruning.catalystValue(
-          f.partition.get(pf.name).flatten, pf.dataType)
+      val values: Array[Any] = parsers.map { case (name, parse) =>
+        f.partition.get(name).flatten.map(parse).orNull
       }
       GraftFileSlice(f.path, 0L, f.sizeBytes, f.sizeBytes, values)
     }.toArray
+  }
 
   /** Spark's file-source sizing discipline, applied to the manifest list:
     * files larger than `spark.sql.files.maxPartitionBytes` SPLIT into
@@ -250,7 +251,7 @@ private[sql] object GraftParquetRead {
     * whole-stage-friendly columnar batches when the schema supports them,
     * rows otherwise. */
   def readerFactory(spark: SparkSession, tableSchema: StructType,
-                    partFields: Seq[SqlPartField], reqData: StructType,
+                    partFields: Seq[PartField], reqData: StructType,
                     reqPart: StructType,
                     pushed: Array[Filter]): PartitionReaderFactory = {
     val identityNames = partFields

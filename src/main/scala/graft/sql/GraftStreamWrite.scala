@@ -1,7 +1,7 @@
 package graft.sql
 
-import graft.lake.SnapshotLakeCatalog
-import graft.lake.SnapshotLakeCatalog.SqlPartField
+import graft.lake.{ManifestPruning, SnapshotLakeCatalog}
+import graft.lake.SnapshotLakeCatalog.PartField
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
@@ -12,8 +12,7 @@ import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, Writ
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.{DataType, DateType, IntegerType, LongType, StringType, StructType, TimestampNTZType, TimestampType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.util.SerializableConfiguration
 
 /** One committed task's output: the files it wrote and their row
@@ -63,7 +62,7 @@ case class GraftFilesMessage(files: Seq[(String, Long)])
 class GraftStreamingWrite(lake: SnapshotLakeCatalog, ns: String,
                           table: String, queryId: String,
                           schema: StructType,
-                          partFields: Seq[SqlPartField],
+                          partFields: Seq[PartField],
                           replaceEach: Boolean)
     extends StreamingWrite {
 
@@ -159,86 +158,13 @@ class GraftStreamingDataWriterFactory(dir: String, schema: StructType,
     val project = UnsafeProjection.create(dataFields.map { case (f, i) =>
       BoundReference(i, f.dataType, f.nullable)
     })
-    val zone = java.time.ZoneId.of(zoneId)
 
-    // the batch writer's dir strings, derived per row: date_format
-    // patterns in the session timezone for time transforms, substring /
-    // v - pmod(v, w) for truncate, the spec murmur3 for bucket
-    def timePattern(t: String): String = t match {
-      case "day"   => "yyyy-MM-dd"
-      case "month" => "yyyy-MM"
-      case "hour"  => "yyyy-MM-dd-HH"
-      case "year"  => "yyyy"
-    }
-    def localTime(raw: Any, dt: DataType): java.time.LocalDateTime =
-      dt match {
-        case TimestampType => java.time.Instant
-          .ofEpochSecond(
-            Math.floorDiv(raw.asInstanceOf[Long], 1000000L),
-            Math.floorMod(raw.asInstanceOf[Long], 1000000L) * 1000L)
-          .atZone(zone).toLocalDateTime
-        case TimestampNTZType =>
-          val us = raw.asInstanceOf[Long]
-          java.time.LocalDateTime.ofEpochSecond(
-            Math.floorDiv(us, 1000000L),
-            (Math.floorMod(us, 1000000L) * 1000L).toInt,
-            java.time.ZoneOffset.UTC)
-        case DateType => java.time.LocalDate
-          .ofEpochDay(raw.asInstanceOf[Int].toLong).atStartOfDay()
-        case other => throw new IllegalArgumentException(
-          s"time transform on ${other.catalogString}")
-      }
-    // one derive closure per field, built ONCE — the per-row path is a
-    // closure call, no expression or formatter allocation
-    def deriverOf(f: GraftFanoutField): Any => String = f.transform match {
-      case "identity" => f.srcType match {
-        case DateType => raw => java.time.LocalDate
-          .ofEpochDay(raw.asInstanceOf[Int].toLong).toString
-        case _ =>
-          raw => ExternalCatalogUtils.escapePathName(raw.toString)
-      }
-      case t @ ("day" | "month" | "hour" | "year") =>
-        val fmt =
-          java.time.format.DateTimeFormatter.ofPattern(timePattern(t))
-        raw => localTime(raw, f.srcType).format(fmt)
-      case t if t.startsWith("truncate[") =>
-        val w = t.stripPrefix("truncate[").stripSuffix("]").toInt
-        f.srcType match {
-          case StringType => raw => ExternalCatalogUtils.escapePathName(
-            raw.asInstanceOf[UTF8String].substringSQL(1, w).toString)
-          case LongType => raw => {
-            val v = raw.asInstanceOf[Long]
-            (v - Math.floorMod(v, w.toLong)).toString
-          }
-          case IntegerType => raw => {
-            val v = raw.asInstanceOf[Int]
-            (v - Math.floorMod(v, w)).toString
-          }
-          case other => throw new IllegalArgumentException(
-            s"truncate on ${other.catalogString}")
-        }
-      case t if t.startsWith("bucket[") =>
-        val n = t.stripPrefix("bucket[").stripSuffix("]").toInt
-        import graft.functions.IcebergBucket
-        f.srcType match {
-          case IntegerType | DateType =>
-            raw => IcebergBucket
-              .bucketLong(raw.asInstanceOf[Int].toLong, n).toString
-          case LongType | TimestampType | TimestampNTZType =>
-            raw => IcebergBucket
-              .bucketLong(raw.asInstanceOf[Long], n).toString
-          case StringType => raw => IcebergBucket
-            .bucketBytes(raw.asInstanceOf[UTF8String].getBytes, n)
-            .toString
-          case other => throw new IllegalArgumentException(
-            s"bucket on ${other.catalogString} (int/long/date/" +
-              "timestamp/string sources stream; others via foreachBatch)")
-        }
-      case other => throw new IllegalArgumentException(
-        s"unsupported partition transform: $other")
-    }
+    // the batch writer's dir strings, derived per row by the lake's one
+    // per-value derivation (the pruning evaluator derives literals with
+    // it too); one closure per field, built ONCE
     val derivers: Seq[(GraftFanoutField, Any => String)] =
-      parts.map(f => f -> deriverOf(f))
+      parts.map(f => f -> ManifestPruning.deriver(f.transform, f.srcType,
+        java.time.ZoneId.of(zoneId)))
 
     new DataWriter[InternalRow] {
       private val open =
@@ -249,7 +175,8 @@ class GraftStreamingDataWriterFactory(dir: String, schema: StructType,
         val segs = derivers.map { case (f, derive) =>
           val v =
             if (row.isNullAt(f.srcIdx)) "__HIVE_DEFAULT_PARTITION__"
-            else derive(row.get(f.srcIdx, schema.fields(f.srcIdx).dataType))
+            else ExternalCatalogUtils.escapePathName(
+              derive(row.get(f.srcIdx, schema.fields(f.srcIdx).dataType)))
           s"${ExternalCatalogUtils.escapePathName(f.specName)}=$v"
         }
         val sub = if (segs.isEmpty) "" else segs.mkString("", "/", "/")

@@ -1,8 +1,7 @@
 package graft.sql
 
-import graft.functions.IcebergBucket
-import graft.lake.SnapshotLakeCatalog
-import graft.lake.SnapshotLakeCatalog.{SqlDataFile, SqlPartField, SqlScanState}
+import graft.lake.{ManifestPruning, SnapshotLakeCatalog}
+import graft.lake.SnapshotLakeCatalog.{SqlDataFile, SqlScanState}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -15,11 +14,10 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, Write, W
 import org.apache.spark.sql.connector.write.SupportsTruncate
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.sources.{AlwaysTrue, And => FAnd, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, InsertableRelation, IsNotNull, IsNull, LessThan, LessThanOrEqual, Not => FNot, Or => FOr}
+import org.apache.spark.sql.sources.{Filter, InsertableRelation}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
-import org.apache.spark.unsafe.types.UTF8String
 
 import java.util.{OptionalLong, Set => JSet}
 import scala.jdk.CollectionConverters._
@@ -277,60 +275,46 @@ object GraftFilterColumns {
   import org.apache.spark.sql.sources._
 
   /** Connector Predicate → v1 Filter, for the runtime-filtering path —
-    * only the shapes a DPP subquery emits (IN, =, AND/OR). Literal values
-    * arrive as CATALYST values (UTF8String, epoch-day int, micros long)
-    * and convert to the external forms the v1 Filter contract carries. */
-  def v2ToV1(p: org.apache.spark.sql.connector.expressions.filter.Predicate,
-             schema: StructType): Option[Filter] = {
+    * only the shapes a DPP subquery emits (IN, comparisons, AND/OR).
+    * Literal values stay CATALYST values (UTF8String, epoch-day int,
+    * micros long): [[graft.lake.ManifestPruning]] reads them in the
+    * column's own domain. */
+  def v2ToV1(p: org.apache.spark.sql.connector.expressions.filter.Predicate)
+      : Option[Filter] = {
     import org.apache.spark.sql.connector.expressions.{Expression => VExpr, Literal => VLit, NamedReference}
     def ref(e: VExpr): Option[String] = e match {
       case r: NamedReference => Some(r.fieldNames().mkString("."))
       case _ => None
     }
-    def ext(e: VExpr): Option[Any] = e match {
-      case l: VLit[_] => Some(l.dataType() match {
-        case StringType => String.valueOf(l.value())
-        case DateType => java.time.LocalDate.ofEpochDay(
-          l.value().asInstanceOf[Number].longValue())
-        case TimestampType | TimestampNTZType =>
-          val us = l.value().asInstanceOf[Number].longValue()
-          java.time.Instant.ofEpochSecond(
-            Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L)
-        case _ => l.value()
-      })
+    def value(e: VExpr): Option[Any] = e match {
+      case l: VLit[_] => Some(l.value())
       case _ => None
     }
     val kids = p.children()
+    def cmp(mk: (String, Any) => Filter): Option[Filter] =
+      if (kids.length != 2) None
+      else for (a <- ref(kids(0)); v <- value(kids(1))) yield mk(a, v)
     p.name() match {
       case "IN" if kids.length >= 2 =>
         for (a <- ref(kids(0));
-             vs <- Option(kids.drop(1).map(ext))
+             vs <- Option(kids.drop(1).map(value))
                .filter(_.forall(_.isDefined)))
           yield In(a, vs.map(_.get))
-      case "=" if kids.length == 2 =>
-        for (a <- ref(kids(0)); v <- ext(kids(1))) yield EqualTo(a, v)
-      case ">" if kids.length == 2 =>
-        for (a <- ref(kids(0)); v <- ext(kids(1)))
-          yield org.apache.spark.sql.sources.GreaterThan(a, v)
-      case ">=" if kids.length == 2 =>
-        for (a <- ref(kids(0)); v <- ext(kids(1)))
-          yield org.apache.spark.sql.sources.GreaterThanOrEqual(a, v)
-      case "<" if kids.length == 2 =>
-        for (a <- ref(kids(0)); v <- ext(kids(1)))
-          yield org.apache.spark.sql.sources.LessThan(a, v)
-      case "<=" if kids.length == 2 =>
-        for (a <- ref(kids(0)); v <- ext(kids(1)))
-          yield org.apache.spark.sql.sources.LessThanOrEqual(a, v)
+      case "="  => cmp(EqualTo(_, _))
+      case ">"  => cmp(GreaterThan(_, _))
+      case ">=" => cmp(GreaterThanOrEqual(_, _))
+      case "<"  => cmp(LessThan(_, _))
+      case "<=" => cmp(LessThanOrEqual(_, _))
       case "AND" =>
         val sub = p.asInstanceOf[
           org.apache.spark.sql.connector.expressions.filter.And]
-        for (l <- v2ToV1(sub.left(), schema);
-             r <- v2ToV1(sub.right(), schema)) yield FAnd(l, r)
+        for (l <- v2ToV1(sub.left()); r <- v2ToV1(sub.right()))
+          yield And(l, r)
       case "OR" =>
         val sub = p.asInstanceOf[
           org.apache.spark.sql.connector.expressions.filter.Or]
-        for (l <- v2ToV1(sub.left(), schema);
-             r <- v2ToV1(sub.right(), schema)) yield FOr(l, r)
+        for (l <- v2ToV1(sub.left()); r <- v2ToV1(sub.right()))
+          yield Or(l, r)
       case _ => None
     }
   }
@@ -361,7 +345,7 @@ object GraftFilterColumns {
 
 /** Column pruning + v1 filter pushdown over the manifest file list. The
   * pushed filters prune at TWO levels before any byte is read: whole
-  * files via partition-tuple evaluation here ([[GraftPartitionPruning]]),
+  * dirs and files via the lake's [[ManifestPruning]] evaluator here,
   * then row groups/pages via the parquet reader they are handed to. All
   * filters stay residual (Spark re-evaluates exactly). */
 class GraftScanBuilder(spark: SparkSession, table: GraftTable,
@@ -396,18 +380,13 @@ class GraftScanBuilder(spark: SparkSession, table: GraftTable,
       identityNames.contains(f.name)))
     val reqPart = StructType(required.fields.filter(f =>
       identityNames.contains(f.name)))
-    // three pruning tiers, cheapest first: (1) DIR tier — manifest-list
-    // field_summary bounds drop whole dirs WITHOUT opening their
-    // manifests (planning cost scales with surviving dirs, the 100 TB
-    // discipline); (2) partition-tuple tier per file; (3) column-bounds
-    // stats tier per file
-    val files = st.dirEntries
-      .filter(d => pushed.forall(flt =>
-        GraftPartitionPruning.dirMayMatch(d.summaries, st.partFields, flt)))
-      .flatMap(st.filesOf)
-      .filter(f => pushed.forall(flt =>
-        GraftPartitionPruning.mayMatch(f, st.partFields, flt) &&
-          GraftPartitionPruning.statsMayMatch(f, st.schema, flt)))
+    // DIR tier first — manifest-list field_summary bounds drop whole dirs
+    // WITHOUT opening their manifests (planning cost scales with
+    // surviving dirs, the 100 TB discipline) — then each file's
+    // partition tuple and column bounds
+    val pruning = new ManifestPruning(st.schema, st.partFields, pushed.toSeq)
+    val files = st.dirEntries.filter(d => pruning.dirCanMatch(d.summaries))
+      .flatMap(st.filesOf).filter(pruning.fileCanMatch)
     new GraftScan(spark, table, reqData, reqPart, pushed, files, options,
       batchUnreadable)
   }
@@ -462,9 +441,9 @@ class GraftScan(spark: SparkSession, table: GraftTable,
   override def filter(predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
     // conversion is BEST-EFFORT superset pruning: an unconvertible
     // predicate keeps every file (the engine re-applies exactly)
-    val v1 = predicates.flatMap(GraftFilterColumns.v2ToV1(_, st.schema))
-    liveFiles = liveFiles.filter(f => v1.forall(flt =>
-      GraftPartitionPruning.mayMatch(f, st.partFields, flt)))
+    val pruning = new ManifestPruning(st.schema, st.partFields,
+      predicates.flatMap(GraftFilterColumns.v2ToV1).toSeq)
+    liveFiles = liveFiles.filter(pruning.fileCanMatch)
   }
 
   override def readSchema(): StructType =
@@ -667,386 +646,6 @@ class GraftWriteBuilder(lake: SnapshotLakeCatalog, ns: String,
           "b) } instead")
       new GraftStreamingWrite(lake, ns, table, info.queryId(),
         info.schema(), st.partFields, truncateFirst)
-    }
-  }
-}
-
-/** Partition-tuple filter evaluation: a file is kept unless the tuple
-  * PROVES no row can match. Identity fields compare typed values
-  * (long/int/string/date), bucket fields compare the literal's spec hash,
-  * time transforms (day/month/hour/year) compare the formatted dir string
-  * lexicographically (the formats are chosen to order — the same property
-  * [[graft.lake.SnapshotLakeCatalog.loadSlice]] exploits). Anything
-  * unprovable keeps the file; the engine re-applies every filter exactly. */
-object GraftPartitionPruning {
-  /** Dir-string value → catalyst value for `dt` (the identity partition
-    * column restore). */
-  def catalystValue(raw: Option[String], dt: DataType): Any = raw match {
-    case None => null
-    case Some(s) => dt match {
-      case StringType  => UTF8String.fromString(s)
-      case LongType    => s.toLong
-      case IntegerType => s.toInt
-      case DateType    => java.time.LocalDate.parse(s).toEpochDay.toInt
-      case other => throw new IllegalStateException(
-        s"non-native identity partition type ${other.catalogString} " +
-          "(sqlScanState should have composed)")
-    }
-  }
-
-  /** STATS TIER (the loadSlice bounds discipline, through SQL): prune a
-    * file when its manifest column bounds PROVE the pushed filter cannot
-    * match — narrowly, for the types whose v1 literal domain is
-    * unambiguous (long/int/string/date; timestamps ride the partition
-    * tier and parquet row-group stats instead). Truncated string bounds
-    * stay VALID bounds (lower = prefix, upper = incremented prefix —
-    * spec-pinned), so comparing against them never wrong-prunes. A file
-    * without bounds for the column is kept; the engine re-applies every
-    * filter exactly. */
-  def statsMayMatch(file: SqlDataFile, schema: StructType,
-                    filter: Filter): Boolean = filter match {
-    case FAnd(l, r) =>
-      statsMayMatch(file, schema, l) && statsMayMatch(file, schema, r)
-    case FOr(l, r) =>
-      statsMayMatch(file, schema, l) || statsMayMatch(file, schema, r)
-    case FNot(_) => true
-    case EqualTo(a, v)            => boundStat(file, schema, a, v, 0)
-    case GreaterThan(a, v)        => boundStat(file, schema, a, v, 1)
-    case GreaterThanOrEqual(a, v) => boundStat(file, schema, a, v, 1)
-    case LessThan(a, v)           => boundStat(file, schema, a, v, -1)
-    case LessThanOrEqual(a, v)    => boundStat(file, schema, a, v, -1)
-    case In(a, vs) => vs.exists(v => boundStat(file, schema, a, v, 0))
-    case _ => true
-  }
-
-  /** op: 0 = equality (v must sit inside [lower, upper]), 1 = lower
-    * bound (file survives iff upper >= v), -1 = upper bound (iff
-    * lower <= v). Normalized domains: Long for long/int/date, UTF-8
-    * bytes for string. Anything unprovable keeps the file. */
-  private def boundStat(file: SqlDataFile, schema: StructType,
-                        attr: String, v: Any, op: Int): Boolean = {
-    if (v == null) return true
-    val idx = schema.fieldNames.indexOf(attr)
-    if (idx < 0) return true
-    val ic = schema.fields(idx).dataType match {
-      case LongType         => "long"
-      case IntegerType      => "int"
-      case StringType       => "string"
-      case DateType         => "date"
-      case TimestampType    => "timestamp"
-      case TimestampNTZType => "timestamp"
-      case _                => return true
-    }
-    val statId = idx + 1
-    def decoded(side: Seq[(Int, Array[Byte])]): Option[Any] =
-      side.find(_._1 == statId).map(_._2)
-        .flatMap(graft.lake.AvroManifests.decodeBound(ic, _))
-    def micros(i: java.time.Instant): Long =
-      i.getEpochSecond * 1000000L + i.getNano / 1000L
-    val lit: Any = (ic, v) match {
-      case ("long" | "int", n: Number) => n.longValue()
-      case ("date", d: java.sql.Date) => d.toLocalDate.toEpochDay
-      case ("date", d: java.time.LocalDate) => d.toEpochDay
-      case ("string", s: String) =>
-        s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      case ("string", u: UTF8String) => u.getBytes
-      // timestamp bounds (VERDICT r14 #5): the manifest carries epoch
-      // micros; every literal form Spark pushes normalizes to the same
-      // domain (UTC session mandated, so NTZ LocalDateTime is unambiguous)
-      case ("timestamp", t: java.sql.Timestamp) => micros(t.toInstant)
-      case ("timestamp", i: java.time.Instant) => micros(i)
-      case ("timestamp", l: java.time.LocalDateTime) =>
-        micros(l.toInstant(java.time.ZoneOffset.UTC))
-      case ("timestamp", m: java.lang.Long) => m.longValue()
-      case _ => return true
-    }
-    def cmp(bound: Any): Option[Int] = (bound, lit) match {
-      case (b: Long, l: Long) => Some(java.lang.Long.compare(b, l))
-      case (b: Int, l: Long)  => Some(java.lang.Long.compare(b.toLong, l))
-      case (b: Array[Byte], l: Array[Byte]) =>
-        Some(graft.lake.AvroManifests.compareUnsigned(b, l))
-      case _ => None
-    }
-    val lowerOk = decoded(file.lower).flatMap(cmp) // lower vs lit
-    val upperOk = decoded(file.upper).flatMap(cmp) // upper vs lit
-    op match {
-      case 0  => lowerOk.forall(_ <= 0) && upperOk.forall(_ >= 0)
-      case 1  => upperOk.forall(_ >= 0)
-      case -1 => lowerOk.forall(_ <= 0)
-      case _  => true
-    }
-  }
-
-  def mayMatch(file: SqlDataFile, fields: Seq[SqlPartField],
-               filter: Filter): Boolean = filter match {
-    case FAnd(l, r) => mayMatch(file, fields, l) && mayMatch(file, fields, r)
-    case FOr(l, r)  => mayMatch(file, fields, l) || mayMatch(file, fields, r)
-    case FNot(_)    => true
-    case AlwaysTrue() => true
-    case EqualTo(a, v)            => boundCheck(file, fields, a, v, 0)
-    case GreaterThan(a, v)        => boundCheck(file, fields, a, v, 1)
-    case GreaterThanOrEqual(a, v) => boundCheck(file, fields, a, v, 1)
-    case LessThan(a, v)           => boundCheck(file, fields, a, v, -1)
-    case LessThanOrEqual(a, v)    => boundCheck(file, fields, a, v, -1)
-    case In(a, vs) =>
-      vs.exists(v => boundCheck(file, fields, a, v, 0))
-    case IsNull(a) => fieldOf(fields, a, "identity") match {
-      case Some(f) => file.partition.get(f.specName).forall(_.isEmpty)
-      case None    => true
-    }
-    case IsNotNull(a) => fieldOf(fields, a, "identity") match {
-      case Some(f) => file.partition.get(f.specName).forall(_.isDefined)
-      case None    => true
-    }
-    case _ => true
-  }
-
-  private def fieldOf(fields: Seq[SqlPartField], attr: String,
-                      transform: String): Option[SqlPartField] =
-    fields.find(f => f.srcName == attr && (transform match {
-      case "time" => Set("day", "month", "hour", "year")(f.transform)
-      case "bucket" => f.transform.startsWith("bucket[")
-      case t => f.transform == t
-    }))
-
-  /** `op`: 0 = equality, 1 = lower bound (>=, conservative for >), -1 =
-    * upper bound. Returns false ONLY on a provable miss. */
-  private def boundCheck(file: SqlDataFile, fields: Seq[SqlPartField],
-                         attr: String, v: Any, op: Int): Boolean = {
-    if (v == null) return true
-    // identity: typed compare
-    fieldOf(fields, attr, "identity").foreach { f =>
-      file.partition.get(f.specName).flatten.foreach { dir =>
-        typedCompare(dir, v, f.srcType).foreach { c =>
-          if (op == 0 && c != 0) return false
-          if (op == 1 && c < 0) return false
-          if (op == -1 && c > 0) return false
-        }
-      }
-    }
-    // bucket: equality only — the hash is order-destroying by design
-    if (op == 0) fieldOf(fields, attr, "bucket").foreach { f =>
-      file.partition.get(f.specName).flatten
-        .flatMap(_.toIntOption).foreach { fileBucket =>
-        val n = f.transform.stripPrefix("bucket[").stripSuffix("]").toInt
-        bucketOf(v, f.srcType, n).foreach { b =>
-          if (b != fileBucket) return false
-        }
-      }
-    }
-    // time transforms: lexicographic on the formatted dir string
-    fieldOf(fields, attr, "time").foreach { f =>
-      file.partition.get(f.specName).flatten.foreach { dir =>
-        formatTime(v, f.transform).foreach { lit =>
-          val c = dir.compareTo(lit)
-          if (op == 0 && c != 0) return false
-          if (op == 1 && c < 0) return false
-          if (op == -1 && c > 0) return false
-        }
-      }
-    }
-    true
-  }
-
-  private def typedCompare(dir: String, v: Any, dt: DataType): Option[Int] =
-    try dt match {
-      case LongType | IntegerType =>
-        val lit = v match {
-          case n: Number => n.longValue()
-          case _         => return None
-        }
-        Some(java.lang.Long.compare(dir.toLong, lit))
-      case StringType =>
-        // Spark orders strings by UTF-8 BYTES (UTF8String.binaryCompare),
-        // not UTF-16 code units — the orders diverge for supplementary
-        // code points vs U+E000–U+FFFF, and a code-unit compare here
-        // would WRONGLY prune a matching file (not merely keep extra).
-        val litBytes: Array[Byte] = v match {
-          case s: String => s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          case u: UTF8String => u.getBytes
-          case _ => return None
-        }
-        Some(graft.lake.AvroManifests.compareUnsigned(
-          dir.getBytes(java.nio.charset.StandardCharsets.UTF_8), litBytes))
-      case DateType =>
-        val lit = v match {
-          case d: java.sql.Date => d.toLocalDate.toEpochDay
-          case d: java.time.LocalDate => d.toEpochDay
-          case _ => return None
-        }
-        Some(java.lang.Long.compare(
-          java.time.LocalDate.parse(dir).toEpochDay, lit))
-      case _ => None
-    } catch { case _: IllegalArgumentException => None }
-
-  private def bucketOf(v: Any, dt: DataType, n: Int): Option[Int] =
-    try dt match {
-      case LongType | IntegerType => v match {
-        case num: Number => Some(IcebergBucket.bucketLong(num.longValue(), n))
-        case _ => None
-      }
-      case StringType => v match {
-        case s: String => Some(IcebergBucket.bucketBytes(
-          s.getBytes(java.nio.charset.StandardCharsets.UTF_8), n))
-        case u: UTF8String => Some(IcebergBucket.bucketBytes(u.getBytes, n))
-        case _ => None
-      }
-      case DateType => v match {
-        case d: java.sql.Date =>
-          Some(IcebergBucket.bucketLong(d.toLocalDate.toEpochDay, n))
-        case d: java.time.LocalDate =>
-          Some(IcebergBucket.bucketLong(d.toEpochDay, n))
-        case _ => None
-      }
-      case TimestampType | TimestampNTZType => toInstant(v)
-        .map(i => IcebergBucket.bucketLong(
-          java.util.concurrent.TimeUnit.SECONDS.toMicros(i.getEpochSecond) +
-            i.getNano / 1000L, n))
-      case _ => None
-    } catch { case _: IllegalArgumentException => None }
-
-  private def toInstant(v: Any): Option[java.time.Instant] = v match {
-    case t: java.sql.Timestamp => Some(t.toInstant)
-    case i: java.time.Instant  => Some(i)
-    case l: java.time.LocalDateTime =>
-      Some(l.toInstant(java.time.ZoneOffset.UTC))
-    // the RUNTIME-filter path hands over CATALYST values: a timestamp
-    // literal arrives as epoch MICROS (only ever reached for filters on
-    // a time-transform SOURCE column, so the domain is unambiguous)
-    case m: java.lang.Long => Some(java.time.Instant.ofEpochSecond(
-      Math.floorDiv(m, 1000000L), Math.floorMod(m, 1000000L) * 1000L))
-    case _ => None
-  }
-
-  /** DIR TIER (VERDICT r14 #2): prune a whole data directory off its
-    * manifest-list `field_summary` bounds — evaluated BEFORE the dir's
-    * manifest is ever opened, so planning cost scales with surviving
-    * dirs. Same conservative contract as the file tiers: a dir is
-    * dropped only on a PROVABLE miss; missing/unparseable summaries keep
-    * it. Identity fields compare in the manifest carrier domain
-    * (long/int numeric, everything else UTF-8 bytes of the path value —
-    * ISO date strings order correctly by construction), time transforms
-    * compare the formatted literal, bucket fields range-check the
-    * literal's spec hash on equality. */
-  def dirMayMatch(
-      summaries: Option[Map[String, graft.lake.AvroManifests.FieldSummary]],
-      fields: Seq[SqlPartField], filter: Filter): Boolean = summaries match {
-    case None => true
-    case Some(sm) => filter match {
-      case FAnd(l, r) =>
-        dirMayMatch(summaries, fields, l) && dirMayMatch(summaries, fields, r)
-      case FOr(l, r) =>
-        dirMayMatch(summaries, fields, l) || dirMayMatch(summaries, fields, r)
-      case FNot(_)      => true
-      case AlwaysTrue() => true
-      case EqualTo(a, v)            => dirBound(sm, fields, a, v, 0)
-      case GreaterThan(a, v)        => dirBound(sm, fields, a, v, 1)
-      case GreaterThanOrEqual(a, v) => dirBound(sm, fields, a, v, 1)
-      case LessThan(a, v)           => dirBound(sm, fields, a, v, -1)
-      case LessThanOrEqual(a, v)    => dirBound(sm, fields, a, v, -1)
-      case In(a, vs) => vs.exists(v => dirBound(sm, fields, a, v, 0))
-      case IsNull(a) => fieldOf(fields, a, "identity") match {
-        case Some(f) => sm.get(f.specName).forall(_.containsNull)
-        case None    => true
-      }
-      case _ => true
-    }
-  }
-
-  /** The manifest partition carrier type of a spec field — MUST mirror
-    * the write side ([[graft.lake.SnapshotLakeCatalog]]'s
-    * manifestPartitionFields): identity long/int keep their numerics,
-    * every other identity and all path-valued transforms ride strings,
-    * bucket tuples are ints. */
-  private def dirCarrier(f: SqlPartField): String = f.transform match {
-    case "identity" => f.srcType match {
-      case LongType    => "long"
-      case IntegerType => "int"
-      case _           => "string"
-    }
-    case t if t.startsWith("bucket[") => "int"
-    case _ => "string"
-  }
-
-  private def dirBound(
-      sm: Map[String, graft.lake.AvroManifests.FieldSummary],
-      fields: Seq[SqlPartField], attr: String, v: Any, op: Int): Boolean = {
-    if (v == null) return true
-    def rangeKeeps(fs: graft.lake.AvroManifests.FieldSummary,
-                   ic: String, lit: Any): Boolean = {
-      def cmp(bound: Any): Option[Int] = (bound, lit) match {
-        case (b: Long, l: Long) => Some(java.lang.Long.compare(b, l))
-        case (b: Int, l: Long)  => Some(java.lang.Long.compare(b.toLong, l))
-        case (b: Array[Byte], l: Array[Byte]) =>
-          Some(graft.lake.AvroManifests.compareUnsigned(b, l))
-        case _ => None
-      }
-      def side(b: Option[Array[Byte]]): Option[Int] = b
-        .flatMap(graft.lake.AvroManifests.decodeBound(ic, _)).flatMap(cmp)
-      val lower = side(fs.lowerBound) // lower vs lit
-      val upper = side(fs.upperBound) // upper vs lit
-      op match {
-        case 0  => lower.forall(_ <= 0) && upper.forall(_ >= 0)
-        case 1  => upper.forall(_ >= 0)
-        case -1 => lower.forall(_ <= 0)
-        case _  => true
-      }
-    }
-    // identity: typed range compare in the carrier domain
-    fieldOf(fields, attr, "identity").foreach { f =>
-      sm.get(f.specName).foreach { fs =>
-        val ic = dirCarrier(f)
-        val lit: Option[Any] = (ic, v) match {
-          case ("long" | "int", n: Number) => Some(n.longValue())
-          case ("string", str: String) => Some(str.getBytes(
-            java.nio.charset.StandardCharsets.UTF_8))
-          case ("string", u: UTF8String) => Some(u.getBytes)
-          case ("string", d: java.sql.Date) => Some(d.toLocalDate.toString
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          case ("string", d: java.time.LocalDate) => Some(d.toString
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          case _ => None
-        }
-        lit.foreach(l => if (!rangeKeeps(fs, ic, l)) return false)
-      }
-    }
-    // bucket: equality only — range-check the literal's spec hash
-    if (op == 0) fieldOf(fields, attr, "bucket").foreach { f =>
-      sm.get(f.specName).foreach { fs =>
-        val n = f.transform.stripPrefix("bucket[").stripSuffix("]").toInt
-        bucketOf(v, f.srcType, n).foreach { b =>
-          if (!rangeKeeps(fs, "int", b.toLong)) return false
-        }
-      }
-    }
-    // time transforms: formatted-literal bytes vs string bounds
-    fieldOf(fields, attr, "time").foreach { f =>
-      sm.get(f.specName).foreach { fs =>
-        formatTime(v, f.transform).foreach { lit =>
-          if (!rangeKeeps(fs, "string", lit.getBytes(
-              java.nio.charset.StandardCharsets.UTF_8))) return false
-        }
-      }
-    }
-    true
-  }
-
-  /** Format a filter literal the way the write layout formatted the dir
-    * value (UTC — the engine mandates a UTC session). */
-  private def formatTime(v: Any, transform: String): Option[String] = {
-    val pattern = transform match {
-      case "day"   => "yyyy-MM-dd"
-      case "month" => "yyyy-MM"
-      case "hour"  => "yyyy-MM-dd-HH"
-      case "year"  => "yyyy"
-      case _       => return None
-    }
-    val fmt = java.time.format.DateTimeFormatter.ofPattern(pattern)
-      .withZone(java.time.ZoneOffset.UTC)
-    v match {
-      case d: java.sql.Date => Some(fmt.format(d.toLocalDate))
-      case d: java.time.LocalDate => Some(fmt.format(d))
-      case other => toInstant(other).map(fmt.format)
     }
   }
 }

@@ -745,4 +745,70 @@ class PartitionTransformSpec extends AnyFunSuite {
     assert(noSpec.collect().map(_.getLong(1)).sorted.toSeq == Seq(2L, 3L))
     cat.dropNamespace(ns)
   }
+
+  test("the batch writer's transform columns and the per-value " +
+    "derivation (streaming fanout, pruning literals) yield the same path " +
+    "value: DST edges, years before 1000 and BC, negative truncate " +
+    "inputs, non-BMP strings, in several session zones") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.expr
+    def micros(iso: String): Long = {
+      val i = java.time.Instant.parse(iso)
+      i.getEpochSecond * 1000000L + i.getNano / 1000L
+    }
+    def epochDay(iso: String): Int =
+      java.time.LocalDate.parse(iso).toEpochDay.toInt
+    val tsz = Seq("2024-03-10T09:59:59Z", "2024-03-10T10:00:00Z",
+      "2024-11-03T08:30:00Z", "2024-11-03T09:30:00Z",
+      "1969-12-31T23:59:59.999999Z", "0999-06-01T12:00:00Z",
+      "0001-01-01T00:00:00Z", "-0044-03-15T12:00:00Z",
+      "+10000-01-01T00:00:00Z").map(micros).toDF("m")
+      .select(expr("timestamp_micros(m)").as("v"))
+    // wall times: the 02:30 that Los Angeles skips and the 01:30 it repeats
+    val ntz = Seq("2024-03-10 02:30:00", "2024-11-03 01:30:00",
+      "1969-12-31 23:59:59.999999", "0999-06-01 12:00:00",
+      "0001-01-01 00:00:00").toDF("s")
+      .select(col("s").cast("timestamp_ntz").as("v"))
+    val dates = Seq("2024-03-10", "1969-12-31", "0999-06-01", "0001-01-01",
+      "-0044-03-15", "+10000-01-01").map(epochDay).toDF("d")
+      .select(expr("date_from_unix_date(d)").as("v"))
+    val longs = Seq(-15L, -11L, -10L, -9L, -1L, 0L, 9L, 10L, 12345L)
+      .toDF("v")
+    val ints = longs.select(col("v").cast("int").as("v"))
+    val strs = Seq("", "a", "ab", "h\u00e9llo", "\uD83D\uDE00\uD83D\uDE00x",
+      "a\uD83D\uDE00").toDF("v")
+    val time = Seq("day", "month", "hour", "year")
+    val cases: Seq[(DataFrame, Seq[String])] = Seq(
+      tsz -> (time :+ "bucket[16]"), ntz -> (time :+ "bucket[16]"),
+      dates -> Seq("day", "month", "year", "bucket[16]"),
+      longs -> Seq("truncate[10]", "bucket[16]"),
+      ints -> Seq("truncate[10]", "bucket[16]"),
+      strs -> Seq("truncate[2]", "bucket[16]"))
+    graft.functions.IcebergBucket.ensureRegistered(spark)
+    val tz0 = spark.conf.get("spark.sql.session.timeZone")
+    val diffs = Seq.newBuilder[String]
+    try Seq("UTC", "America/Los_Angeles", "Asia/Kathmandu").foreach { zone =>
+      spark.conf.set("spark.sql.session.timeZone", zone)
+      cases.foreach { case (df, transforms) =>
+        val dt = df.schema("v").dataType
+        transforms.foreach { t =>
+          val label = s"$zone ${dt.simpleString} $t"
+          val derive = ManifestPruning.deriver(t, dt,
+            java.time.ZoneId.of(zone))
+          val got = df.select(col("v"), SnapshotLakeCatalog
+            .transformColumn(t, "v", dt).get.cast("string"))
+            .queryExecution.toRdd.map(_.copy()).collect()
+          assert(got.length == df.count() &&
+            got.forall(r => !r.isNullAt(0) && !r.isNullAt(1)),
+            s"$label: every value must be non-null and derived")
+          got.foreach { r =>
+            val (v, path) = (r.get(0, dt), r.getUTF8String(1).toString)
+            val d = derive(v)
+            if (d != path) diffs += s"$label: value $v writer $path derived $d"
+          }
+        }
+      }
+    } finally spark.conf.set("spark.sql.session.timeZone", tz0)
+    assert(diffs.result().isEmpty, diffs.result().mkString("\n"))
+  }
 }
