@@ -20,11 +20,13 @@ class BatchLoaderSpec extends AnyFunSuite {
   private def recordLine(i: Int) =
     s"""{"type":"RECORD","stream":"ev","record":{"id":$i,"v":${i * 1.5}}}"""
 
+  // appends run on the loader's pool threads when a load has several
+  // target tables
   private final class CountingCatalog extends SessionLakeCatalog(spark) {
-    var appends = 0
+    val appends = new java.util.concurrent.atomic.AtomicInteger
     override def append(ns: String, table: String, df: DataFrame,
                         options: Map[String, String]): Unit = {
-      appends += 1; super.append(ns, table, df, options)
+      appends.incrementAndGet(); super.append(ns, table, df, options)
     }
   }
 
@@ -38,7 +40,7 @@ class BatchLoaderSpec extends AnyFunSuite {
     val lines = Seq(schemaLine) ++ (1 to 25).map(recordLine) ++
       Seq("""{"type":"STATE","value":{"bookmark":25}}""")
     val report = loader.load(spark.createDataset(lines))
-    assert(cat.appends == 3) // 10 + 10 + 5, the sinks.py:18 drain contract
+    assert(cat.appends.get == 3) // 10 + 10 + 5, the sinks.py:18 drain contract
     assert(report.rowsPerStream == Map("ev" -> 25L))
     assert(report.statesToEcho == Seq("""{"bookmark":25}"""))
     val back = cat.load(ns, "ev")
@@ -54,7 +56,7 @@ class BatchLoaderSpec extends AnyFunSuite {
     val loader = new BatchLoader(spark, cat, ns, batchSize = 10)
     val lines = Seq(schemaLine) ++ (1 to 25).map(recordLine)
     val report = loader.load(spark.createDataset(lines))
-    assert(cat.appends == 1) // ONE catalog commit, files bounded by maxRecordsPerFile
+    assert(cat.appends.get == 1) // ONE catalog commit, files bounded by maxRecordsPerFile
     assert(report.rowsPerStream("ev") == 25L)
     assert(cat.load(ns, "ev").count() == 25)
     cat.dropNamespace(ns)
@@ -249,6 +251,35 @@ class BatchLoaderSpec extends AnyFunSuite {
     assert(Set("_sdc_extracted_at", "_sdc_received_at", "_sdc_batched_at",
       "_sdc_deleted_at", "_sdc_sequence", "_sdc_table_version")
       .subsetOf(cols))
+    cat.dropNamespace(ns)
+  }
+
+  test("_sdc_*_at carry one receipt instant per load, and a warm load " +
+    "compiles no new classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val ns = freshNs()
+    val cat = DirectoryLakeCatalog.temp(spark)
+    val loader = new BatchLoader(spark, cat, ns, addRecordMetadata = true)
+    def feed(from: Int) = spark.createDataset(
+      Seq(schemaLine) ++ (from until from + 5).map(recordLine))
+    loader.load(feed(1))
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val before = java.time.Instant.now()
+      .truncatedTo(java.time.temporal.ChronoUnit.MICROS)
+    loader.load(feed(6))
+    val after = java.time.Instant.now()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0 == 0,
+      "a same-shaped second load must reuse the first load's classes")
+    val stamps = cat.load(ns, "ev").filter($"id" >= 6)
+      .select("_sdc_extracted_at", "_sdc_received_at", "_sdc_batched_at")
+      .collect()
+    assert(stamps.length == 5)
+    val distinct = stamps.flatMap(r => (0 until 3).map(r.getTimestamp)).toSet
+    assert(distinct.size == 1, distinct)
+    val at = distinct.head
+    assert(at != null)
+    assert(!at.toInstant.isBefore(before) && !at.toInstant.isAfter(after),
+      s"$at outside [$before, $after]")
     cat.dropNamespace(ns)
   }
 
