@@ -217,7 +217,8 @@ final class BatchLoader(
         // divergence.
         val lowerBound = if (i == 0) Long.MinValue else seg.fromSeq
         val inline = recordsOf(scan(), stream)
-          .filter(col(SeqCol) > lowerBound && col(SeqCol) < seg.untilSeq)
+          .filter(col(SeqCol) > byRef(lowerBound, deterministic = true) &&
+            col(SeqCol) < byRef(seg.untilSeq, deterministic = true))
         val segRecs = batchRefs.getOrElse(stream, Nil)
           .filter(b => b.seq > lowerBound && b.seq < seg.untilSeq)
           .map(batchLines)
@@ -521,7 +522,8 @@ final class BatchLoader(
     // rejections (the corrupt column usually fires too; the OR is cheap)
     val isRejected = col("r").isNull || col("r.`record`").isNull ||
       col(s"r.`$corruptCol`").isNotNull ||
-      nonNullViolation || timeViolation || col(SeqCol) < lit(rejectBefore)
+      nonNullViolation || timeViolation ||
+      col(SeqCol) < byRef(rejectBefore, deterministic = true)
     val rejMetric = s"graft_rejected_${java.util.UUID.randomUUID()}"
     val parsed = parsedAll
       .observe(rejMetric, coalesce(sum(when(isRejected, 1L).otherwise(0L)),
@@ -532,13 +534,9 @@ final class BatchLoader(
         if (timeFields(f.name)) fieldValue(f).as(f.name, f.metadata)
         else col(s"r.record.`${f.name}`").as(f.name, f.metadata)
       } :+ col(SeqCol)): _*)
-    // The receipt instant enters the plan through a nondeterministic
-    // zero-arg UDF, bound by reference: a timestamp literal (what
-    // `current_timestamp()` folds into) is inlined into the generated
-    // source, so a new instant per load would compile new classes on every
-    // load. Non-nullable, like `current_timestamp()`: a new table declares
-    // the stamps required, as before.
-    val stamp = udf(() => receivedAt).asNondeterministic().asNonNullable()()
+    // non-nullable, like `current_timestamp()`: a new table declares the
+    // stamps required, as before
+    val stamp = byRef(receivedAt)
     val valid =
       if (!addRecordMetadata) base
       else base
@@ -550,8 +548,22 @@ final class BatchLoader(
         .withColumn("_sdc_deleted_at", lit(null).cast("timestamp"))
         .withColumn("_sdc_sequence", col(SeqCol))
         .withColumn("_sdc_table_version",
-          version.map(lit(_)).getOrElse(lit(null)).cast("long"))
+          version.map(byRef(_)).getOrElse(lit(null).cast("long")))
     Typed(valid, rejMetric, () => parsedAll.filter(isRejected).count())
+  }
+
+  /** A per-load value (the receipt instant, the ACTIVATE_VERSION number, a
+    * segment's seq bounds) bound by reference through a zero-arg UDF:
+    * codegen inlines a literal into the generated source, so a value that
+    * changes per load would compile new classes on every load. The seq
+    * bounds must be deterministic (an observed metric rejects a
+    * nondeterministic argument, and the segment filter then still pushes
+    * below the record parse); the stamps stay nondeterministic, as a
+    * deterministic stamp measured 2 new classes per warm load. */
+  private def byRef[T: scala.reflect.runtime.universe.TypeTag](v: T,
+      deterministic: Boolean = false): Column = {
+    val f = udf(() => v).asNonNullable()
+    (if (deterministic) f else f.asNondeterministic())()
   }
 
   /** Order/column alignment against the live table schema: name-resolved,

@@ -128,7 +128,7 @@ object Dedup {
     // q128) plus the propagation seed; non-standard caps (CapStress
     // sweeps) bypass the memo and derive live
     if (maxBucket.contains(DefaultMaxBucket))
-      pairCache.getOrElseUpdate(s, d)(
+      SessionCache.getOrElseUpdate(s, d, "pairs")(
         computeMinhashCandidates(s, d, maxBucket).localCheckpoint(true))
     else computeMinhashCandidates(s, d, maxBucket)
 
@@ -404,11 +404,6 @@ object Dedup {
     * means are exact integer ppm. Output is ≤ NumHashes+1 rows. */
   /** Test hook: how many times the calibration base was scored. */
   private[ops] val calibDerivations = new java.util.concurrent.atomic.AtomicLong
-  // lazy: MaxCachedCorpora is declared further down this object, and a
-  // strict val here would capture its pre-init 0 (capacity-0 memo that
-  // evicts every insert — observed as q158 re-scoring q148's base)
-  private lazy val calibCache = new SessionMemo(MaxCachedCorpora)
-  private lazy val calibPairsCache = new SessionMemo(MaxCachedCorpora)
 
   /** Pair budget for the CALIBRATION family (q148/q158/q176): reports
     * whose statistical value saturates long before the pair stream does.
@@ -456,7 +451,7 @@ object Dedup {
       thinPairs(minhashCandidates(s, d, Some(DefaultMaxBucket)), maxPairs)
         .localCheckpoint(true)
     if (maxPairs != CalibMaxPairs) build()
-    else calibPairsCache.getOrElseUpdate(s, d)(build())
+    else SessionCache.getOrElseUpdate(s, d, "calib_pairs")(build())
   }
 
   /** Scored calibration base shared by q148 and the q158 budget sweep:
@@ -464,9 +459,9 @@ object Dedup {
     * signature-match indicators plus the exact shingle intersection and
     * set sizes — ONE array_intersect pass over the bounded sample,
     * checkpointed, so the calibration report and the hash-budget sweep
-    * never score the pairs twice (the truthCache discipline). */
+    * never score the pairs twice (the n-gram truth's discipline). */
   private def calibrationBase(s: SparkSession, d: String): DataFrame =
-    calibCache.getOrElseUpdate(s, d) {
+    SessionCache.getOrElseUpdate(s, d, "calib") {
       calibDerivations.incrementAndGet()
       val mh = minhashes(s, d)
       withShingles(s, d, sampledCalibPairs(s, d))
@@ -693,7 +688,7 @@ object Dedup {
     // memoized: the truth is tiny (above-threshold pairs) but its
     // derivation scans the df-capped inverted index — q109 consumes it
     // right after the standalone q108 in any full run
-    truthCache.getOrElseUpdate(s, d)(
+    SessionCache.getOrElseUpdate(s, d, "ngram_truth")(
       computeNgramJaccard(s, d).localCheckpoint(true))
 
   private def computeNgramJaccard(s: SparkSession, d: String): DataFrame = {
@@ -1573,15 +1568,12 @@ object Dedup {
     * Same shape as q115: fingerprint min rides one fp-keyed window
     * exchange, the memoized label assignment joins in, output is one row
     * per doc. */
-  // lazy: MaxCachedCorpora is declared below (the calibCache lesson)
-  private lazy val ledgerCache = new SessionMemo(MaxCachedCorpora)
-
   def q129DedupLedger(s: SparkSession, d: String): DataFrame =
     // memoized: three registered consumers read the resolved ledger
     // (q129 itself, q164's quality join, q130's keep-set semi-join), and
     // the keeper-chain fixpoint below runs an eager checkpointed join +
     // observation per hop — work that must not repeat per consumer
-    ledgerCache.getOrElseUpdate(s, d)(
+    SessionCache.getOrElseUpdate(s, d, "ledger")(
       computeDedupLedger(s, d).localCheckpoint(true))
 
   private def computeDedupLedger(s: SparkSession, d: String): DataFrame = {
@@ -1653,106 +1645,19 @@ object Dedup {
     * BatchLoader reject-count pattern) — no separate convergence probe, no
     * second pass over the frontier. */
   private[ops] def dupLabels(s: SparkSession, d: String): DataFrame =
-    labelCache.getOrElseUpdate(s, d)(computeDupLabels(s, d))
+    // one converged assignment per (session, corpus dir): the propagation
+    // result is a localCheckpoint'ed fixpoint, so its DataFrame is safely
+    // re-consumable within the session — q70/q80/q94/q107 in one run share
+    // ONE propagation instead of four (the in-session analog of
+    // [[clustersTable]]'s cross-session materialization)
+    SessionCache.getOrElseUpdate(s, d, "dup_labels")(computeDupLabels(s, d))
 
-  /** Bounded per-session LRU of checkpointed DataFrame handles — the
-    * dupLabels memo discipline as a reusable shape. Weak session keys;
-    * STRONG values in per-session LRU order bounded by `maxPerSession`
-    * (the SoftReference design failed under benchmark GC pressure — see
-    * [[MaxCachedCorpora]]); deterministic eviction: an onApplicationEnd
-    * listener (registered once per session, on first insert) drops a
-    * session's entries the moment its context stops, and an access-time
-    * purge catches sessions stopped without firing listeners. Values must
-    * be localCheckpoint'ed (or otherwise plan-severed) DataFrames —
-    * re-consumable handles whose blocks the ContextCleaner reclaims once
-    * evicted and unreferenced. */
-  private[ops] final class SessionMemo(maxPerSession: Int) {
-    private val cache =
-      new scala.collection.mutable.WeakHashMap[
-        SparkSession,
-        scala.collection.mutable.LinkedHashMap[String, DataFrame]]
-
-    def getOrElseUpdate(s: SparkSession, key: String)
-                       (compute: => DataFrame): DataFrame = {
-      // lookup under the lock; the compute itself runs OUTSIDE it so a
-      // long first materialization cannot block other sessions' lookups
-      // (a concurrent duplicate compute for the same key is benign: last
-      // insert wins, the loser's blocks get reclaimed)
-      val hit = cache.synchronized {
-        cache.keys.filter(_.sparkContext.isStopped).toList
-          .foreach(cache.remove)
-        val m = cache.getOrElseUpdate(s, {
-          s.sparkContext.addSparkListener(
-            new org.apache.spark.scheduler.SparkListener {
-              override def onApplicationEnd(
-                  e: org.apache.spark.scheduler.SparkListenerApplicationEnd)
-                : Unit = cache.synchronized { cache.remove(s) }
-            })
-          scala.collection.mutable.LinkedHashMap.empty
-        })
-        m.remove(key).map { df => m(key) = df; df } // LRU touch
-      }
-      hit.getOrElse {
-        val df = compute
-        cache.synchronized {
-          val m = cache.getOrElseUpdate(s,
-            scala.collection.mutable.LinkedHashMap.empty)
-          m(key) = df
-          if (m.size > maxPerSession) m.remove(m.head._1)
-        }
-        df
-      }
-    }
-
-    def invalidate(): Unit = cache.synchronized(cache.clear())
-  }
-
-  /** Most corpus assignments a live session memoizes at once. The cached
-    * value per corpus is a DataFrame HANDLE over already-checkpointed RDD
-    * blocks (block-manager storage, MEMORY_AND_DISK — not driver heap), so
-    * holding it costs ~nothing while losing it costs a full label
-    * propagation. An earlier SoftReference design learned this the hard
-    * way: a long benchmark run's GC pressure cleared the refs between
-    * consumers and the "shared" propagation recomputed mid-run (observed
-    * 21 s for a 1.3 s query). Strong-but-bounded is the right shape. */
-  val MaxCachedCorpora = 4
-
-  /** One converged assignment per (session, corpus dir): the propagation
-    * result is a localCheckpoint'ed fixpoint, so its DataFrame is safely
-    * re-consumable within the session — q70/q80/q94/q107 in one run share
-    * ONE propagation instead of four (the in-session analog of
-    * [[clustersTable]]'s cross-session materialization). A corpus
-    * rewritten in place mid-session needs [[invalidateClusterCache]]. */
-  private val labelCache = new SessionMemo(MaxCachedCorpora)
-
-  /** The distinct LSH candidate pair list at the standard cap — SMALL rows
-    * (two ids), expensive derivation (the full minhash signature scan +
-    * banded self-join) and FIVE standalone consumers (q23/q60/q101 via
-    * [[candidatesWithShingles]], q109's lsh side, q128's scaffold) plus
-    * the propagation seed — r7 measured each re-derivation at ~1-1.5 s at
-    * sf0.1. Same memo discipline as the labels. */
-  private val pairCache = new SessionMemo(MaxCachedCorpora)
-
-  /** q108's exact n-gram truth: tiny result (the above-threshold pairs),
-    * heavy derivation (df-capped inverted index + pair-keyed aggregation),
-    * consumed standalone AND by q109's recall compare. */
-  private val truthCache = new SessionMemo(MaxCachedCorpora)
-  private val srcShingleCache = new SessionMemo(MaxCachedCorpora)
-
-  /** Drop memoized cluster assignments, candidate pairs, n-gram truth and
-    * source-shingle relations (all sessions) — for corpus refresh within a
-    * live session. */
-  def invalidateClusterCache(): Unit = {
-    labelCache.invalidate()
-    pairCache.invalidate()
-    truthCache.invalidate()
-    srcShingleCache.invalidate()
-    calibCache.invalidate()
-    ledgerCache.invalidate()
-    // the similarity-side corpus memos (brute truth, query anchor,
-    // k-means/PQ fits) honor the same refresh hook (ADVICE r15)
-    Similarity.invalidateCorpusCaches()
-  }
+  /** The corpus-refresh hook for an in-place rewrite within a live
+    * session: drops every [[SessionCache]] family of every session —
+    * cluster assignments, candidate pairs, n-gram truth, calibration
+    * bases, ANN fits and anchors, retrieval ranks, table schemas — and
+    * unpersists the checkpoints they held. */
+  def invalidateClusterCache(): Unit = SessionCache.invalidate()
 
   /** Test hook: how many label propagations have actually run. */
   private[ops] val propagationRuns = new java.util.concurrent.atomic.AtomicLong
@@ -2189,7 +2094,7 @@ object Dedup {
     * serves both q81's exact matrix and q142's exact-mode gate (they also
     * cannot tokenize differently: one definition). */
   private def distinctSourceShingles(s: SparkSession, d: String): DataFrame =
-    srcShingleCache.getOrElseUpdate(s, d)(
+    SessionCache.getOrElseUpdate(s, d, "source_shingles")(
       documents(s, d)
         .select(col("source"), explode(expr("word_shingles(text)")).as("sh"))
         .distinct()

@@ -76,9 +76,8 @@ object Similarity {
     * checkpoint — control-plane sized — serves every consumer; the
     * CORPUS side keeps streaming from parquet unchanged (at 100 TB the
     * corpus cannot checkpoint; the query sample always could). */
-  private val queryAnchorCache = new Dedup.SessionMemo(Dedup.MaxCachedCorpora)
   private def queryAnchor(s: SparkSession, d: String): DataFrame =
-    queryAnchorCache.getOrElseUpdate(s, s"qanchor:$d")(
+    SessionCache.getOrElseUpdate(s, d, "query_anchor")(
       emb(s, d).filter(col("vec_id") < NumQueries).localCheckpoint(true))
 
   /** Native one-pass cosine (see class doc for why not aggregate/zip_with). */
@@ -111,14 +110,14 @@ object Similarity {
     * but q152 re-derived the identical truth and q174 embedded the
     * derivation TWICE (once per probeStats chain in its union plan), so a
     * full run paid the corpus×queries exact-cosine pass four times. One
-    * [[Dedup.SessionMemo]]-cached localCheckpoint (queries × k rows —
+    * [[SessionCache]]-cached localCheckpoint (queries × k rows —
     * bounded control plane) serves all four consumers; at 100 TB this is
     * three saved corpus scans per session. */
-  private val bruteTruthCache = new Dedup.SessionMemo(Dedup.MaxCachedCorpora)
   private[ops] def bruteTruthAtLshK(s: SparkSession, d: String): DataFrame =
-    bruteTruthCache.getOrElseUpdate(s, s"brute$LshK:$d")(
-      bruteTopK(s, d, LshK).select("q_id", "neighbor_id")
-        .localCheckpoint(true))
+    SessionCache.getOrElseUpdate(s, d, "brute_truth")(deriveBruteTruth(s, d))
+
+  private def deriveBruteTruth(s: SparkSession, d: String): DataFrame =
+    bruteTopK(s, d, LshK).select("q_id", "neighbor_id").localCheckpoint(true)
 
   private[ops] def bruteTopK(s: SparkSession, d: String, k: Int): DataFrame = {
     val corpus = emb(s, d)
@@ -210,12 +209,22 @@ object Similarity {
     // their codebook literals) are INDEPENDENT serial job chains — the
     // truth derives from a worker thread so its jobs back-fill the fit's
     // driver-side Lloyd's collects instead of queueing after them.
+    // The fit holds the (session, corpus) SessionCache lock, so the worker
+    // derives the truth outside the cache (its query anchor is cached
+    // first, here) and the truth is installed after the await, never
+    // awaited under it.
+    queryAnchor(s, d)
     val truthPool = java.util.concurrent.Executors.newSingleThreadExecutor()
-    val truthF = scala.concurrent.Future(bruteTruthAtLshK(s, d))(
+    val truthF = scala.concurrent.Future(
+      SessionCache.get[DataFrame](s, d, "brute_truth")
+        .getOrElse(deriveBruteTruth(s, d)))(
       scala.concurrent.ExecutionContext.fromExecutor(truthPool))
     truthPool.shutdown() // runs the one queued task, then the thread exits
-    lazy val truth = scala.concurrent.Await.result(
-      truthF, scala.concurrent.duration.Duration.Inf)
+    lazy val truth = {
+      val derived = scala.concurrent.Await.result(
+        truthF, scala.concurrent.duration.Duration.Inf)
+      SessionCache.getOrElseUpdate(s, d, "brute_truth")(derived)
+    }
     def tier(name: String, approx: DataFrame): DataFrame = {
       val hits = truth
         .join(approx.select("q_id", "neighbor_id"),
@@ -983,65 +992,21 @@ object Similarity {
     * corpus dir) — the result is K x D longs of driver-side control plane,
     * and FOUR operators consume it (q85's assignment, q93's purity, the
     * q53 IVF codebook, q105's IVF tier), so one fit serves them all — the
-    * [[graft.ops.Dedup.dupLabels]] pattern. */
-  /** Striped training locks: ONE lock per (session, corpus dir) guards
-    * both fit memos for that corpus — the joint trainer still fills the
-    * coarse and PQ maps atomically under it (per-family locks would
-    * deadlock: kmeansFit takes coarse→pq, pqFit pq→coarse), while
-    * concurrent sessions or different corpora train fully independently
-    * (the round-7 global lock serialized them — r7 advisory). `mapLock`
-    * guards only memo-map STRUCTURE (fast lookups/inserts, never held
-    * across a Spark job); lock order is always per-(s,d) → mapLock. */
-  private val mapLock = new Object
-  private val lockTable = new scala.collection.mutable.WeakHashMap[
-    SparkSession, scala.collection.mutable.Map[String, Object]]
-  private[ops] def fitLockFor(s: SparkSession, d: String): Object =
-    mapLock.synchronized {
-      lockTable.getOrElseUpdate(s, scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(d, new Object)
-    }
-
+    * [[graft.ops.Dedup.dupLabels]] pattern. The (session, corpus)
+    * [[SessionCache]] lock guards both fit families, so the joint trainer
+    * installs the coarse and PQ codebooks atomically (per-family locks
+    * would deadlock: kmeansFit takes coarse→pq, pqFit pq→coarse), while
+    * concurrent sessions or different corpora train independently. */
   private[ops] def kmeansFit(s: SparkSession, d: String): (Array[Long], Array[Array[Long]]) =
-    fitLockFor(s, d).synchronized {
-      mapLock.synchronized {
-        kmeansCache.getOrElseUpdate(s, scala.collection.mutable.Map.empty).get(d)
-      } match {
-        case Some(v) => v
-        case None =>
-          val pqInstalled = mapLock.synchronized {
-            pqCache.getOrElseUpdate(s, scala.collection.mutable.Map.empty)
-              .contains(d)
-          }
-          val coarse =
-            if (pqInstalled) computeKmeansFit(s, d) // PQ installed/trained: train coarse alone
-            else {
-              val (c, p) = computeJointFit(s, d)
-              mapLock.synchronized { pqCache(s).update(d, p) }
-              c
-            }
-          mapLock.synchronized { kmeansCache(s).update(d, coarse) }
-          coarse
+    SessionCache.getOrElseUpdate(s, d, "kmeans_fit") {
+      // PQ installed/trained: train coarse alone
+      if (SessionCache.get[AnyRef](s, d, "pq_fit").isDefined) computeKmeansFit(s, d)
+      else {
+        val (c, p) = computeJointFit(s, d)
+        SessionCache.put(s, d, "pq_fit", p)
+        c
       }
     }
-
-  private val kmeansCache =
-    new scala.collection.mutable.WeakHashMap[
-      SparkSession,
-      scala.collection.mutable.Map[String, (Array[Long], Array[Array[Long]])]]
-
-  /** Drop every corpus-derived memo on this side — brute truth, the query
-    * anchor, and the k-means/PQ fits — for an in-place corpus refresh
-    * within a live session (ADVICE r15: the truth/anchor memos must honor
-    * the same refresh hook [[graft.ops.Dedup.invalidateClusterCache]]
-    * documents for the dedup-side caches; it now calls through here). */
-  def invalidateCorpusCaches(): Unit = {
-    bruteTruthCache.invalidate()
-    queryAnchorCache.invalidate()
-    mapLock.synchronized {
-      kmeansCache.values.foreach(_.clear())
-      pqCache.values.foreach(_.clear())
-    }
-  }
 
   /** Test hook: how many Lloyd's loops have actually run. */
   private[ops] val kmeansFits = new java.util.concurrent.atomic.AtomicLong
@@ -1081,12 +1046,7 @@ object Similarity {
     require(rows.nonEmpty, s"codebook table $namespace.$table is empty")
     val labels = rows.map(_.getLong(0))
     val cents = rows.map(_.getSeq[Long](1).toArray)
-    fitLockFor(s, d).synchronized {
-      mapLock.synchronized {
-        kmeansCache.getOrElseUpdate(s, scala.collection.mutable.Map.empty)
-          .update(d, (labels, cents))
-      }
-    }
+    SessionCache.put(s, d, "kmeans_fit", (labels, cents))
   }
 
   /** Persist the PQ codebooks ([[pqFit]]) to the lake — the fine-quantizer
@@ -1125,12 +1085,7 @@ object Similarity {
       val rs = byM(m)
       (rs.map(_.getLong(1)), rs.map(_.getSeq[Long](2).toArray))
     }
-    fitLockFor(s, d).synchronized {
-      mapLock.synchronized {
-        pqCache.getOrElseUpdate(s, scala.collection.mutable.Map.empty)
-          .update(d, fits)
-      }
-    }
+    SessionCache.put(s, d, "pq_fit", fits)
   }
 
   /** One ANN index row per incoming vector: the coarse IVF cell plus the
@@ -1368,22 +1323,9 @@ object Similarity {
     * own memoized fits; this memo serves the MONITOR queries (q171 churn,
     * q174 stale recall) that need the seed generation on every call, so
     * repeated monitors don't re-run the TakeOrdered collect per query. */
-  private val seedCache =
-    new scala.collection.mutable.WeakHashMap[
-      SparkSession, scala.collection.mutable.Map[String, Array[Array[Long]]]]
   private[ops] def seedsFor(s: SparkSession, d: String): Array[Array[Long]] =
-    fitLockFor(s, d).synchronized {
-      mapLock.synchronized {
-        seedCache.getOrElseUpdate(s, scala.collection.mutable.Map.empty).get(d)
-      } match {
-        case Some(v) => v
-        case None =>
-          val v = seedCentroids(quantized(s, d, QuantOffset),
-            adaptiveKmeansK(s, d))
-          mapLock.synchronized { seedCache(s).update(d, v) }
-          v
-      }
-    }
+    SessionCache.getOrElseUpdate(s, d, "kmeans_seeds")(
+      seedCentroids(quantized(s, d, QuantOffset), adaptiveKmeansK(s, d)))
 
   /** Assignment churn (q171): per converged cluster, how many members the
     * SEED codebook would have placed elsewhere — the measured gap between
@@ -1521,12 +1463,6 @@ object Similarity {
   /** Test hook: how many PQ trainings have actually run. */
   private[ops] val pqFits = new java.util.concurrent.atomic.AtomicLong
 
-  private val pqCache =
-    new scala.collection.mutable.WeakHashMap[
-      SparkSession,
-      scala.collection.mutable.Map[
-        String, Array[(Array[Long], Array[Array[Long]])]]]
-
   /** Product-quantization codebooks (Jégou, Douze, Schmid, "Product
     * Quantization for Nearest Neighbor Search", TPAMI 2011): an independent
     * [[KMeansK]]-centroid Lloyd's fit per [[PqM]] disjoint 16-dim subspace,
@@ -1544,25 +1480,13 @@ object Similarity {
     * Returns per subspace (surviving seed labels, converged centroids). */
   private[ops] def pqFit(s: SparkSession, d: String)
       : Array[(Array[Long], Array[Array[Long]])] =
-    fitLockFor(s, d).synchronized {
-      mapLock.synchronized {
-        pqCache.getOrElseUpdate(s, scala.collection.mutable.Map.empty).get(d)
-      } match {
-        case Some(v) => v
-        case None =>
-          val coarseInstalled = mapLock.synchronized {
-            kmeansCache.getOrElseUpdate(s, scala.collection.mutable.Map.empty)
-              .contains(d)
-          }
-          val pq =
-            if (coarseInstalled) computePqFit(s, d) // coarse installed/trained: train PQ alone
-            else {
-              val (c, p) = computeJointFit(s, d)
-              mapLock.synchronized { kmeansCache(s).update(d, c) }
-              p
-            }
-          mapLock.synchronized { pqCache(s).update(d, pq) }
-          pq
+    SessionCache.getOrElseUpdate(s, d, "pq_fit") {
+      // coarse installed/trained: train PQ alone
+      if (SessionCache.get[AnyRef](s, d, "kmeans_fit").isDefined) computePqFit(s, d)
+      else {
+        val (c, p) = computeJointFit(s, d)
+        SessionCache.put(s, d, "kmeans_fit", c)
+        p
       }
     }
 

@@ -1294,19 +1294,16 @@ object Streaming {
     * 100 TB — cost is one key-projected presence scan + the batch
     * write; the masking debt is priced by q209's report and folded by
     * compaction. */
-  /** q222's generated Singer feeds, once per (JVM, corpus dir) — the
-    * feed TEXT is harness fodder (the oracle-visible work is the loader's
-    * parse + the MOR upsert commits), so re-assembling JSON strings per
-    * call would dominate the 100×-probe measurement (VERDICT r13 #6;
-    * the q223 fixture trim, 743ac5d, set the precedent). The temp dirs
-    * live for the JVM and are re-read by every subsequent call. */
-  private val q222Feeds =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
   def q222UpsertLoad(s: SparkSession, d: String): DataFrame = {
     val cat = graft.lake.DirectoryLakeCatalog.temp(s)
     val ns = "upq"
-    val tmp = q222Feeds.computeIfAbsent(d, _ => {
+    // the generated Singer feeds, once per (session, corpus dir) in the
+    // [[SessionCache]] — the feed TEXT is harness fodder (the
+    // oracle-visible work is the loader's parse + the MOR upsert
+    // commits), so re-assembling JSON strings per call would dominate the
+    // 100×-probe measurement (VERDICT r13 #6; the q223 fixture trim,
+    // 743ac5d, set the precedent). The feed dirs go at JVM exit.
+    val tmp = SessionCache.getOrElseUpdate(s, d, "q222_feeds") {
       val t = java.nio.file.Files.createTempDirectory("graft-q222-")
       val schemaLine =
         """{"type":"SCHEMA","stream":"up","key_properties":["doc_id"],""" +
@@ -1335,8 +1332,9 @@ object Streaming {
             .as("line")))
         .coalesce(4).write.mode("overwrite")
         .text(t.resolve("f2_records").toString)
+      org.apache.commons.io.FileUtils.forceDeleteOnExit(t.toFile)
       t
-    })
+    }
     val loader = new graft.lake.BatchLoader(s, cat, ns,
       upsertStreams = Set("up"))
     loader.loadPaths(Seq(tmp.resolve("f1_0schema.jsonl").toString,
@@ -1358,7 +1356,7 @@ object Streaming {
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
       .toSeq
     cat.dropNamespace(ns)
-    // the feed dirs stay — cached in q222Feeds for the session
+    // the feed dirs stay — cached in the SessionCache for the session
     import s.implicits._
     rows.toDF("ver", "lang", "n_docs", "sum_id").orderBy("ver", "lang")
   }

@@ -1,6 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table access for the driver's testdata star schema
   * (`/root/repo/TESTDATA.md`). Reads go through `spark.read.parquet` so
@@ -37,37 +40,47 @@ object Tables {
       graft.functions.TextHashExprs.register(spark)
   }
 
-  /** Per-session schema memo for the star-schema parquet reads. A bare
-    * `spark.read.parquet(path)` runs a ONE-TASK schema-inference Spark job
-    * per call (`ParquetFileFormat.mergeSchemasInParallel` → RDD.collect),
-    * and every job submission additionally gzips the full Hadoop
-    * Configuration on the driver during closure cleaning — a fixed
-    * multi-ms driver cost paid on every table access in every query. The
-    * first read of each path per session still infers (so the schema is
-    * derived from the parquet input, never assumed); subsequent reads pass
-    * that schema explicitly and skip the job. Session-keyed (WeakHashMap)
-    * like the ops-layer SessionMemo: nothing survives the session. */
-  private val schemaMemo =
-    new scala.collection.mutable.WeakHashMap[SparkSession,
-      scala.collection.mutable.HashMap[String, org.apache.spark.sql.types.StructType]]
-
+  /** A star-schema parquet read. A bare `spark.read.parquet(path)` runs a
+    * ONE-TASK schema-inference Spark job per call
+    * (`ParquetFileFormat.mergeSchemasInParallel` → RDD.collect), and every
+    * job submission additionally gzips the full Hadoop Configuration
+    * during closure cleaning — a fixed multi-ms cost on every table
+    * access in every query. So the first read of each path per
+    * (session, dir) infers, and [[SessionCache]] keeps that schema with the
+    * (path, length, mtime) of every file the relation listed; later reads
+    * pass the schema explicitly and skip the job. Identity check: a later
+    * read compares the files its own relation listed (no extra filesystem
+    * call) with the recorded ones; on any change — a rewrite in place —
+    * the (session, dir) slot is dropped and the schema inferred again. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     prepareSession(spark)
     val path = s"$dir/$name.parquet"
-    val memoed = schemaMemo.synchronized {
-      schemaMemo.getOrElseUpdate(spark,
-        scala.collection.mutable.HashMap.empty).get(path)
+    val family = s"schema:$name"
+    type Inferred = (StructType, Seq[(String, Long, Long)])
+    SessionCache.get[Inferred](spark, dir, family) match {
+      case Some((schema, files)) =>
+        val df = spark.read.schema(schema).parquet(path)
+        if (listed(df) == files) df
+        else {
+          SessionCache.drop(spark, dir)
+          t(spark, dir, name)
+        }
+      case None =>
+        val df = spark.read.parquet(path)
+        SessionCache.put(spark, dir, family, (df.schema, listed(df)))
+        df
     }
-    val schema = memoed.getOrElse {
-      val inferred = spark.read.parquet(path).schema
-      schemaMemo.synchronized {
-        schemaMemo.getOrElseUpdate(spark,
-          scala.collection.mutable.HashMap.empty).update(path, inferred)
-      }
-      inferred
-    }
-    spark.read.schema(schema).parquet(path)
   }
+
+  /** (path, length, mtime) of every file a parquet read's relation listed. */
+  private def listed(df: DataFrame): Seq[(String, Long, Long)] =
+    df.queryExecution.analyzed.collect {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location
+    }.flatMap {
+      case idx: PartitioningAwareFileIndex => idx.allFiles()
+      case _ => Nil
+    }.map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      .sorted
 
   def lineitem(s: SparkSession, d: String): DataFrame = t(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = t(s, d, "orders")

@@ -1605,9 +1605,6 @@ object TextOps {
       .map(r => r.getLong(0) -> r.getSeq[String](1).filter(_.nonEmpty))
       .filter(_._2.nonEmpty)
 
-  private val retrBaseCache = new Dedup.SessionMemo(Dedup.MaxCachedCorpora)
-  private val retrRankCache = new Dedup.SessionMemo(Dedup.MaxCachedCorpora)
-
   /** The ONE tokenize of a retrieval corpus — per doc its token length
     * and its query-term hits — the shared core both the q131 face (corpus
     * docs, derived queries) and the q198 eval face (corpus ∪ eval
@@ -1663,9 +1660,9 @@ object TextOps {
 
   /** q131's memoized ranked lists: corpus docs, derived queries. */
   private def retrRanked(s: SparkSession, d: String): DataFrame =
-    retrRankCache.getOrElseUpdate(s, s"retr_rank:$d") {
+    SessionCache.getOrElseUpdate(s, d, "retr_rank") {
       val queries = retrQueries(s, d)
-      val base = retrBaseCache.getOrElseUpdate(s, s"retr_base:$d") {
+      val base = SessionCache.getOrElseUpdate(s, d, "retr_base") {
         retrBaseOf(documents(s, d), queries.flatMap(_._2).distinct)
       }
       retrRankedOf(s, base, queries)
@@ -1752,7 +1749,7 @@ object TextOps {
     * retrieved (the sweep grid-completeness rule).
     *
     * Scale shape: ONE tokenize of corpus ∪ fixture (memoized with the
-    * ranked lists, the labelCache discipline); the truth join is the
+    * ranked lists, the dup-label memo discipline); the truth join is the
     * tokenized hits x a broadcast <= 35-term literal grid grouped on
     * (q_id, doc_id), candidate volume bounded exactly as q131's; every
     * downstream frame rolls to one row per query. At web scale the truth
@@ -1763,12 +1760,12 @@ object TextOps {
     val fixture = RetrEvalDocs
       .map { case (id, u) => (id, u + " " + ("pad " * RetrEvalPadLen).trim) }
       .toDF("doc_id", "text")
-    val base = retrBaseCache.getOrElseUpdate(s, s"retr_eval_base:$d") {
+    val base = SessionCache.getOrElseUpdate(s, d, "retr_eval_base") {
       retrBaseOf(
         documents(s, d).select(col("doc_id"), col("text")).unionAll(fixture),
         queries.flatMap(_._2).distinct)
     }
-    val ranked = retrRankCache.getOrElseUpdate(s, s"retr_eval_rank:$d") {
+    val ranked = SessionCache.getOrElseUpdate(s, d, "retr_eval_rank") {
       retrRankedOf(s, base, queries)
     }
     val qgrid = s.createDataFrame(

@@ -280,6 +280,26 @@ class BatchLoaderSpec extends AnyFunSuite {
     assert(at != null)
     assert(!at.toInstant.isBefore(before) && !at.toInstant.isAfter(after),
       s"$at outside [$before, $after]")
+    // the other per-load values are bound by reference too: a SCHEMA
+    // shifted by one line (new segment seq bounds) and a new
+    // ACTIVATE_VERSION number reuse the warm load's classes
+    def compilesOf(feed: Seq[String]): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      loader.load(spark.createDataset(feed))
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    val shifted = """{"type":"STATE","value":{"bookmark":0}}""" +:
+      (Seq(schemaLine) ++ (11 to 15).map(recordLine))
+    assert(compilesOf(shifted) == 0,
+      "a SCHEMA at a new feed offset must reuse the warm load's classes")
+    def versioned(v: Int) = Seq(schemaLine,
+      s"""{"type":"ACTIVATE_VERSION","stream":"ev","version":$v}""") ++
+      (16 to 20).map(recordLine)
+    compilesOf(versioned(1))
+    assert(compilesOf(versioned(2)) == 0,
+      "a new ACTIVATE_VERSION must reuse the warm load's classes")
+    assert(cat.load(ns, "ev").select("_sdc_table_version").distinct()
+      .collect().map(_.getLong(0)).toSeq == Seq(2L))
     cat.dropNamespace(ns)
   }
 

@@ -707,9 +707,9 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("fit locks are striped per (session, corpus dir)") {
-    val a = Similarity.fitLockFor(spark, "/tmp/corpus-a")
-    assert(Similarity.fitLockFor(spark, "/tmp/corpus-a") eq a)
-    assert(!(Similarity.fitLockFor(spark, "/tmp/corpus-b") eq a))
+    val a = SessionCache.lockFor(spark, "/tmp/corpus-a")
+    assert(SessionCache.lockFor(spark, "/tmp/corpus-a") eq a)
+    assert(!(SessionCache.lockFor(spark, "/tmp/corpus-b") eq a))
   }
 
   test("nprobe sweep: grid-complete, monotone in nprobe, matches the ivf tier") {
