@@ -20,6 +20,21 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.ops.CapStress [sfDir] [mult] [workDir]
   */
 object CapStress {
+  /** One signature family's bucket histogram and candidate-pair counts.
+    * Numbers print in Locale.ROOT, here and in [[queryLine]]: under de_DE
+    * the default locale prints `0,25` and the JSON would not parse. */
+  private[graft] def familyLine(name: String, cap: Int, nBuckets: Long,
+      maxBucket: Long, p999: Long, all: Long, kept: Long): String = {
+    val dropped = if (all == 0) 0.0 else (all - kept).toDouble / all
+    s"""{"family":"$name","cap":$cap,"n_buckets":$nBuckets,"max_bucket":$maxBucket,""" +
+      s""""p999":$p999,"pairs_all":$all,"pairs_kept":$kept,"dropped_frac":""" +
+      "%.4f}".formatLocal(java.util.Locale.ROOT, dropped)
+  }
+
+  private[graft] def queryLine(name: String, rows: Long, sec: Double): String =
+    s"""{"query":"$name","rows":$rows,"sec":""" +
+      "%.2f}".formatLocal(java.util.Locale.ROOT, sec)
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
@@ -66,15 +81,9 @@ object CapStress {
           sum(expr(s"CASE WHEN n <= $cap THEN n * (n - 1) div 2 " +
             "ELSE 0 END")).as("pairs_kept"))
         .head()
-      val all = r.getAs[Long]("pairs_all")
-      val kept = r.getAs[Long]("pairs_kept")
-      val dropped = if (all == 0) 0.0 else (all - kept).toDouble / all
-      println(s"""{"family":"$name","cap":$cap,""" +
-        s""""n_buckets":${r.getAs[Long]("n_buckets")},""" +
-        s""""max_bucket":${r.getAs[Long]("max_bucket")},""" +
-        s""""p999":${r.getAs[Long]("p999")},""" +
-        s""""pairs_all":$all,"pairs_kept":$kept,""" +
-        s""""dropped_frac":${f"$dropped%.4f"}}""")
+      println(familyLine(name, cap, r.getAs[Long]("n_buckets"),
+        r.getAs[Long]("max_bucket"), r.getAs[Long]("p999"),
+        r.getAs[Long]("pairs_all"), r.getAs[Long]("pairs_kept")))
     }
 
     stats("minhash_bands",
@@ -116,8 +125,7 @@ object CapStress {
     ).foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       val n = fn(spark, d).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(s"""{"query":"$name","rows":$n,"sec":${f"$sec%.2f"}}""")
+      println(queryLine(name, n, (System.nanoTime() - t0) / 1e9))
     }
     spark.stop()
   }

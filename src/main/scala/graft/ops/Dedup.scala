@@ -123,7 +123,7 @@ object Dedup {
     * see [[DefaultMaxBucket]] for sizing). */
   private[ops] def minhashCandidates(s: SparkSession, d: String,
                                      maxBucket: Option[Int] = None): DataFrame =
-    // the STANDARD-cap pair list is memoized per (session, corpus): two-id
+    // the STANDARD-cap pair list is memoized per corpus slot: two-id
     // rows, checkpointed, five standalone consumers (q23/q60/q101/q109/
     // q128) plus the propagation seed; non-standard caps (CapStress
     // sweeps) bypass the memo and derive live
@@ -1645,15 +1645,15 @@ object Dedup {
     * BatchLoader reject-count pattern) — no separate convergence probe, no
     * second pass over the frontier. */
   private[ops] def dupLabels(s: SparkSession, d: String): DataFrame =
-    // one converged assignment per (session, corpus dir): the propagation
-    // result is a localCheckpoint'ed fixpoint, so its DataFrame is safely
-    // re-consumable within the session — q70/q80/q94/q107 in one run share
-    // ONE propagation instead of four (the in-session analog of
+    // one converged assignment per corpus slot: the propagation result is
+    // a localCheckpoint'ed fixpoint, so its DataFrame is safely
+    // re-consumable by every session of the context — q70/q80/q94/q107
+    // share ONE propagation instead of four (the in-context analog of
     // [[clustersTable]]'s cross-session materialization)
     SessionCache.getOrElseUpdate(s, d, "dup_labels")(computeDupLabels(s, d))
 
-  /** The corpus-refresh hook for an in-place rewrite within a live
-    * session: drops every [[SessionCache]] family of every session —
+  /** The corpus-refresh hook for an in-place rewrite under live
+    * sessions: drops every [[SessionCache]] family of every slot —
     * cluster assignments, candidate pairs, n-gram truth, calibration
     * bases, ANN fits and anchors, retrieval ranks, table schemas — and
     * unpersists the checkpoints they held. */
@@ -2090,7 +2090,7 @@ object Dedup {
     * feeds the sizes rollup AND both join sides — checkpointed so the
     * shingle explosion runs once (the q72 lesson). */
   /** The distinct (source, shingle) relation, checkpointed AND memoized
-    * per (session, corpus) — ONE corpus scan + shingle explode genuinely
+    * per corpus slot — ONE corpus scan + shingle explode genuinely
     * serves both q81's exact matrix and q142's exact-mode gate (they also
     * cannot tokenize differently: one definition). */
   private def distinctSourceShingles(s: SparkSession, d: String): DataFrame =

@@ -67,7 +67,7 @@ object Similarity {
     embeddings(s, d).select(col("vec_id"), col("embedding").as("v"))
 
   /** The bounded query-side sample ([[NumQueries]] rows of the corpus
-    * projection), memoized + localCheckpointed per (session, corpus) —
+    * projection), memoized + localCheckpointed per corpus slot —
     * optimization r16 (guide §6/§1.2-1): every ANN tier re-derived this
     * sample with its OWN parquet scan of the embeddings table (q105's
     * three-tier union planned NINE query-side scans; q141's per-subspace
@@ -106,13 +106,13 @@ object Similarity {
     * ranking makes the order robust to last-ulp differences between
     * engines; ties break on neighbor id. */
   /** The matched-k ([[LshK]]) brute truth pair list, memoized per
-    * (session, corpus) — optimization r15: q105 checkpointed its own copy
+    * corpus slot — optimization r15: q105 checkpointed its own copy
     * but q152 re-derived the identical truth and q174 embedded the
     * derivation TWICE (once per probeStats chain in its union plan), so a
     * full run paid the corpus×queries exact-cosine pass four times. One
     * [[SessionCache]]-cached localCheckpoint (queries × k rows —
     * bounded control plane) serves all four consumers; at 100 TB this is
-    * three saved corpus scans per session. */
+    * three saved corpus scans per corpus slot. */
   private[ops] def bruteTruthAtLshK(s: SparkSession, d: String): DataFrame =
     SessionCache.getOrElseUpdate(s, d, "brute_truth")(deriveBruteTruth(s, d))
 
@@ -203,13 +203,13 @@ object Similarity {
     // memoized + checkpointed: queries x k rows, consumed by BOTH tier
     // compares here AND by q152/q174's probe measurements — the exact
     // brute pass is the expensive half of every recall monitor and must
-    // run once per (session, corpus), not once per consumer.
+    // run once per corpus slot, not once per consumer.
     // optimization r15 (guide §2.6): the truth checkpoint and the joint
     // k-means/PQ fit (triggered below when the ivf/ivfadc tiers build
     // their codebook literals) are INDEPENDENT serial job chains — the
     // truth derives from a worker thread so its jobs back-fill the fit's
     // driver-side Lloyd's collects instead of queueing after them.
-    // The fit holds the (session, corpus) SessionCache lock, so the worker
+    // The fit holds the corpus slot's SessionCache lock, so the worker
     // derives the truth outside the cache (its query anchor is cached
     // first, here) and the truth is installed after the await, never
     // awaited under it.
@@ -508,14 +508,15 @@ object Similarity {
     * adaptive count a pure extension (same first 6 planes at every test
     * scale, so the sf0.001-0.1 results are unchanged). Integer-only
     * arithmetic (no log2 floats), mirrored exactly by the oracle's
-    * generate_series probe. The count() is a parquet-metadata job. */
-  private[ops] def dedupPlanes(s: SparkSession, d: String): Int = {
-    val n = Tables.embeddings(s, d).count()
-    val cells = (n + DedupTargetBucket - 1) / DedupTargetBucket
-    val p = if (cells <= 1L) 0
-      else 64 - java.lang.Long.numberOfLeadingZeros(cells - 1)
-    math.min(MaxDedupPlanes, math.max(NumPlanes, p))
-  }
+    * generate_series probe. Its count() job runs once per corpus slot. */
+  private[ops] def dedupPlanes(s: SparkSession, d: String): Int =
+    SessionCache.getOrElseUpdate(s, d, "dedup_planes") {
+      val n = Tables.embeddings(s, d).count()
+      val cells = (n + DedupTargetBucket - 1) / DedupTargetBucket
+      val p = if (cells <= 1L) 0
+        else 64 - java.lang.Long.numberOfLeadingZeros(cells - 1)
+      Int.box(math.min(MaxDedupPlanes, math.max(NumPlanes, p)))
+    }.intValue
 
   def q44DedupEmbedding(s: SparkSession, d: String): DataFrame =
     dedupEmbedding(s, d, dedupPlanes(s, d))
@@ -988,11 +989,11 @@ object Similarity {
     * (labels keep their seed identity, so survivors' ids are stable).
     * Output: (vec_id, cluster, d2) with exact squared distances. */
   /** The Lloyd's loop itself: (surviving seed labels, converged quantized
-    * centroids) after [[KMeansIters]] iterations. Memoized per (session,
-    * corpus dir) — the result is K x D longs of driver-side control plane,
+    * centroids) after [[KMeansIters]] iterations. Memoized per corpus
+    * slot — the result is K x D longs of driver-side control plane,
     * and FOUR operators consume it (q85's assignment, q93's purity, the
     * q53 IVF codebook, q105's IVF tier), so one fit serves them all — the
-    * [[graft.ops.Dedup.dupLabels]] pattern. The (session, corpus)
+    * [[graft.ops.Dedup.dupLabels]] pattern. The slot's
     * [[SessionCache]] lock guards both fit families, so the joint trainer
     * installs the coarse and PQ codebooks atomically (per-family locks
     * would deadlock: kmeansFit takes coarse→pq, pqFit pq→coarse), while
@@ -1032,8 +1033,8 @@ object Similarity {
     catalog.load(namespace, table)
   }
 
-  /** Install a persisted codebook ([[codebookTable]]) into THIS session's
-    * fit memo for corpus `d`: every consumer of [[kmeansFit]] (q53 IVF
+  /** Install a persisted codebook ([[codebookTable]]) into corpus `d`'s
+    * fit memo (its [[SessionCache]] slot, under `s`'s confs): every consumer of [[kmeansFit]] (q53 IVF
     * probe, q85 assignment, q93 purity, q105's IVF tier) then runs with
     * ZERO Lloyd's iterations — a fresh session probes a 100 TB index
     * without touching the training path. The collect is K rows (bounded
@@ -1067,8 +1068,8 @@ object Similarity {
     catalog.load(namespace, table)
   }
 
-  /** Install persisted PQ codebooks ([[pqCodebookTable]]) into THIS
-    * session's fit memo — q137 codes, q138 ADC and q141 IVFADC then run
+  /** Install persisted PQ codebooks ([[pqCodebookTable]]) into corpus
+    * `d`'s fit memo — q137 codes, q138 ADC and q141 IVFADC then run
     * with ZERO training scans, completing the cross-session story
     * [[installCodebook]] starts for the coarse quantizer. */
   def installPqCodebook(s: SparkSession, d: String,
@@ -1112,7 +1113,7 @@ object Similarity {
             subVec(m), centLit(pq(m)._2)), 1)).as(s"code_$m")): _*)
   }
 
-  /** The trained quantizer pair for `d` in session `s` (memo-served):
+  /** The trained quantizer pair for `d` under session `s` (memo-served):
     * what a streaming ingest captures before starting its query. */
   private[ops] def trainedQuantizers(s: SparkSession, d: String)
       : ((Array[Long], Array[Array[Long]]),
@@ -1318,7 +1319,7 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  /** Memoized seed codebook per (session, corpus) — the k lowest vec_ids'
+  /** Memoized seed codebook per corpus slot — the k lowest vec_ids'
     * quantized vectors. The TRAINING paths derive seeds once inside their
     * own memoized fits; this memo serves the MONITOR queries (q171 churn,
     * q174 stale recall) that need the seed generation on every call, so
@@ -1476,7 +1477,7 @@ object Similarity {
     * that is 2 corpus scans total for the whole PQ training, no
     * corpus-sized shuffle anywhere — the same treeAggregate shape as
     * [[computeKmeansFit]], amortized over all subspaces. Memoized per
-    * (session, corpus): q137 codes and q138 ADC share one fit.
+    * corpus slot: q137 codes and q138 ADC share one fit.
     * Returns per subspace (surviving seed labels, converged centroids). */
   private[ops] def pqFit(s: SparkSession, d: String)
       : Array[(Array[Long], Array[Array[Long]])] =
@@ -1676,7 +1677,7 @@ object Similarity {
     * `d`'s trained index — the API an external retrieval caller actually
     * uses (the registered q141 is this face applied to the sampled
     * corpus-query convention with self-matches excluded). Quantizers come
-    * from the session memo, so a fresh session serves after
+    * from the corpus slot's memo, so a fresh session serves after
     * [[installCodebook]]/[[installPqCodebook]] with zero training scans.
     *
     * Shape (unchanged from the audited q141 plan): queries rank every

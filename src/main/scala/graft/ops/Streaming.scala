@@ -1297,7 +1297,7 @@ object Streaming {
   def q222UpsertLoad(s: SparkSession, d: String): DataFrame = {
     val cat = graft.lake.DirectoryLakeCatalog.temp(s)
     val ns = "upq"
-    // the generated Singer feeds, once per (session, corpus dir) in the
+    // the generated Singer feeds, once per corpus slot in the
     // [[SessionCache]] — the feed TEXT is harness fodder (the
     // oracle-visible work is the loader's parse + the MOR upsert
     // commits), so re-assembling JSON strings per call would dominate the
@@ -1356,7 +1356,7 @@ object Streaming {
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
       .toSeq
     cat.dropNamespace(ns)
-    // the feed dirs stay — cached in the SessionCache for the session
+    // the feed dirs stay — cached in the SessionCache for the corpus slot
     import s.implicits._
     rows.toDF("ver", "lang", "n_docs", "sum_id").orderBy("ver", "lang")
   }

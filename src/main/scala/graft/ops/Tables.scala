@@ -45,13 +45,13 @@ object Tables {
     * (`ParquetFileFormat.mergeSchemasInParallel` → RDD.collect), and every
     * job submission additionally gzips the full Hadoop Configuration
     * during closure cleaning — a fixed multi-ms cost on every table
-    * access in every query. So the first read of each path per
-    * (session, dir) infers, and [[SessionCache]] keeps that schema with the
-    * (path, length, mtime) of every file the relation listed; later reads
-    * pass the schema explicitly and skip the job. Identity check: a later
-    * read compares the files its own relation listed (no extra filesystem
-    * call) with the recorded ones; on any change — a rewrite in place —
-    * the (session, dir) slot is dropped and the schema inferred again. */
+    * access in every query. So the first read of each path per corpus
+    * slot (shared by sessions, see [[SessionCache]]) infers and keeps that
+    * schema with the (path, length, mtime) of every file the relation
+    * listed; later reads pass the schema explicitly and skip the job.
+    * Identity check: a later read compares the files its own relation
+    * listed (no extra filesystem call) with the recorded ones; on any
+    * change — a rewrite in place — the slot is dropped and re-inferred. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     prepareSession(spark)
     val path = s"$dir/$name.parquet"

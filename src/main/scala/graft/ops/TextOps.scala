@@ -1658,7 +1658,7 @@ object TextOps {
     if (checkpoint) ranked.localCheckpoint(true) else ranked
   }
 
-  /** q131's memoized ranked lists: corpus docs, derived queries. */
+  /** q131's ranked lists, memoized per corpus slot: docs, derived queries. */
   private def retrRanked(s: SparkSession, d: String): DataFrame =
     SessionCache.getOrElseUpdate(s, d, "retr_rank") {
       val queries = retrQueries(s, d)

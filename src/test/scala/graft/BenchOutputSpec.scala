@@ -5,8 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.util.Locale
 
-/** The bench result lines are JSON whatever the JVM's default locale: a
-  * comma-decimal locale must not turn `0.583` into `0,583`. */
+/** The bench and CapStress result lines are JSON whatever the JVM's
+  * default locale: a comma-decimal locale must not turn `0.583` into
+  * `0,583`. */
 class BenchOutputSpec extends AnyFunSuite {
   private def underLocale[T](l: Locale)(body: => T): T = {
     val saved = Locale.getDefault
@@ -32,5 +33,18 @@ class BenchOutputSpec extends AnyFunSuite {
     val doc = new ObjectMapper().readTree(line)
     assert(doc.get("seconds").isNumber && doc.get("seconds").asDouble() == 5.43)
     assert(doc.get("records").asLong() == 500000L)
+  }
+
+  test("the CapStress family and query lines parse as JSON under de_DE") {
+    val (family, query) = underLocale(Locale.GERMANY) {
+      (ops.CapStress.familyLine("minhash_bands", 64, 10L, 70L, 9L, 400L, 300L),
+        ops.CapStress.queryLine("q23_dedup_minhash", 12L, 1.234))
+    }
+    val f = new ObjectMapper().readTree(family)
+    assert(f.get("dropped_frac").isNumber && f.get("dropped_frac").asDouble() == 0.25)
+    assert(f.get("pairs_kept").asLong() == 300L)
+    val q = new ObjectMapper().readTree(query)
+    assert(q.get("sec").isNumber && q.get("sec").asDouble() == 1.23)
+    assert(q.get("rows").asLong() == 12L)
   }
 }

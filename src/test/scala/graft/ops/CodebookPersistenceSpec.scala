@@ -24,8 +24,10 @@ class CodebookPersistenceSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("neighbor_id"),
         r.getAs[Double]("sim"))).toSet
 
-    // session B: fresh SparkSession (separate memo key — the fit cache is
-    // per-session), install the persisted index, probe
+    // session B: fresh SparkSession. The fit cache is shared by the
+    // context's sessions, so drop it first: B's zero fits then prove the
+    // install, not a hit on A's fit. Install the persisted index, probe
+    Dedup.invalidateClusterCache()
     val b = spark.newSession()
     val fitsBefore = Similarity.kmeansFits.get()
     Similarity.installCodebook(b, sf, cat, ns)
@@ -69,8 +71,10 @@ class CodebookPersistenceSpec extends AnyFunSuite {
     val crashVec = sample.last // held back for the mid-epoch crash phase
     val clean = sample.dropRight(1)
 
-    // session B: install from the lake, stream vectors through the ingest
+    // session B: install from the lake (after dropping A's shared fits, so
+    // no hit stands in for the install), stream vectors through the ingest
     // sink — zero training observed on either quantizer
+    Dedup.invalidateClusterCache()
     val b = spark.newSession()
     val kBefore = Similarity.kmeansFits.get()
     val pBefore = Similarity.pqFits.get()

@@ -4,7 +4,7 @@ import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Focused contract tests for the r16 read-path optimizations: the
-  * per-session schema memo in [[Tables.t]] (skip the one-task parquet
+  * schema memo in [[Tables.t]] (skip the one-task parquet
   * schema-inference job on repeat reads) and the shared ANN query anchor
   * in [[Similarity]] — both must be pure plumbing: byte-identical schemas
   * and values vs the un-memoized derivation, invalidated by the corpus
@@ -42,8 +42,10 @@ class ReadPathMemoSpec extends AnyFunSuite {
 
   test("query anchor: memoized tiers equal a fresh session's derivation") {
     val a = Similarity.q25KnnBrute(spark, sf).collect().toSeq
-    // same query in a brand-new session: anchor + truth re-derive from
+    // same query in a brand-new session after the refresh hook (the cache
+    // is shared by the context's sessions): anchor + truth re-derive from
     // parquet from scratch — values must be identical
+    Dedup.invalidateClusterCache()
     val fresh = spark.newSession()
     val b = Similarity.q25KnnBrute(fresh, sf).collect().toSeq
     assert(a == b)

@@ -706,10 +706,15 @@ class SimilaritySpec extends AnyFunSuite {
     assert(crafted == Map("ok" -> 1000000L, "skipped" -> 0L))
   }
 
-  test("fit locks are striped per (session, corpus dir)") {
+  test("fit locks are striped per (corpus dir, result confs)") {
     val a = SessionCache.lockFor(spark, "/tmp/corpus-a")
     assert(SessionCache.lockFor(spark, "/tmp/corpus-a") eq a)
+    assert(SessionCache.lockFor(spark.newSession(), "/tmp/corpus-a") eq a,
+      "a sibling session shares the corpus lock")
     assert(!(SessionCache.lockFor(spark, "/tmp/corpus-b") eq a))
+    val zoned = spark.newSession()
+    zoned.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    assert(!(SessionCache.lockFor(zoned, "/tmp/corpus-a") eq a))
   }
 
   test("nprobe sweep: grid-complete, monotone in nprobe, matches the ivf tier") {
