@@ -380,13 +380,19 @@ object AvroManifests {
 
   // ---- parquet footer ----------------------------------------------------
 
+  /** The one Hadoop [[org.apache.hadoop.conf.Configuration]] every
+    * driver-side footer read opens files with. Built once: each
+    * `new Configuration()` parses the default XML resources again, and a
+    * commit reads one footer per new file. Never mutated, so sharing it
+    * across the footer pool's threads is safe. */
+  private[lake] lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+
   /** Row count from the parquet footer (metadata-only read — the number a
     * real Iceberg writer knows from its own write; reading it back off the
     * footer keeps the manifest layer decoupled from the write path). */
   def parquetRowCount(file: Path): Long = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file.toUri),
-      new org.apache.hadoop.conf.Configuration())
+      new org.apache.hadoop.fs.Path(file.toUri), hadoopConf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try r.getRecordCount finally r.close()
   }
@@ -420,8 +426,7 @@ object AvroManifests {
   private def footerStats(file: Path, statFields: Seq[StatField])
       : FileStats = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file.toUri),
-      new org.apache.hadoop.conf.Configuration())
+      new org.apache.hadoop.fs.Path(file.toUri), hadoopConf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try {
       val rows = r.getRecordCount
@@ -569,7 +574,7 @@ object AvroManifests {
   // ---- data-dir scan -----------------------------------------------------
 
   /** Hive path unescape (%XX), the inverse of Spark's escapePathName. */
-  private def unescape(s: String): String = {
+  private[lake] def unescape(s: String): String = {
     val sb = new StringBuilder
     var i = 0
     while (i < s.length) {
@@ -625,7 +630,8 @@ object AvroManifests {
     // reads were serial on the committing thread — the visible floor of
     // every snapshot commit, and at scale a commit adding thousands of
     // files would read thousands of footers one by one. Each footerStats
-    // call is self-contained (own Configuration + reader), so a bounded
+    // call is self-contained (own reader; the shared read-only
+    // [[hadoopConf]]), so a bounded
     // SHARED pool reads them concurrently (r16: hoisted out of the call —
     // the old per-call pool churned 8 threads on every commit); results
     // keep the sorted file order (futures joined in order), so manifests
@@ -846,9 +852,13 @@ object AvroManifests {
     * (RENAME TABLE support): `manifest_path` on manifest-list records,
     * `data_file.file_path` on manifest entries — schema-preserving (the
     * file is re-written under its OWN embedded schema, every other field
-    * byte-carried), so old- and new-generation files both survive. */
-  def rewritePathPrefix(path: Path, oldPrefix: String,
-                        newPrefix: String): Unit = {
+    * byte-carried), so old- and new-generation files both survive.
+    * `sizes` (rewritten path -> bytes) sets `file_size_in_bytes` of the
+    * entries whose file was rewritten too: readers locate the footer from
+    * that size. A manifest-list record's `manifest_length` takes its
+    * manifest's current size, so rewrite manifests before their lists. */
+  def rewritePathPrefix(path: Path, oldPrefix: String, newPrefix: String,
+                        sizes: Map[String, Long] = Map.empty): Unit = {
     val reader = new DataFileReader[GenericRecord](path.toFile,
       new GenericDatumReader[GenericRecord]())
     val schema = reader.getSchema
@@ -864,12 +874,20 @@ object AvroManifests {
               .filter(_.startsWith(oldPrefix))
               .foreach(v => r.put(field,
                 newPrefix + v.stripPrefix(oldPrefix)))
-          if (schema.getField("manifest_path") != null)
+          if (schema.getField("manifest_path") != null) {
             fix(rec, "manifest_path")
+            val m = Path.of(rec.get("manifest_path").toString)
+            if (schema.getField("manifest_length") != null &&
+                Files.exists(m)) rec.put("manifest_length", Files.size(m))
+          }
           if (schema.getField("data_file") != null)
             Option(rec.get("data_file"))
               .map(_.asInstanceOf[GenericRecord])
-              .foreach(fix(_, "file_path"))
+              .foreach { df =>
+                fix(df, "file_path")
+                sizes.get(df.get("file_path").toString).foreach(n =>
+                  df.put("file_size_in_bytes", n))
+              }
           w.append(rec)
         }
       } finally w.close()

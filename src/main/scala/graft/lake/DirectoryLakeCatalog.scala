@@ -121,33 +121,30 @@ class DirectoryLakeCatalog(spark: SparkSession, val root: Path)
       Files.write(f,
         txt.replace(oldPrefix, newPrefix).getBytes(StandardCharsets.UTF_8))
     }
-    // metadata Avro: manifest lists (manifest_path) + per-dir manifests
-    // (data_file.file_path), schema-preserving in-place rewrites
-    scala.util.Using.resource(Files.list(md))(_.iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".avro")).toSeq)
-      .foreach(AvroManifests.rewritePathPrefix(_, oldPrefix, newPrefix))
     // position-delete parquet: rows bind to data files by absolute
     // _metadata.file_path URI ("file:/..."), so the old root appears
     // INSIDE the value — literal substring replace. Each part file is
     // rewritten IN PLACE under its OWN NAME (the dir's manifest lists
     // the part files by path; renaming them would orphan the manifest).
-    // Only byte SIZE drifts from the manifest's advisory
-    // file_size_in_bytes — a planning hint, not a read binding.
-    posDirs.foreach { d =>
+    // Its byte size changes, and readers locate the footer from the
+    // manifest's file_size_in_bytes: the new sizes go into the manifest
+    // rewrite below.
+    val sizes = posDirs.flatMap { d =>
       val dir = newRoot.resolve("data").resolve(d)
-      if (Files.isDirectory(dir)) {
+      if (!Files.isDirectory(dir)) Nil
+      else {
         import org.apache.spark.sql.functions.{col, lit, regexp_replace}
         val parts = scala.util.Using.resource(Files.list(dir))(
           _.iterator().asScala.filter(
             _.getFileName.toString.endsWith(".parquet")).toSeq)
-        parts.foreach { f =>
+        parts.map { f =>
           val tmp = Files.createTempDirectory(newRoot, ".rename-del-")
-          spark.read.parquet(f.toString)
+          writerOf(fileFrame(f)
             .withColumn("file_path", regexp_replace(col("file_path"),
               lit(java.util.regex.Pattern.quote(oldPrefix)),
               lit(java.util.regex.Matcher.quoteReplacement(newPrefix))))
-            .coalesce(1).sortWithinPartitions("file_path", "pos")
-            .write.parquet(tmp.resolve("out").toString)
+            .coalesce(1).sortWithinPartitions("file_path", "pos"))
+            .parquet(tmp.resolve("out").toString)
           val out = scala.util.Using.resource(
             Files.walk(tmp))(_.iterator().asScala.filter(p =>
               Files.isRegularFile(p) &&
@@ -159,9 +156,19 @@ class DirectoryLakeCatalog(spark: SparkSession, val root: Path)
           Files.deleteIfExists(
             f.resolveSibling(s".${f.getFileName.toString}.crc"))
           deleteTree(tmp)
+          f.toString -> Files.size(f)
         }
       }
-    }
+    }.toMap
+    // metadata Avro: per-dir manifests (data_file.file_path, and the
+    // rewritten delete files' sizes), then the manifest lists
+    // (manifest_path, and the rewritten manifests' lengths) —
+    // schema-preserving in-place rewrites
+    scala.util.Using.resource(Files.list(md))(_.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".avro")).toSeq)
+      .sortBy(_.getFileName.toString.startsWith("manifest-list-"))
+      .foreach(AvroManifests.rewritePathPrefix(_, oldPrefix, newPrefix,
+        sizes))
   }
 
   /** Current committed version: the hint is a STARTING POINT, not the

@@ -5,6 +5,8 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit, not,
   regexp_extract, struct, typedLit, when}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 import java.nio.file.{Files, Path}
@@ -536,12 +538,7 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
       val mp = manifestPathFor(ns, table, dir)
       val scanned: Option[Seq[AvroManifests.DataFileEntry]] =
         if (Files.exists(mp)) None
-        else {
-          val es = AvroManifests.scanDataDir(
-            dataDir(ns, table).resolve(dir), pf, manifestStatFields(meta))
-          AvroManifests.writeManifest(mp, es, pf)
-          Some(es)
-        }
+        else Some(writeDirManifest(ns, table, meta, dir))
       parentEntries.getOrElse(mp.toString, {
         val es = scanned.getOrElse(AvroManifests.readManifest(mp))
         AvroManifests.ManifestListEntry(mp.toString, Files.size(mp),
@@ -1147,6 +1144,14 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
   private def retiredNames(meta: ObjectNode): Set[String] =
     aliasesOf(meta).values.flatten.toSet
 
+  /** The writer of every snapshot and delete-file dir: no `_SUCCESS`
+    * marker. Nothing reads one — the manifest is the file list — and
+    * without native Hadoop each marker and its `.crc` fork a `chmod`. */
+  protected def writerOf(df: DataFrame)
+      : org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
+    df.write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs",
+      "false")
+
   private def writeSnapshot(ns: String, table: String, df: DataFrame,
                             layout: Seq[(String, Option[Column])],
                             options: Map[String, String],
@@ -1185,7 +1190,8 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
       case Some(n) => withDerived.repartition(n)
       case None => withDerived
     }
-    val w = shaped.write.options(options).format("parquet").mode("overwrite")
+    val w = writerOf(shaped).options(options).format("parquet")
+      .mode("overwrite")
     (if (partNames.nonEmpty) w.partitionBy(partNames: _*) else w)
       .save(dir.toString)
     if (partNames.isEmpty) seedDirSchema(dir, shaped.schema)
@@ -2267,13 +2273,13 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     // an empty incoming batch (e.g. an upsert feed that filtered to zero
     // rows) is a no-op, not a commit: a PARTITIONED empty write leaves a
     // file-less dir that cannot even be read back for keys
-    if (AvroManifests.scanDataDir(dataDir(ns, table).resolve(newDir),
-        Seq.empty).forall(_.recordCount == 0L)) {
+    if (writeDirManifest(ns, table, meta, newDir)
+        .forall(_.recordCount == 0L)) {
       dropDirArtifacts(ns, table, newDir)
       return
     }
     try {
-      val ks = rawDirFrame(ns, table, newDir)
+      val ks = rawDirFrame(ns, table, meta, newDir)
         .get // nonempty by the guard above
         .select(keys.map(k => col(s"`$k`")): _*).distinct()
       deleteMatching(ns, table,
@@ -2323,15 +2329,15 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
       partitionLayout(meta), Map.empty)
     // empty batch: no commit (same guard as merge — a partitioned empty
     // write leaves a file-less dir that cannot even be read back)
-    if (AvroManifests.scanDataDir(dataDir(ns, table).resolve(newDir),
-        Seq.empty).forall(_.recordCount == 0L)) {
+    if (writeDirManifest(ns, table, meta, newDir)
+        .forall(_.recordCount == 0L)) {
       dropDirArtifacts(ns, table, newDir)
       return
     }
     val keyCols = keys.map(k => col(s"`$k`"))
     var eqDir: Option[String] = None
     try {
-      val ks = rawDirFrame(ns, table, newDir)
+      val ks = rawDirFrame(ns, table, meta, newDir)
         .get // nonempty by the guard above
         .select(keyCols: _*).distinct()
       val baseLive = liveSnapshots(meta)
@@ -2346,8 +2352,8 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
       val hasMasks = present.exists(!_.isEmpty)
       if (hasMasks) {
         val d = s"del-${System.nanoTime()}-${java.util.UUID.randomUUID()}"
-        present.get.sort(keyCols: _*)
-          .write.parquet(dataDir(ns, table).resolve(d).toString)
+        writerOf(present.get.sort(keyCols: _*))
+          .parquet(dataDir(ns, table).resolve(d).toString)
         eqDir = Some(d)
       }
       // keys WITHOUT a base-row mask: a racing commit that landed rows
@@ -2380,7 +2386,7 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
         // loudly instead of silently duplicating
         val added = curLive.filterNot(baseLive.contains)
         if (added.nonEmpty && hasUnmasked) {
-          val clash = added.exists(d => rawDirFrame(ns, table, d).exists(
+          val clash = added.exists(d => rawDirFrame(ns, table, cur, d).exists(
             f => keys.forall(f.columns.contains) &&
               !f.select(keyCols: _*)
                 .join(unmaskedKeys, keys, "left_semi").isEmpty))
@@ -2453,7 +2459,7 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
       .select(col(PosFileTag).as("file_path"), col(PosPosTag).as("pos"))
     val dirName = s"del-${System.nanoTime()}-${java.util.UUID.randomUUID()}"
     val path = dataDir(ns, table).resolve(dirName)
-    matched.sort("file_path", "pos").write.parquet(path.toString)
+    writerOf(matched.sort("file_path", "pos")).parquet(path.toString)
     // row count off the just-written footers — no second data scan
     val n = AvroManifests.scanDataDir(path, Seq.empty).map(_.recordCount).sum
     if (n == 0L) { deleteTree(path); return 0L }
@@ -2527,8 +2533,8 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     if (n == 0L) return 0L
     val dirName = s"del-${System.nanoTime()}-${java.util.UUID.randomUUID()}"
     val path = dataDir(ns, table).resolve(dirName)
-    matched.select(col(s"`$keyCol`")).sort(keyCol)
-      .write.parquet(path.toString)
+    writerOf(matched.select(col(s"`$keyCol`")).sort(keyCol))
+      .parquet(path.toString)
     // the key's FIELD ID rides the commit (spec equality_ids): ids are
     // rename-proof, so this group keeps masking if keyCol is renamed
     commitDeleteFile(ns, table, dirName, "equality", Seq(keyCol),
@@ -2641,12 +2647,11 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     val rows = dels.map { r =>
       val n = AvroManifests.readManifest(manifestPathFor(ns, table, r.dir))
         .map(_.recordCount).sum
-      val path = dataDir(ns, table).resolve(r.dir).toString
       val masking = r.kind match {
         case "position" =>
           // delete rows carry the scan URI (file:///...), manifests the
           // plain path — normalize the scheme before the semi-join
-          readFlatDir(Path.of(path))
+          deleteFrame(ns, table, meta, r)
             .select(org.apache.spark.sql.functions.expr(
               "regexp_replace(file_path, '^file:/+', '/')").as("lf"))
             .join(liveFilesDf, Seq("lf"), "left_semi").count()
@@ -2678,7 +2683,7 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
               else aliases.collectFirst {
                 case (cur, olds) if olds.contains(c) => cur
               }.getOrElse(c))
-            val keysRaw = readFlatDir(Path.of(path))
+            val keysRaw = deleteFrame(ns, table, meta, r)
             val keys = aliases.foldLeft(keysRaw) { case (d, (cur, olds)) =>
               if (d.columns.contains(cur)) d
               else olds.reverse.find(d.columns.contains)
@@ -2771,8 +2776,8 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     try {
       val d = s"del-${System.nanoTime()}-${java.util.UUID.randomUUID()}"
       val dPath = dataDir(ns, table).resolve(d)
-      positions.select(col("file_path"), col("pos"))
-        .sort("file_path", "pos").write.parquet(dPath.toString)
+      writerOf(positions.select(col("file_path"), col("pos"))
+        .sort("file_path", "pos")).parquet(dPath.toString)
       // row counts off the just-written footers — no second evaluation
       nDel = AvroManifests.scanDataDir(dPath, Seq.empty)
         .map(_.recordCount).sum
@@ -2998,10 +3003,12 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     * the copy-on-write locate/rewrite passes, and the MOR delete writers.
     *
     * Read plan: every dir is planned off its Avro manifest ([[planDir]]);
-    * all FLAT dirs sharing a physical schema read as ONE parquet relation,
-    * so a table costs one scan node per schema generation, not one per
+    * all dirs sharing a physical schema — file columns and partition
+    * columns — read as ONE relation over a [[ManifestFileIndex]], so a
+    * table costs one scan node per schema generation, not one per
     * snapshot directory (an append-only history of any depth plans one
-    * scan). Partitioned and pre-manifest dirs read on their own. The two
+    * scan, and building it lists and stats nothing). Pre-manifest dirs
+    * read on their own. The two
     * per-directory values a scan may need — the source-dir `tag` and the
     * equality-delete sequence — are one expression over
     * `_metadata.file_path` ([[DirSegment]]) shared by every frame.
@@ -3054,11 +3061,12 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
           case None    => d
         }
       }
-    val plans = dirs.flatMap(d => planDir(ns, table, d, fileFilter))
-    val flat = plans.collect { case Left(p) => p }
-    val grouped = flat.map(_._1).distinct.map { st =>
-      spark.read.schema(st)
-        .parquet(flat.filter(_._1 == st).flatMap(_._2): _*)
+    val plans = dirs.flatMap(d => planDir(ns, table, meta, d, fileFilter))
+    val planned = plans.collect { case Left(p) => p }
+    def shape(p: DirPlan) = (p.dataSchema, p.partitionSchema)
+    val grouped = planned.map(shape).distinct.map { case (ds, ps) =>
+      manifestRelation(DirPlan(ds, ps,
+        planned.filter(shape(_) == ((ds, ps))).flatMap(_.files)))
     }
     val frames = (grouped ++ plans.collect { case Right(df) => df })
       .map { raw =>
@@ -3096,8 +3104,7 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
       out = out.withColumn(SeqTag, coalesce(
         typedLit(manifestListSeqs(sn)).apply(dirOf), lit(Long.MaxValue)))
     if (posDels.nonEmpty) {
-      val pd = posDels.map(r => readFlatDir(
-          dataDir(ns, table).resolve(r.dir)))
+      val pd = posDels.map(deleteFrame(ns, table, meta, _))
         .reduce(_.unionByName(_))
       out = out.join(pd,
         out(PosFileTag) === pd("file_path") && out(PosPosTag) === pd("pos"),
@@ -3117,8 +3124,7 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
           else aliases.collectFirst {
             case (cur, olds) if olds.contains(c) => cur
           }.getOrElse(c))
-      val keys = aliasFix(readFlatDir(
-        dataDir(ns, table).resolve(r.dir)))
+      val keys = aliasFix(deleteFrame(ns, table, meta, r))
       val cond = names.map(c => out(c) === keys(c))
         .reduce(_ && _) && out(SeqTag) < lit(r.seq)
       out = out.join(keys, cond, "left_anti")
@@ -3150,22 +3156,21 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
                           declared: DataType): Column =
     SchemaShape.alignColumn(c, phys, declared)
 
-  /** Physical Spark schema of a catalog-written parquet file, read driver-
-    * side off the footer's `org.apache.spark.sql.parquet.row.metadata` key
-    * — the exact schema Spark's own inference returns for Spark-written
-    * files (inference prefers that key), WITHOUT the per-read one-task
-    * inference job (`ParquetFileFormat.mergeSchemasInParallel` →
-    * RDD.collect) whose closure-cleaning additionally gzips the full
-    * Hadoop Configuration on the driver — profiled at ~a third of q209's
-    * active driver samples. `asNullable` matches inference (file sources
-    * report every column nullable). Memoized per DIRECTORY — snapshot data
-    * dirs are write-once and homogeneous, so a dir's physical schema never
-    * changes; [[writeSnapshot]] seeds the memo for the flat dirs it writes,
-    * so their first read needs no footer open at all. Absent key
-    * (non-Spark writer) → None → callers fall back to the inference
-    * read. */
+  /** Physical Spark schema of a catalog-written snapshot DIRECTORY, read
+    * driver-side off one file's footer the way Spark's own inference
+    * reads it ([[ParquetFileFormat.readSchemaFromFooter]]: the
+    * `org.apache.spark.sql.parquet.row.metadata` key, else the parquet
+    * schema converted) — WITHOUT the per-read one-task inference job
+    * (`ParquetFileFormat.mergeSchemasInParallel` → RDD.collect) whose
+    * closure-cleaning additionally gzips the full Hadoop Configuration on
+    * the driver — profiled at ~a third of q209's active driver samples.
+    * `deepNullable` matches inference (file sources report every column
+    * nullable). Memoized per DIRECTORY — snapshot dirs are write-once and
+    * one write gives every file the same physical schema; [[writeSnapshot]]
+    * seeds the memo for the flat dirs it writes, so their first read needs
+    * no footer open at all. */
   private val fileSchemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[StructType]]
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]
 
   /** `DataType.asNullable` (private[sql]) replicated: file sources report
     * every column — and every nested field/element/value — nullable. */
@@ -3180,20 +3185,18 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     case other => other
   }
 
-  private def footerSparkSchema(firstFile: String): Option[StructType] =
-    fileSchemaMemo.computeIfAbsent(
-      Option(Path.of(firstFile).getParent).map(_.toString)
-        .getOrElse(firstFile), _ => scala.util.Try {
+  private def dirSchema(dir: Path, file: String): StructType =
+    fileSchemaMemo.computeIfAbsent(dir.toString, _ => {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(Path.of(firstFile).toUri),
-        new org.apache.hadoop.conf.Configuration())
+        new org.apache.hadoop.fs.Path(Path.of(file).toUri),
+        AvroManifests.hadoopConf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata"))
-        .map(j => deepNullable(DataType.fromJson(j))
-          .asInstanceOf[StructType])
-      finally r.close()
-    }.toOption.flatten)
+      val st = try ParquetFileFormat.readSchemaFromFooter(
+          new org.apache.parquet.hadoop.Footer(in.getPath, r.getFooter),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        finally r.close()
+      deepNullable(st).asInstanceOf[StructType]
+    })
 
   /** [[writeSnapshot]]'s memo seed: the physical schema of a freshly
     * written FLAT dir is exactly the written frame's schema (the footer's
@@ -3201,82 +3204,128 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     * source read. */
   private def seedDirSchema(dir: Path, written: StructType): Unit = {
     fileSchemaMemo.put(dir.toString,
-      Some(deepNullable(written).asInstanceOf[StructType]))
+      deepNullable(written).asInstanceOf[StructType])
     ()
   }
 
-  /** Read a catalog-written FLAT parquet directory (no partition subdirs —
-    * every delete-file dir and every unpartitioned data dir) with its
-    * physical schema supplied off one footer, skipping the per-read
-    * schema-inference job. Nested layouts or a missing Spark footer key
-    * fall back to the plain inference read unchanged. */
-  private def readFlatDir(path: Path): DataFrame = {
-    val first = scala.util.Try(scala.util.Using.resource(Files.list(path))(
-      _.iterator().asScala.find(
-        _.getFileName.toString.endsWith(".parquet")).map(_.toString)))
-      .toOption.flatten
-    first.flatMap(footerSparkSchema)
-      .map(spark.read.schema(_)).getOrElse(spark.read)
-      .parquet(path.toString)
-  }
+  /** Files of one physical schema as [[ManifestFileIndex]] entries — one
+    * snapshot dir's, or a group of dirs sharing the schema: `dataSchema`
+    * is what the files hold, `partitionSchema` the identity-partition
+    * columns their Hive `name=value` path segments carry instead. */
+  private case class DirPlan(dataSchema: StructType,
+                             partitionSchema: StructType,
+                             files: Seq[ManifestFileIndex.File])
 
-  /** One snapshot data dir's scan plan, off its Avro manifest (the per-
-    * file source of truth, as an Iceberg reader would): the exact data-
-    * file list after `fileFilter`, no directory listing — which is what
-    * makes manifest-level pruning possible without touching storage.
+  /** One snapshot dir's scan plan, off its Avro manifest (the per-file
+    * source of truth, as an Iceberg reader would): the exact file list
+    * after `fileFilter`, with each file's recorded size — no directory
+    * listing, no file stat — which is what makes manifest-level pruning
+    * possible without touching storage. Data and delete dirs plan alike.
     *
-    * `Left((schema, files))`: a FLAT dir whose physical schema comes off
-    * the footer key ([[footerSparkSchema]], no inference job) —
-    * [[scanWithDeletes]] reads every flat dir sharing that schema as one
-    * relation. `Right(frame)`: a dir that reads on its own with `basePath`
-    * partition inference — partitioned layouts, a flat dir without the
-    * Spark footer key, and a dir written before the manifest layer (no
-    * manifest yet — one materializes on the table's next write commit;
-    * it cannot prune, and the full read stays CORRECT: callers always
-    * re-apply the exact row-level bound). None: nothing to scan (every
-    * file pruned, or an empty partitioned write). */
-  private def planDir(ns: String, table: String, s: String,
-      fileFilter: Option[AvroManifests.DataFileEntry => Boolean])
-      : Option[Either[(StructType, Seq[String]), DataFrame]] = {
-    val dir = dataDir(ns, table).resolve(s).toString
+    * Partition columns come from the path segments between the dir and
+    * each file (the physical layout, which one write makes uniform
+    * across a dir), typed by the table column they name — directly, or
+    * through a former name ([[aliasesOf]]) — and parsed with
+    * [[ManifestPruning.identityParser]], the typing the SQL scan gives
+    * the same values. A segment naming no column (a transform's derived
+    * field, e.g. `ts_day`) is layout only: no read face returns it.
+    *
+    * `Right(frame)`: a dir written before the manifest layer (no manifest
+    * yet — one materializes on the table's next write commit) reads on
+    * its own with `basePath` partition inference; it cannot prune, and
+    * the full read stays CORRECT: callers always re-apply the exact
+    * row-level bound. None: nothing to scan (every file pruned, or an
+    * empty partitioned write). */
+  private def planDir(ns: String, table: String, meta: ObjectNode,
+                      s: String,
+                      fileFilter: Option[AvroManifests.DataFileEntry => Boolean])
+      : Option[Either[DirPlan, DataFrame]] = {
+    val dir = dataDir(ns, table).resolve(s)
     val mp = manifestPathFor(ns, table, s)
-    val rd = spark.read.option("basePath", dir)
-    if (!Files.exists(mp)) return Some(Right(rd.parquet(dir)))
-    val files = AvroManifests.readManifest(mp)
-      .filter(e => e.content == 0 && fileFilter.forall(_(e)))
-      .map(_.filePath)
-    if (files.isEmpty) return None
-    val flat = files.forall(f =>
-      Option(Path.of(f).getParent).exists(_.toString == dir))
-    if (flat) Some(footerSparkSchema(files.head) match {
-      case Some(st) => Left((st, files))
-      case None     => Right(rd.parquet(files: _*))
-    })
-    else {
-      // Partitioned dirs keep inference on their FIRST read — partition-
-      // column TYPES come from Spark's per-value path inference, which an
-      // explicit schema would have to replicate bit-for-bit — but the
-      // resolved schema is memoized per exact FILE SET (dirs are write-
-      // once, inference is deterministic), so repeat reads skip the job.
-      val key = dir + "::" + files.mkString(" ")
-      Option(fileSchemaMemo.get(key)).flatten match {
-        case Some(st) => Some(Right(rd.schema(st).parquet(files: _*)))
-        case None =>
-          val df = rd.parquet(files: _*) // resolves (one inference job)
-          fileSchemaMemo.put(key, Some(df.schema))
-          Some(Right(df))
-      }
+    if (!Files.exists(mp))
+      return Some(Right(spark.read.option("basePath", dir.toString)
+        .parquet(dir.toString)))
+    val entries = AvroManifests.readManifest(mp)
+      .filter(e => fileFilter.forall(_(e)))
+    if (entries.isEmpty) return None
+    def segments(e: AvroManifests.DataFileEntry): Seq[(String, String)] =
+      dir.relativize(Path.of(e.filePath)).iterator().asScala
+        .map(_.toString).toSeq.dropRight(1).collect {
+          case g if g.contains('=') =>
+            val (k, v) = g.splitAt(g.indexOf('='))
+            AvroManifests.unescape(k) -> AvroManifests.unescape(v.drop(1))
+        }
+    val partCols = segments(entries.head).map(_._1) match {
+      case Seq() => Nil
+      case keys =>
+        val schema = metaSchema(meta)
+        val aliases = aliasesOf(meta)
+        keys.flatMap { k =>
+          schema.find(_.name == k).orElse(aliases.collectFirst {
+            case (cur, olds) if olds.contains(k) => schema(cur)
+          }).map(c => StructField(k, c.dataType))
+        }
     }
+    val parsers = partCols.map(c =>
+      c.name -> ManifestPruning.identityParser(c.dataType)).toMap
+    val files = entries.map { e =>
+      lazy val vals = segments(e).toMap
+      ManifestFileIndex.File(ManifestFileIndex.qualify(e.filePath),
+        e.fileSizeInBytes, partCols.map(c => vals.get(c.name)
+          .filter(_ != "__HIVE_DEFAULT_PARTITION__")
+          .map(parsers(c.name)).orNull))
+    }
+    Some(Left(DirPlan(dirSchema(dir, entries.head.filePath),
+      StructType(partCols), files)))
   }
 
-  /** One dir as its own frame (the merge/upsert key read-back of a just-
-    * written dir). */
-  private def rawDirFrame(ns: String, table: String,
+  /** One relation over manifest-planned files of one physical schema:
+    * `LogicalRelation(HadoopFsRelation(ManifestFileIndex, …))`, the plan
+    * `spark.read.parquet` resolves to, minus its listing. */
+  private def manifestRelation(p: DirPlan): DataFrame =
+    org.apache.spark.sql.graft.GraftSqlBridge.ofRows(spark,
+      LogicalRelation(HadoopFsRelation(
+        new ManifestFileIndex(p.files, p.partitionSchema), p.partitionSchema,
+        p.dataSchema, None, new ParquetFileFormat, Map.empty)(spark),
+        isStreaming = false))
+
+  /** One dir as its own frame: the merge/upsert key read-back of a just-
+    * written dir, and every delete-file read. */
+  private def rawDirFrame(ns: String, table: String, meta: ObjectNode,
                           s: String): Option[DataFrame] =
-    planDir(ns, table, s, None).map {
-      case Left((st, files)) => spark.read.schema(st).parquet(files: _*)
-      case Right(df)         => df
+    planDir(ns, table, meta, s, None).map {
+      case Left(p)   => manifestRelation(p)
+      case Right(df) => df
     }
+
+  /** One catalog-written parquet file as a frame, planned like a
+    * manifest entry carrying its on-disk size (the rename's rewrite of a
+    * delete file whose manifest still names the old path). */
+  protected def fileFrame(file: Path): DataFrame =
+    manifestRelation(DirPlan(dirSchema(file.getParent, file.toString),
+      StructType(Nil), Seq(ManifestFileIndex.File(
+        ManifestFileIndex.qualify(file.toString), Files.size(file), Nil))))
+
+  /** A delete-file group's rows (a committed group always lists files). */
+  private def deleteFrame(ns: String, table: String, meta: ObjectNode,
+                          r: DeleteRef): DataFrame =
+    rawDirFrame(ns, table, meta, r.dir).getOrElse(
+      throw new IllegalStateException(
+        s"delete-file dir ${r.dir} of $ns.$table lists no files"))
+
+  /** Write a just-written data dir's manifest ahead of its commit (which
+    * then reuses it, as it reuses any existing manifest), so the dir reads
+    * back planned from its manifest like a committed one. Returns the
+    * entries. */
+  private def writeDirManifest(ns: String, table: String, meta: ObjectNode,
+                               dir: String)
+      : Seq[AvroManifests.DataFileEntry] = {
+    val pf = manifestPartitionFields(meta)
+    val es = AvroManifests.scanDataDir(dataDir(ns, table).resolve(dir), pf,
+      manifestStatFields(meta))
+    AvroManifests.writeManifest(manifestPathFor(ns, table, dir), es, pf)
+    es
+  }
 
   protected def deleteTree(dir: Path): Unit =
     if (Files.exists(dir)) {

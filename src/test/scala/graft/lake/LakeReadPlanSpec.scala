@@ -1,23 +1,32 @@
 package graft.lake
 
 import graft.TestSpark
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.DynamicPruningExpression
 import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.functions.{col, not}
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
-  StructField, StructType}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.functions.{col, lit, not}
+import org.apache.spark.sql.graft.GraftSqlBridge
+import org.apache.spark.sql.types.{DateType, DecimalType, IntegerType,
+  LongType, StringType, StructField, StructType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
-/** The snapshot read plan: every flat snapshot directory sharing a
+/** The snapshot read plan: every snapshot directory sharing a
   * physical schema reads as ONE parquet relation, so an append-only
   * table's plan does not grow with its history, while every read face
   * returns exactly the rows a per-directory read (one
   * `spark.read.parquet` per snapshot directory, the reference below)
   * returns — across evolution, deletes, layouts and time travel. Runs
-  * against both snapshot carriers. */
-class LakeReadPlanSpec extends AnyFunSuite {
+  * against both snapshot carriers. Relations plan from the manifest
+  * ([[ManifestFileIndex]]): building one lists nothing and launches no
+  * job, partition predicates prune exactly (also at run time), and the
+  * `_metadata` columns position deletes bind to keep Spark's values. */
+class LakeReadPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -131,10 +140,14 @@ class LakeReadPlanSpec extends AnyFunSuite {
   for (impl <- impls) {
     test(s"[${impl.name}] an append-only table plans ONE scan at any " +
       "depth; its read-back job count does not grow with history") {
-      val jobs = Seq(3, 12).map { depth =>
+      // 40 paths: above the 32-path threshold where a listing file index
+      // launches a parallel listing job; building a load launches none
+      val jobs = Seq(3, 40).map { depth =>
         val (cat, ns) = fresh(impl)
         appendOnly(cat, ns, depth)
-        val df = cat.load(ns, "t")
+        var df: DataFrame = null
+        assert(jobsOf { df = cat.load(ns, "t"); () } == 0,
+          s"building a load at depth $depth launched a job")
         assert(scans(df).size == 1,
           s"depth $depth planned ${scans(df).size} parquet scans")
         assert(scans(df).head.relation.location.inputFiles.length == depth)
@@ -144,7 +157,7 @@ class LakeReadPlanSpec extends AnyFunSuite {
         n
       }
       assert(jobs.head == jobs.last,
-        s"read-back jobs at depth 3 vs 12: ${jobs.mkString(" vs ")}")
+        s"read-back jobs at depth 3 vs 40: ${jobs.mkString(" vs ")}")
     }
 
     test(s"[${impl.name}] an added column reads as two schema groups, " +
@@ -236,8 +249,8 @@ class LakeReadPlanSpec extends AnyFunSuite {
       cat.append(ns, "t", batch(200, 6))
       val all = liveFiles(cat, ns)
       val df = cat.load(ns, "t")
-      // the flat dirs share one scan; each partitioned dir reads on its own
-      assert(scans(df).size == 3)
+      // the flat dirs share one scan, the partitioned dirs another
+      assert(scans(df).size == 2)
       assertSameRows(df, perDirRead(impl, cat, ns, all))
       // slice: manifest stats prune whole files before the row bound
       val slice = cat.loadSlice(ns, "t", "id", "100", "105")
@@ -285,5 +298,196 @@ class LakeReadPlanSpec extends AnyFunSuite {
       assert(cat.load(ns, "t").filter(col("id") === 1L).select("v")
         .as[String].collect().toSeq == Seq("back"))
     }
+
+    test(s"[${impl.name}] a second load of a cached snapshot reads from " +
+      "the cache") {
+      val (cat, ns) = fresh(impl)
+      appendOnly(cat, ns, 2)
+      cat.updatePartitionSpec(ns, "t", Seq("lang"))
+      cat.append(ns, "t", batch(100, 6))
+      val first = cat.load(ns, "t").cache()
+      try {
+        assert(first.count() == 26L)
+        val second = cat.load(ns, "t")
+        assert(second.queryExecution.withCachedData
+          .collect { case r: InMemoryRelation => r }.nonEmpty,
+          "second load did not match the cached plan")
+        assert(rowsOf(second, second.columns.toSeq) ==
+          rowsOf(first, first.columns.toSeq))
+      } finally first.unpersist()
+    }
+  }
+
+  private def dirCat(): (DirectoryLakeCatalog, String) = {
+    val (cat, ns) = fresh(impls.head)
+    (cat.asInstanceOf[DirectoryLakeCatalog], ns)
+  }
+
+  test("identity partitions of int, long, string, date, decimal and " +
+    "timestamp, nulls included: a partition predicate returns exactly " +
+    "the matching rows") {
+    val (cat, ns) = dirCat()
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("i", IntegerType), StructField("l", LongType),
+      StructField("s", StringType), StructField("d", DateType),
+      StructField("m", DecimalType(9, 2)),
+      StructField("ts", TimestampType)))
+    val parts = schema.fieldNames.toSeq.drop(1)
+    def value(c: Int, n: Int): Any =
+      if ((n + c) % 5 == 0) null
+      else c match {
+        case 0 => n % 3 - 1
+        case 1 => (n % 2) * 10000000000L
+        case 2 => Seq("a b", "x/y:z", "é")(n % 3)
+        case 3 => java.sql.Date.valueOf(s"2024-0${n % 2 + 1}-0${n % 3 + 1}")
+        case 4 => new java.math.BigDecimal(s"${n % 3 - 1}.5${n % 2}")
+        case _ => java.sql.Timestamp.valueOf(
+          s"2024-03-0${n % 2 + 1} 10:3${n % 3}:00.12345${n % 2}")
+      }
+    val rows = (0 until 12).map(n =>
+      Row.fromSeq(n.toLong +: parts.indices.map(value(_, n))))
+    val src = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1), schema)
+    cat.ensureTable(ns, "t", schema, parts)
+    cat.append(ns, "t", src.filter(col("id") < 6L))
+    cat.append(ns, "t", src.filter(col("id") >= 6L))
+    val df = cat.load(ns, "t")
+    assert(df.schema.map(f => f.name -> f.dataType) ==
+      schema.map(f => f.name -> f.dataType))
+    assert(scans(df).size == 1)
+    def ids(d: DataFrame): Seq[Long] =
+      d.select("id").as[Long].collect().toSeq.sorted
+    assert(ids(df) == (0L until 12L))
+    parts.zipWithIndex.foreach { case (c, i) =>
+      val present = rows.map(_.get(i + 1)).filter(_ != null).distinct
+      val preds: Seq[Column] = Seq(col(c).isNull, col(c).isNotNull,
+        col(c) === lit(present.head), col(c) > lit(present.head),
+        col(c).isin(present.take(2): _*))
+      preds.foreach { p =>
+        val got = df.filter(p)
+        assert(scans(got).head.partitionFilters.nonEmpty,
+          s"$p was not a partition filter")
+        assert(ids(got) == ids(src.filter(p)), s"rows of $p")
+      }
+    }
+  }
+
+  test("a join whose dimension side is filtered prunes fact files at run " +
+    "time (dynamic partition pruning through the index's listFiles)") {
+    val (cat, ns) = dirCat()
+    val fact = (0 until 40).map(i => (i.toLong, i % 4, s"v$i"))
+      .toDF("id", "k", "v").coalesce(1)
+    cat.ensureTable(ns, "f", fact.schema, Seq("k"))
+    cat.append(ns, "f", fact)
+    cat.append(ns, "f", fact)
+    val dim = Seq((0, "a"), (1, "b"), (2, "c"), (3, "d"))
+      .toDF("k", "name").coalesce(1)
+    cat.ensureTable(ns, "d", dim.schema)
+    cat.append(ns, "d", dim)
+    val joined = cat.load(ns, "f")
+      .join(cat.load(ns, "d").filter(col("name") === "b"), "k")
+    val got = joined.collect().map(_.getAs[Long]("id")).toSeq.sorted
+    assert(got == (0 until 40).filter(_ % 4 == 1).flatMap(i =>
+      Seq(i.toLong, i.toLong)).sorted)
+    val factScan = collect(joined.queryExecution.executedPlan) {
+      case s: FileSourceScanExec if s.relation.partitionSchema.nonEmpty => s
+    }
+    assert(factScan.size == 1)
+    assert(factScan.head.partitionFilters
+      .exists(_.isInstanceOf[DynamicPruningExpression]))
+    // 2 dirs x 4 partitions on disk; the run-time filter keeps k = 1
+    assert(factScan.head.metrics("numFiles").value == 2L)
+  }
+
+  test("_metadata: file_path is Spark's own, row_index drives position " +
+    "deletes, file_modification_time reads the epoch") {
+    val (cat, ns) = {
+      val root = Files.createTempDirectory("graft-readplan-")
+        .resolve("lake root")
+      Files.createDirectories(root)
+      (new DirectoryLakeCatalog(spark, root), freshNs())
+    }
+    appendOnly(cat, ns, 2)
+    cat.updatePartitionSpec(ns, "t", Seq("lang"))
+    cat.append(ns, "t", batch(100, 6))
+    val files = liveFiles(cat, ns)
+    val rels = cat.load(ns, "t").queryExecution.analyzed
+      .collect { case l: LogicalRelation => l }
+    assert(rels.size == 2)
+    val meta = rels.flatMap(l => GraftSqlBridge.ofRows(spark, l)
+      .select("_metadata.file_path", "_metadata.file_size",
+        "_metadata.file_modification_time").distinct().collect())
+    assert(meta.map(_.getString(0)).toSet == files.map(f =>
+      spark.read.parquet(f).select("_metadata.file_path").head()
+        .getString(0)).toSet)
+    assert(meta.forall(r => r.getLong(1) ==
+      Files.size(Paths.get(new java.net.URI(r.getString(0))))))
+    assert(meta.forall(_.getTimestamp(2) == new java.sql.Timestamp(0L)))
+    // a position delete names the physical row: the delete file's
+    // (file_path, pos) is the deleted id's row index in that file
+    assert(cat.deleteWhereMOR(ns, "t", col("id").isin(3L, 102L)) == 2L)
+    val dataRoot = impls.head.dataRoot(cat, ns, "t")
+    val delDir = scala.util.Using.resource(Files.list(dataRoot))(
+      _.iterator().asScala.find(_.getFileName.toString.startsWith("del-"))
+        .get)
+    val positions = spark.read.parquet(delDir.toString).collect()
+      .map(r => r.getString(0) -> r.getLong(1))
+    assert(positions.length == 2)
+    val deleted = positions.map { case (uri, pos) =>
+      spark.read.parquet(Paths.get(new java.net.URI(uri)).toString)
+        .select(col("id"), col("_metadata.row_index"))
+        .filter(col("row_index") === pos).head().getLong(0)
+    }
+    assert(deleted.toSet == Set(3L, 102L))
+    assert(cat.load(ns, "t").select("id").as[Long].collect().toSet ==
+      ((0L until 20L) ++ (100L until 106L)).toSet -- Set(3L, 102L))
+  }
+
+  test("renameTable rewrites position-delete files and their manifest " +
+    "sizes: load returns the same rows before and after") {
+    val (cat, ns) = dirCat()
+    appendOnly(cat, ns, 3)
+    cat.updatePartitionSpec(ns, "t", Seq("lang"))
+    cat.append(ns, "t", batch(100, 6))
+    assert(cat.deleteWhereMOR(ns, "t", col("id").isin(3L, 101L)) == 2L)
+    val cols = Seq("id", "v", "lang")
+    val before = rowsOf(cat.load(ns, "t"), cols)
+    assert(before.size == 34)
+    cat.renameTable(ns, "t", ns, "t_renamed")
+    assert(rowsOf(cat.load(ns, "t_renamed"), cols) == before)
+    // every manifest entry (data and delete) records its file's size
+    val md = cat.root.resolve(ns).resolve("t_renamed").resolve("metadata")
+    val entries = scala.util.Using.resource(Files.list(md))(
+      _.iterator().asScala.filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith("manifest-") && !n.startsWith("manifest-list-")
+      }.toSeq).flatMap(AvroManifests.readManifest)
+    assert(entries.exists(_.content == 1))
+    entries.foreach(e => assert(
+      Files.size(Paths.get(e.filePath)) == e.fileSizeInBytes, e.filePath))
+    // and every manifest-list record its manifest's length
+    val lists = scala.util.Using.resource(Files.list(md))(
+      _.iterator().asScala.filter(
+        _.getFileName.toString.startsWith("manifest-list-")).toSeq)
+      .flatMap(AvroManifests.readManifestList)
+    assert(lists.nonEmpty)
+    lists.foreach(l => assert(
+      Files.size(Paths.get(l.manifestPath)) == l.manifestLength,
+      l.manifestPath))
+  }
+
+  test("lake writes leave no _SUCCESS marker in snapshot or delete-file " +
+    "dirs") {
+    val (cat, ns) = dirCat()
+    appendOnly(cat, ns, 2)
+    cat.updatePartitionSpec(ns, "t", Seq("lang"))
+    cat.append(ns, "t", batch(100, 6))
+    assert(cat.deleteWhereMOR(ns, "t", col("id") === 3L) == 1L)
+    assert(cat.purgeKeysMOR(ns, "t", "id", Seq(4L).toDF("id")) == 1L)
+    val data = impls.head.dataRoot(cat, ns, "t")
+    val names = scala.util.Using.resource(Files.walk(data))(
+      _.iterator().asScala.map(_.getFileName.toString).toSeq)
+    assert(names.exists(_.startsWith("del-")))
+    assert(!names.exists(_.contains("_SUCCESS")))
   }
 }
