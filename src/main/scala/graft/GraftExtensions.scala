@@ -1,9 +1,9 @@
 package graft
 
-import graft.functions.{AnchorFingerprints, BinaryVecExpr, BpeCount, CharBigrams, CharClassEntropy, DHash64, IcebergBucket, IntVecDot, IntVecExprs, IntVecNearest, IntVecNorm2, IntVecQuant, NormMd5, RhpBucket, RollingFingerprint, ShingleMinHash, TokenSimHash, VecCosine, VecDot, WordShingles, ZOrder2}
+import graft.functions.TextHashExprs
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Spark extensions entry point — the idiomatic deployment route for the
   * engine's native expressions:
@@ -12,50 +12,18 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * injects `shingle_minhash`, `token_simhash`, `word_shingles`,
-  * `char_bigrams`, `rolling_fingerprint` into every session built with the
-  * conf — no imperative [[graft.functions.TextHashExprs.register]] call
-  * needed (that path remains for programmatic use).
+  * injects every function of [[graft.functions.TextHashExprs.sqlFunctions]]
+  * into every session built with it ([[graft.Session]] builds every graft
+  * session so), which makes [[graft.functions.TextHashExprs.register]] a
+  * no-op there; that call registers the same list on a session built
+  * without the extensions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  private def fn(name: String, builder: Seq[Expression] => Expression) =
-    (new FunctionIdentifier(name),
-      new ExpressionInfo("graft.functions", name),
-      builder)
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(fn("shingle_minhash", args => ShingleMinHash(args.head)))
-    ext.injectFunction(fn("token_simhash", args => TokenSimHash(args.head)))
-    ext.injectFunction(fn("word_shingles", args => WordShingles(args.head)))
-    ext.injectFunction(fn("char_bigrams", args => CharBigrams(args.head)))
-    ext.injectFunction(fn("rolling_fingerprint", args => RollingFingerprint(args.head)))
-    ext.injectFunction(fn("norm_md5", args => NormMd5(args.head)))
-    ext.injectFunction(fn("bpe_count", args => BpeCount(args.head)))
-    // keep this list a SUPERSET of TextHashExprs.register's:
-    // Tables.prepareSession skips the imperative registration when the
-    // probe function exists, so a name present there but missing here
-    // would be unresolvable in extension-built sessions (bit q113 once)
-    ext.injectFunction(fn("char_class_entropy",
-      args => CharClassEntropy(args.head)))
-    ext.injectFunction(fn("topgram_profile",
-      args => graft.functions.TopGramProfile(args.head)))
-    ext.injectFunction(fn("vec_dot", args => VecDot(args(0), args(1))))
-    ext.injectFunction(fn("vec_cosine", args => VecCosine(args(0), args(1))))
-    ext.injectFunction(fn("rhp_bucket", args =>
-      RhpBucket(args(0), BinaryVecExpr.foldableInt(args(1), "rhp_bucket"))))
-    ext.injectFunction(fn("zorder2", args => ZOrder2(args(0), args(1))))
-    ext.injectFunction(fn("dhash64", args => DHash64(args.head)))
-    ext.injectFunction(fn("anchor_fingerprints",
-      args => AnchorFingerprints(args.head)))
-    ext.injectFunction(fn("ivec_quant", args => IntVecQuant(args(0),
-      BinaryVecExpr.foldableInt(args(1), "ivec_quant"),
-      BinaryVecExpr.foldableInt(args(2), "ivec_quant"))))
-    ext.injectFunction(fn("ivec_dot", args => IntVecDot(args(0), args(1))))
-    ext.injectFunction(fn("ivec_norm2", args => IntVecNorm2(args(0))))
-    ext.injectFunction(fn("ivec_nearest", args => IntVecNearest(args(0),
-      IntVecExprs.foldableLongMatrix(args(1), "ivec_nearest"))))
-    ext.injectFunction(fn("iceberg_bucket", args => IcebergBucket(args(0),
-      BinaryVecExpr.foldableInt(args(1), "iceberg_bucket"))))
+    TextHashExprs.sqlFunctions.foreach { case (name, builder) =>
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo("graft.functions", name), builder))
+    }
     // the DSv2 catalog's composed-read substitution: lake tables whose
     // snapshot the native file scan cannot represent (MOR delete debt,
     // rename/promotion history) read through the library's proven plan

@@ -125,18 +125,13 @@ object GraftTarget {
     * sinks.py:43-65). S3/REST settings map to Hadoop/catalog conf so the same
     * config drives a real object-store deployment; harmless locally. */
   private def sparkFor(cfg: TargetConfig): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder0 = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft-target")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder = Session.builder().appName("graft-target")
+    sys.env.get("SPARK_GRAFT_MASTER").foreach(builder.master)
     // config -> fs.s3a.* (TargetConfig.s3aHadoopConf mirrors the
     // reference's FileIO wiring, sinks.py:55-65), as spark.hadoop.* so
     // executors inherit it
-    val builder = cfg.s3aHadoopConf.foldLeft(builder0) {
-      case (b, (k, v)) => b.config(s"spark.hadoop.$k", v)
+    cfg.s3aHadoopConf.foreach { case (k, v) =>
+      builder.config(s"spark.hadoop.$k", v)
     }
     // The default in-memory catalog forgets tables when the process exits, so
     // a SECOND CLI run would try CREATE over the existing location and fail.

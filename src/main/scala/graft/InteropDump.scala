@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, length, lit}
 
 import java.nio.file.Paths
@@ -31,15 +30,7 @@ import java.nio.file.Paths
 object InteropDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outRoot) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val cat = new graft.lake.DirectoryLakeCatalog(spark,
       Paths.get(outRoot, "warehouse"))

@@ -1,7 +1,6 @@
 package graft
 
 import graft.lake.{BatchLoader, SessionLakeCatalog}
-import org.apache.spark.sql.SparkSession
 
 /** Load-path throughput: synthesize a Singer feed of N records
   * (events-shaped payloads) and drive it through the full
@@ -28,15 +27,10 @@ object LoadBench {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(200000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val wh = java.nio.file.Files.createTempDirectory("graft-loadbench").toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = Session.builder()
       .appName("graft-loadbench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -158,13 +157,4 @@ object IcebergBucket {
 
   def bucketBytes(b: Array[Byte], n: Int): Int =
     (hashBytes(b) & Int.MaxValue) % n
-
-  /** Idempotent per-session SQL registration (the [[TextHashExprs]]
-    * pattern); [[graft.GraftExtensions]] injects it too. */
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "iceberg_bucket",
-      (args: Seq[Expression]) => IcebergBucket(args(0),
-        BinaryVecExpr.foldableInt(args(1), "iceberg_bucket")),
-      "built-in")
 }

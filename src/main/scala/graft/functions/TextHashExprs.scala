@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -23,51 +24,45 @@ import java.security.MessageDigest
   * compose with `expr(...)` like any built-in.
   */
 object TextHashExprs {
-  /** Idempotent per-session registration. */
+  /** Every graft SQL function, name -> builder: the one list that
+    * [[graft.GraftExtensions]] injects and [[register]] registers. */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "shingle_minhash" -> (args => ShingleMinHash(args.head)),
+    "char_bigrams" -> (args => CharBigrams(args.head)),
+    "rolling_fingerprint" -> (args => RollingFingerprint(args.head)),
+    "token_simhash" -> (args => TokenSimHash(args.head)),
+    "norm_md5" -> (args => NormMd5(args.head)),
+    "bpe_count" -> (args => BpeCount(args.head)),
+    "char_class_entropy" -> (args => CharClassEntropy(args.head)),
+    "word_shingles" -> (args => WordShingles(args.head)),
+    "topgram_profile" -> (args => TopGramProfile(args.head)),
+    "vec_dot" -> (args => VecDot(args(0), args(1))),
+    "vec_cosine" -> (args => VecCosine(args(0), args(1))),
+    "rhp_bucket" -> (args => RhpBucket(args(0),
+      BinaryVecExpr.foldableInt(args(1), "rhp_bucket"))),
+    "zorder2" -> (args => ZOrder2(args(0), args(1))),
+    "dhash64" -> (args => DHash64(args.head)),
+    "anchor_fingerprints" -> (args => AnchorFingerprints(args.head)),
+    "ivec_quant" -> (args => IntVecQuant(args(0),
+      BinaryVecExpr.foldableInt(args(1), "ivec_quant"),
+      BinaryVecExpr.foldableInt(args(2), "ivec_quant"))),
+    "ivec_dot" -> (args => IntVecDot(args(0), args(1))),
+    "ivec_norm2" -> (args => IntVecNorm2(args(0))),
+    "ivec_nearest" -> (args => IntVecNearest(args(0),
+      IntVecExprs.foldableLongMatrix(args(1), "ivec_nearest"))),
+    "iceberg_bucket" -> (args => IcebergBucket(args(0),
+      BinaryVecExpr.foldableInt(args(1), "iceberg_bucket"))))
+
+  /** Registers each of [[sqlFunctions]] the session's registry lacks, so
+    * on a session built with [[graft.GraftExtensions]] it does nothing.
+    * Idempotent; call it per session (a cloned session has its own
+    * registry). */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("shingle_minhash",
-      (args: Seq[Expression]) => ShingleMinHash(args.head), "built-in")
-    reg.createOrReplaceTempFunction("char_bigrams",
-      (args: Seq[Expression]) => CharBigrams(args.head), "built-in")
-    reg.createOrReplaceTempFunction("rolling_fingerprint",
-      (args: Seq[Expression]) => RollingFingerprint(args.head), "built-in")
-    reg.createOrReplaceTempFunction("token_simhash",
-      (args: Seq[Expression]) => TokenSimHash(args.head), "built-in")
-    reg.createOrReplaceTempFunction("norm_md5",
-      (args: Seq[Expression]) => NormMd5(args.head), "built-in")
-    reg.createOrReplaceTempFunction("bpe_count",
-      (args: Seq[Expression]) => BpeCount(args.head), "built-in")
-    reg.createOrReplaceTempFunction("char_class_entropy",
-      (args: Seq[Expression]) => CharClassEntropy(args.head), "built-in")
-    reg.createOrReplaceTempFunction("word_shingles",
-      (args: Seq[Expression]) => WordShingles(args.head), "built-in")
-    reg.createOrReplaceTempFunction("topgram_profile",
-      (args: Seq[Expression]) => TopGramProfile(args.head), "built-in")
-    reg.createOrReplaceTempFunction("vec_dot",
-      (args: Seq[Expression]) => VecDot(args(0), args(1)), "built-in")
-    reg.createOrReplaceTempFunction("vec_cosine",
-      (args: Seq[Expression]) => VecCosine(args(0), args(1)), "built-in")
-    reg.createOrReplaceTempFunction("rhp_bucket",
-      (args: Seq[Expression]) => RhpBucket(args(0),
-        BinaryVecExpr.foldableInt(args(1), "rhp_bucket")), "built-in")
-    reg.createOrReplaceTempFunction("zorder2",
-      (args: Seq[Expression]) => ZOrder2(args(0), args(1)), "built-in")
-    reg.createOrReplaceTempFunction("dhash64",
-      (args: Seq[Expression]) => DHash64(args.head), "built-in")
-    reg.createOrReplaceTempFunction("anchor_fingerprints",
-      (args: Seq[Expression]) => AnchorFingerprints(args.head), "built-in")
-    reg.createOrReplaceTempFunction("ivec_quant",
-      (args: Seq[Expression]) => IntVecQuant(args(0),
-        BinaryVecExpr.foldableInt(args(1), "ivec_quant"),
-        BinaryVecExpr.foldableInt(args(2), "ivec_quant")), "built-in")
-    reg.createOrReplaceTempFunction("ivec_dot",
-      (args: Seq[Expression]) => IntVecDot(args(0), args(1)), "built-in")
-    reg.createOrReplaceTempFunction("ivec_norm2",
-      (args: Seq[Expression]) => IntVecNorm2(args(0)), "built-in")
-    reg.createOrReplaceTempFunction("ivec_nearest",
-      (args: Seq[Expression]) => IntVecNearest(args(0),
-        IntVecExprs.foldableLongMatrix(args(1), "ivec_nearest")), "built-in")
+    sqlFunctions.foreach { case (name, builder) =>
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 
   private[functions] def md5PrefixLong(md: MessageDigest, s: String,

@@ -411,7 +411,8 @@ object ManifestPruning {
 
   /** The writer's per-value partition derivation: a Catalyst value of
     * `srcType` -> its (unescaped) Hive path value under `transform` —
-    * identity values as strings (dates ISO), [[TimePattern]] for
+    * identity values as strings (dates ISO, timestamps as Spark casts
+    * them in `zone`), [[TimePattern]] for
     * day/month/hour/year (a timestamptz in `zone`, a wall-clock NTZ or
     * date as is), `substring` / `v - pmod(v, W)` for truncate, the spec
     * murmur3 for bucket. The streaming fanout writer derives every row
@@ -444,6 +445,12 @@ object ManifestPruning {
       case "identity" => srcType match {
         case DateType => raw => java.time.LocalDate
           .ofEpochDay(raw.asInstanceOf[Int].toLong).toString
+        case TimestampType | TimestampNTZType =>
+          // the batch writer's `Cast(v AS STRING)` in the session zone:
+          // the string identityParser casts back
+          val cast = Cast(BoundReference(0, srcType, nullable = true),
+            StringType, Some(zone.getId))
+          raw => cast.eval(InternalRow(raw)).toString
         case _ => raw => raw.toString
       }
       case t if TimePattern.contains(t) =>

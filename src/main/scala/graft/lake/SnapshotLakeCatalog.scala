@@ -1163,7 +1163,7 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     // bucket[N] derives resolve against the FRAME's session registry (a
     // foreachBatch epoch's frame lives in a cloned session)
     if (layout.exists(_._2.isDefined))
-      graft.functions.IcebergBucket.ensureRegistered(df.sparkSession)
+      graft.functions.TextHashExprs.register(df.sparkSession)
     val snapName = s"snap-${System.nanoTime()}-${java.util.UUID.randomUUID()}"
     val dir = dataDir(ns, table).resolve(snapName)
     val withDerived = layout.foldLeft(df) {

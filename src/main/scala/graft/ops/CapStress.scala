@@ -40,14 +40,7 @@ object CapStress {
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
     val work = args.lift(2).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-capstress").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-capstress")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Session.builder().appName("graft-capstress")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

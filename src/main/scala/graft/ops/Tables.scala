@@ -25,7 +25,7 @@ object Tables {
     * that beats silently overriding the session). Explicit-vs-default is
     * `sessionState.conf.contains` — `conf.getOption` returns the DEFAULT for
     * registered entries, so it cannot make this distinction. Also registers
-    * the native text-hash expressions used by Dedup/TextOps. */
+    * graft's SQL functions the session lacks. */
   def prepareSession(spark: SparkSession): Unit = {
     // date/epoch queries agree with the (UTC) DuckDB oracle unless the user
     // explicitly pinned another zone
@@ -35,9 +35,7 @@ object Tables {
     // no-op for the MICROS layout, which has no nanos columns)
     if (!spark.sessionState.conf.contains("spark.sql.legacy.parquet.nanosAsLong"))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if (!spark.sessionState.functionRegistry
-        .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("shingle_minhash")))
-      graft.functions.TextHashExprs.register(spark)
+    graft.functions.TextHashExprs.register(spark)
   }
 
   /** A star-schema parquet read. A bare `spark.read.parquet(path)` runs a
@@ -96,8 +94,8 @@ object Tables {
     import org.apache.spark.sql.functions._
     // Two driver layouts normalize to one TimestampType shape:
     //  - NANOS: Spark rejects TIMESTAMP(NANOS) outright (PARQUET_TYPE_ILLEGAL);
-    //    the supported route is nanosAsLong (set at session build in Verify/
-    //    Bench/TestSpark, pinned by prepareSession only when unset), then
+    //    the supported route is nanosAsLong (set at session build by
+    //    graft.Session, pinned by prepareSession only when unset), then
     //    Long nanos -> micros here.
     //  - MICROS NTZ: inferTimestampNTZ reads isAdjustedToUTC=false as
     //    TIMESTAMP_NTZ; cast to TimestampType under the UTC session keeps the

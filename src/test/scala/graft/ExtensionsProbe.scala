@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Forked-JVM probe for [[GraftExtensionsSpec]]: builds the JVM's FIRST
   * session with `spark.sql.extensions=graft.GraftExtensions` — the only
-  * moment extensions can apply — and exercises the injected functions.
+  * moment extensions can apply — checks that every function of the one
+  * list resolves and exercises some of them.
   * Prints `EXT_OK` and exits 0 on success; any failure exits nonzero. */
 object ExtensionsProbe {
   def main(args: Array[String]): Unit = {
@@ -23,6 +24,11 @@ object ExtensionsProbe {
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     try {
+      val reg = s.sessionState.functionRegistry
+      val missing = graft.functions.TextHashExprs.sqlFunctions.map(_._1)
+        .filterNot(n => reg.functionExists(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+      require(missing.isEmpty, s"not injected: ${missing.mkString(", ")}")
       val r = s.sql(
         "SELECT size(shingle_minhash('a b c d')) AS n, token_simhash('x y') AS sh")
         .head()

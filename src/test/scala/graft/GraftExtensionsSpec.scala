@@ -31,4 +31,21 @@ class GraftExtensionsSpec extends AnyFunSuite {
       s"extensions probe failed (exit ${p.exitValue()}):\n" +
         out.linesIterator.toSeq.takeRight(30).mkString("\n"))
   }
+
+  test("register restores the names a session's registry lacks, " +
+    "iceberg_bucket included") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val s = TestSpark.spark.newSession()
+    val reg = s.sessionState.functionRegistry
+    val dropped = Seq("iceberg_bucket", "shingle_minhash")
+    dropped.foreach(n => assert(reg.dropFunction(FunctionIdentifier(n)), n))
+    graft.functions.TextHashExprs.register(s)
+    val missing = graft.functions.TextHashExprs.sqlFunctions.map(_._1)
+      .filterNot(n => reg.functionExists(FunctionIdentifier(n)))
+    assert(missing.isEmpty, s"not registered: $missing")
+    val r = s.sql("SELECT iceberg_bucket(34, 16), " +
+      "size(shingle_minhash('a b c d'))").head()
+    assert(r.getInt(0) == 2017239379 % 16 &&
+      r.getInt(1) == graft.ops.Dedup.NumHashes)
+  }
 }

@@ -3,21 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (spark_guide.md: one session per
-  * suite; sharing across suites in the forked test JVM is cheaper still). */
+  * suite; sharing across suites in the forked test JVM is cheaper still),
+  * built by the production factory so test and entry-point sessions share
+  * one configuration. */
 object TestSpark {
   lazy val spark: SparkSession = {
     val wh = java.nio.file.Files.createTempDirectory("graft-wh").toString
-    SparkSession.builder()
-      .master("local[4]")
+    Session.builder(cpus = 4)
       .appName("graft-test")
-      .withExtensions(new GraftExtensions()(_))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
-      // storage-partitioned joins over the DSv2 catalog's bucket layout
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
       .getOrCreate()
   }
 }

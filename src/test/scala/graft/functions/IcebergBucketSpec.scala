@@ -38,7 +38,7 @@ class IcebergBucketSpec extends AnyFunSuite {
     // -653330422 & MaxValue = 1494153226; % 16 = spec-predictable
     assert(IcebergBucket.bucketLong(17486L, 16) ==
       ((-653330422 & Int.MaxValue) % 16))
-    IcebergBucket.ensureRegistered(spark)
+    TextHashExprs.register(spark)
     val row = Seq((34, 34L, "iceberg")).toDF("i", "l", "s")
       .select(
         expr("iceberg_bucket(i, 16)").as("bi"),
@@ -56,7 +56,7 @@ class IcebergBucketSpec extends AnyFunSuite {
 
   test("null in -> null out; unsupported types and bad N refused at " +
     "analysis") {
-    IcebergBucket.ensureRegistered(spark)
+    TextHashExprs.register(spark)
     val r = Seq((Option.empty[Long], 1L)).toDF("x", "y")
       .select(expr("iceberg_bucket(x, 8)")).head()
     assert(r.isNullAt(0))

@@ -1432,4 +1432,34 @@ class TextOpsSpec extends AnyFunSuite {
         "window sees a leaf not behind an aggregate:\n" + w.toString.take(1500))
     }
   }
+
+  test("on an extensions-built session, TextOps and Dedup construction " +
+    "logs no function-registry warning") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import spark.implicits._
+    val logger = LogManager.getLogger(
+      spark.sessionState.functionRegistry.getClass.getName)
+      .asInstanceOf[CoreLogger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-registry-capture", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    logger.addAppender(capture)
+    try {
+      val docs = Seq((1L, "a b c d e"), (2L, "a b c d f")).toDF("doc_id", "text")
+      TextOps.topGramProfileOf(docs)
+      Dedup.dedupWithinBatch(spark, docs)
+      TextOps.q30QualityScore(spark, sf)
+    } finally {
+      logger.removeAppender(capture)
+      capture.stop()
+    }
+    assert(seen.isEmpty, seen.toString)
+  }
 }

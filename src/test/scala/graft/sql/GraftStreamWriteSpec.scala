@@ -156,6 +156,40 @@ class GraftStreamWriteSpec extends AnyFunSuite {
         p.split("/").filter(_.contains("=")).mkString("/")
       }.map { case (k, vs) => k -> vs.map(_._2).sum }
 
+  test("identity(ts) targets stream in the batch writer's layout: " +
+    "timestamptz and ntz read back exactly with ANSI on and off") {
+    for ((tpe, sfx) <- Seq("TIMESTAMP" -> "tz", "TIMESTAMP_NTZ" -> "ntz")) {
+      val src = s"$cat.s.isrc$sfx"; val dst = s"$cat.s.idst$sfx"
+      val batch = s"$cat.s.ibat$sfx"
+      spark.sql(s"CREATE TABLE $src (id BIGINT, ts $tpe)")
+      spark.sql(s"INSERT INTO $src VALUES (1, $tpe'2023-11-14 22:13:20'), " +
+        s"(2, $tpe'2023-11-14 22:13:20.123456'), " +
+        s"(3, $tpe'1969-12-31 23:59:59.999999'), (4, NULL)")
+      Seq(dst, batch).foreach(t =>
+        spark.sql(s"CREATE TABLE $t (id BIGINT, ts $tpe) PARTITIONED BY (ts)"))
+      spark.readStream.table(src)
+        .writeStream.option("checkpointLocation",
+          Files.createTempDirectory(s"ckpt-ident-$sfx-").toString)
+        .trigger(Trigger.AvailableNow()).toTable(dst)
+        .awaitTermination()
+      spark.sql(s"INSERT INTO $batch SELECT id, ts FROM $src")
+      assert(layoutOf(s"idst$sfx") == layoutOf(s"ibat$sfx"),
+        s"$tpe: streamed ${layoutOf(s"idst$sfx")} != batch " +
+          s"${layoutOf(s"ibat$sfx")}")
+      val want = spark.sql(s"SELECT id, ts FROM $src ORDER BY id")
+        .collect().toSeq
+      assert(want.length == 4)
+      val ansi0 = spark.conf.get("spark.sql.ansi.enabled")
+      try Seq("true", "false").foreach { ansi =>
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        assert(spark.sql(s"SELECT id, ts FROM $dst ORDER BY id").collect()
+          .toSeq == want, s"$tpe SQL scan, ansi=$ansi")
+        assert(lake.load("s", s"idst$sfx").select("id", "ts").orderBy("id")
+          .collect().toSeq == want, s"$tpe load, ansi=$ansi")
+      } finally spark.conf.set("spark.sql.ansi.enabled", ansi0)
+    }
+  }
+
   test("transform-partitioned targets stream through the fanout derive: " +
     "days(ts) + bucket(N,id) layouts are byte-identical to the batch " +
     "writer's") {
