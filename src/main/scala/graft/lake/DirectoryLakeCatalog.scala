@@ -108,6 +108,7 @@ class DirectoryLakeCatalog(spark: SparkSession, val root: Path)
       .map(_.dir).toSeq.distinct
 
     Files.move(oldRoot, newRoot)
+    forgetDirSchemas(oldRoot)
     val newPrefix = newRoot.toString
     val md = newRoot.resolve("metadata")
 

@@ -1,7 +1,7 @@
 package graft.lake
 
 import graft.functions.IcebergBucket
-import graft.lake.SnapshotLakeCatalog.{PartField, SqlDataFile}
+import graft.lake.SnapshotLakeCatalog.PartField
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Literal}
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
@@ -72,13 +72,14 @@ final class ManifestPruning(schema: StructType, fields: Seq[PartField],
       }))
     }
 
-  /** May this file match? Each comparison must survive BOTH the
-    * partition-tuple tier and the column-bounds tier, so an `Or` whose
-    * branches are disproved by different tiers still prunes. Each
+  /** May this manifest entry's file match? Each comparison must survive
+    * BOTH the partition-tuple tier and the column-bounds tier, so an `Or`
+    * whose branches are disproved by different tiers still prunes. Each
     * partition value parses, and each column's bounds decode, once per
     * file however many comparisons read them (an `In` is one per
     * value). */
-  def fileCanMatch(f: SqlDataFile): Boolean = {
+  def fileCanMatch(f: AvroManifests.DataFileEntry): Boolean = {
+    val partition = f.partition.toMap
     val keys = mutable.HashMap.empty[String, Option[Any]]
     val bounds = mutable.HashMap.empty[Int, (Option[Any], Option[Any])]
     def key(pf: PartField, s: String): Option[Any] =
@@ -89,14 +90,14 @@ final class ManifestPruning(schema: StructType, fields: Seq[PartField],
     def colBounds(c: Cmp) = bounds.getOrElseUpdate(c.id, {
       def side(bs: Seq[(Int, Array[Byte])]): Option[Any] =
         bs.collectFirst { case (c.id, b) => b }.flatMap(boundValue(c.dt, _))
-      (side(f.lower), side(f.upper))
+      (side(f.lowerBounds), side(f.upperBounds))
     })
     preds.forall(eval(_,
-      c => partitionLeaf(c, f.partition.get, key) &&
-        boundsLeaf(c, colBounds(c), f.nan),
+      c => partitionLeaf(c, partition.get, key) &&
+        boundsLeaf(c, colBounds(c), f.nanValueCounts),
       {
         case Nullness(fs, isNull) => fs.forall(pf =>
-          f.partition.get(pf.specName).forall(_.isEmpty == isNull))
+          partition.get(pf.specName).forall(_.isEmpty == isNull))
         case _ => true
       }))
   }

@@ -1541,8 +1541,7 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     * batch scan's [[sqlScanState]] flips to composed. */
   private[graft] def sqlAppendSlice(ns: String, table: String,
       fromId: Long, toId: Long, skipDeletes: Boolean,
-      skipOverwrites: Boolean): Seq[SnapshotLakeCatalog.SqlDataFile] = {
-    import SnapshotLakeCatalog.SqlDataFile
+      skipOverwrites: Boolean): Seq[ManifestFileIndex.File] = {
     val meta = readMeta(ns, table)
     require(meta.get("schemas").size() <= 1,
       s"$ns.$table carries schema evolution history — the streaming " +
@@ -1555,6 +1554,7 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
         "restart the stream")
     val byId = meta.get("snapshots").elements().asScala
       .map(s => s.get("snapshot-id").asLong() -> s).toMap
+    val partitionSchema = sqlPartitionSchema(specFields(meta))
     snapshotChain(ns, table, meta, fromId, toId).flatMap { sn =>
       val op = sn.get("operation").asText()
       val stream = op match {
@@ -1583,14 +1583,11 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
           .map(_.asLong()).flatMap(byId.get)
           .map(liveDirsOf).getOrElse(Seq.empty).toSet
         liveDirsOf(sn).filterNot(parentLive.contains).flatMap { d =>
-          val mp = manifestPathFor(ns, table, d)
-          require(Files.exists(mp),
+          require(Files.exists(manifestPathFor(ns, table, d)),
             s"streaming read of $ns.$table: directory $d predates " +
               "manifests — rewrite the table (compact()) and restart " +
               "the stream")
-          val base = dataDir(ns, table).resolve(d)
-          AvroManifests.readManifest(mp).filter(_.content == 0)
-            .map(e => SqlDataFile.of(base.resolve(e.filePath).toString, e))
+          sqlDirFiles(ns, table, meta, d, partitionSchema)
         }
       }
     }
@@ -2532,9 +2529,8 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     // bounds before any per-dir manifest is read
     val sums = manifestListSummaries(meta, sn)
     val dirs = liveDirsOf(sn).filter(d => pruning.dirCanMatch(sums.get(d)))
-    scanWithDeletes(ns, table, meta, sn, dirs, fileFilter = Some(e =>
-      pruning.fileCanMatch(SnapshotLakeCatalog.SqlDataFile.of(
-        e.filePath, e)))).filter(rowBound)
+    scanWithDeletes(ns, table, meta, sn, dirs,
+      fileFilter = Some(pruning.fileCanMatch)).filter(rowBound)
   }
 
   /** Delete-file DEBT report — one row per delete-file group of the
@@ -3096,9 +3092,19 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     * nullable). Memoized per DIRECTORY — snapshot dirs are write-once and
     * one write gives every file the same physical schema; [[writeSnapshot]]
     * seeds the memo for the flat dirs it writes, so their first read needs
-    * no footer open at all. */
+    * no footer open at all. Entries leave with their dirs
+    * ([[forgetDirSchemas]]), so the memo holds at most the dirs on disk. */
   private val fileSchemaMemo =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]
+
+  /** Drop the memoized schemas of every dir at or under `root`: dirs
+    * leave through [[deleteTree]], or move with a renamed table. */
+  protected def forgetDirSchemas(root: Path): Unit = {
+    fileSchemaMemo.keySet.removeIf(k => Path.of(k).startsWith(root))
+    ()
+  }
+
+  private[lake] def fileSchemaMemoSize: Int = fileSchemaMemo.size
 
   /** `DataType.asNullable` (private[sql]) replicated: file sources report
     * every column — and every nested field/element/value — nullable. */
@@ -3144,19 +3150,60 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
                              partitionSchema: StructType,
                              files: Seq[ManifestFileIndex.File])
 
-  /** One snapshot dir's scan plan, off its Avro manifest (the per-file
-    * source of truth, as an Iceberg reader would): the exact file list
-    * after `fileFilter`, with each file's recorded size — no directory
-    * listing, no file stat — which is what makes manifest-level pruning
-    * possible without touching storage. Data and delete dirs plan alike.
+  /** One snapshot dir's files off its Avro manifest — the one loader
+    * every read face plans from: the library relations ([[planDir]]), the
+    * SQL scan ([[sqlScanState]]) and the micro-batch stream
+    * ([[sqlAppendSlice]]). Each entry that passes `fileFilter` comes with
+    * its identity-partition values; nothing is listed, stat'ed or opened
+    * (the manifest is the file list, as for an Iceberg reader), which is
+    * what makes manifest-level pruning possible without touching storage.
+    * Data and delete dirs load alike.
     *
     * Partition columns come from the path segments between the dir and
     * each file (the physical layout, which one write makes uniform
-    * across a dir), typed by the table column they name — directly, or
+    * across a dir; the commit parses the manifest tuple from the same
+    * segments), typed by the table column they name — directly, or
     * through a former name ([[aliasesOf]]) — and parsed with
-    * [[ManifestPruning.identityParser]], the typing the SQL scan gives
-    * the same values. A segment naming no column (a transform's derived
-    * field, e.g. `ts_day`) is layout only: no read face returns it.
+    * [[ManifestPruning.identityParser]]. A segment naming no column (a
+    * transform's derived field, e.g. `ts_day`) is layout only: no read
+    * face returns it. Returns the dir's partition schema and its files. */
+  private def manifestFiles(ns: String, table: String, meta: ObjectNode,
+      s: String,
+      fileFilter: Option[AvroManifests.DataFileEntry => Boolean] = None)
+      : (StructType, Seq[ManifestFileIndex.File]) = {
+    val dir = dataDir(ns, table).resolve(s)
+    val entries = AvroManifests.readManifest(manifestPathFor(ns, table, s))
+      .filter(e => fileFilter.forall(_(e)))
+    def segments(e: AvroManifests.DataFileEntry): Seq[(String, String)] =
+      dir.relativize(Path.of(e.filePath)).iterator().asScala
+        .map(_.toString).toSeq.dropRight(1).collect {
+          case g if g.contains('=') =>
+            val (k, v) = g.splitAt(g.indexOf('='))
+            AvroManifests.unescape(k) -> AvroManifests.unescape(v.drop(1))
+        }
+    val partCols = entries.headOption.map(segments(_).map(_._1)) match {
+      case None | Some(Seq()) => Nil
+      case Some(keys) =>
+        val schema = metaSchema(meta)
+        val aliases = aliasesOf(meta)
+        keys.flatMap { k =>
+          schema.find(_.name == k).orElse(aliases.collectFirst {
+            case (cur, olds) if olds.contains(k) => schema(cur)
+          }).map(c => StructField(k, c.dataType))
+        }
+    }
+    val parsers = partCols.map(c =>
+      c.name -> ManifestPruning.identityParser(c.dataType)).toMap
+    (StructType(partCols), entries.map { e =>
+      lazy val vals = segments(e).toMap
+      ManifestFileIndex.File(e, partCols.map(c => vals.get(c.name)
+        .filter(_ != "__HIVE_DEFAULT_PARTITION__")
+        .map(parsers(c.name)).orNull))
+    })
+  }
+
+  /** One snapshot dir's scan plan: its [[manifestFiles]] after
+    * `fileFilter`, with the files' physical schema ([[dirSchema]]).
     *
     * `Right(frame)`: a dir written before the manifest layer (no manifest
     * yet — one materializes on the table's next write commit) reads on
@@ -3169,42 +3216,13 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
                       fileFilter: Option[AvroManifests.DataFileEntry => Boolean])
       : Option[Either[DirPlan, DataFrame]] = {
     val dir = dataDir(ns, table).resolve(s)
-    val mp = manifestPathFor(ns, table, s)
-    if (!Files.exists(mp))
+    if (!Files.exists(manifestPathFor(ns, table, s)))
       return Some(Right(spark.read.option("basePath", dir.toString)
         .parquet(dir.toString)))
-    val entries = AvroManifests.readManifest(mp)
-      .filter(e => fileFilter.forall(_(e)))
-    if (entries.isEmpty) return None
-    def segments(e: AvroManifests.DataFileEntry): Seq[(String, String)] =
-      dir.relativize(Path.of(e.filePath)).iterator().asScala
-        .map(_.toString).toSeq.dropRight(1).collect {
-          case g if g.contains('=') =>
-            val (k, v) = g.splitAt(g.indexOf('='))
-            AvroManifests.unescape(k) -> AvroManifests.unescape(v.drop(1))
-        }
-    val partCols = segments(entries.head).map(_._1) match {
-      case Seq() => Nil
-      case keys =>
-        val schema = metaSchema(meta)
-        val aliases = aliasesOf(meta)
-        keys.flatMap { k =>
-          schema.find(_.name == k).orElse(aliases.collectFirst {
-            case (cur, olds) if olds.contains(k) => schema(cur)
-          }).map(c => StructField(k, c.dataType))
-        }
-    }
-    val parsers = partCols.map(c =>
-      c.name -> ManifestPruning.identityParser(c.dataType)).toMap
-    val files = entries.map { e =>
-      lazy val vals = segments(e).toMap
-      ManifestFileIndex.File(ManifestFileIndex.qualify(e.filePath),
-        e.fileSizeInBytes, partCols.map(c => vals.get(c.name)
-          .filter(_ != "__HIVE_DEFAULT_PARTITION__")
-          .map(parsers(c.name)).orNull))
-    }
-    Some(Left(DirPlan(dirSchema(dir, entries.head.filePath),
-      StructType(partCols), files)))
+    val (partitionSchema, files) =
+      manifestFiles(ns, table, meta, s, fileFilter)
+    files.headOption.map(f => Left(DirPlan(
+      dirSchema(dir, f.entry.filePath), partitionSchema, files)))
   }
 
   /** One relation over manifest-planned files of one physical schema:
@@ -3231,8 +3249,10 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     * delete file whose manifest still names the old path). */
   protected def fileFrame(file: Path): DataFrame =
     manifestRelation(DirPlan(dirSchema(file.getParent, file.toString),
-      StructType(Nil), Seq(ManifestFileIndex.File(
-        ManifestFileIndex.qualify(file.toString), Files.size(file), Nil))))
+      StructType(Nil), Seq(ManifestFileIndex.File(AvroManifests.DataFileEntry(
+        status = 1, content = 1, filePath = file.toString,
+        fileFormat = "PARQUET", partition = Nil, recordCount = 0L,
+        fileSizeInBytes = Files.size(file)), Nil))))
 
   /** A delete-file group's rows (a committed group always lists files). */
   private def deleteFrame(ns: String, table: String, meta: ObjectNode,
@@ -3255,7 +3275,10 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     es
   }
 
-  protected def deleteTree(dir: Path): Unit =
+  /** Delete `dir` and everything under it, and forget their memoized
+    * schemas. */
+  protected def deleteTree(dir: Path): Unit = {
+    forgetDirSchemas(dir)
     if (Files.exists(dir)) {
       // Files.walk returns a Stream holding directory handles — close it
       // (materialize first; deletion happens outside the walk)
@@ -3263,6 +3286,7 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
         _.iterator().asScala.toSeq).reverse
         .foreach(Files.deleteIfExists(_))
     }
+  }
 
   /** Iceberg `expire_snapshots`: retain the `keepLast` most recent log
     * entries PLUS every snapshot a ref names (a tagged "audited" snapshot
@@ -3718,7 +3742,7 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     * library read faces price. */
   private[graft] def sqlScanState(ns: String, table: String,
       at: Option[Long]): SnapshotLakeCatalog.SqlScanState = {
-    import SnapshotLakeCatalog.{SqlDataFile, SqlScanState}
+    import SnapshotLakeCatalog.SqlScanState
     val meta = readMeta(ns, table)
     val schema = metaSchema(meta)
     val partFields = specFields(meta).filter(_.carrier.isDefined)
@@ -3777,12 +3801,7 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
           .getOrElse(Map.empty)
         dirs.map(d => SnapshotLakeCatalog.SqlDirEntry(d, sums.get(d)))
       }
-    val loadDir: String => Seq[SqlDataFile] = d => {
-      val base = dataDir(ns, table).resolve(d)
-      AvroManifests.readManifest(manifestPathFor(ns, table, d))
-        .filter(_.content == 0)
-        .map(e => SqlDataFile.of(base.resolve(e.filePath).toString, e))
-    }
+    val partitionSchema = sqlPartitionSchema(partFields)
     val bucket = partFields.filter(_.transform.startsWith("bucket[")) match {
       case Seq(f) => Some((f.srcName,
         f.transform.stripPrefix("bucket[").stripSuffix("]").toInt))
@@ -3791,13 +3810,34 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     SqlScanState(
       StructType(schema.fields.filterNot(f =>
         SnapshotLakeCatalog.isTombstone(f.name))),
-      snapshotId, composed, partFields, bucket,
-      dirEntries, loadDir,
+      snapshotId, composed, partFields, partitionSchema, bucket,
+      dirEntries, d => sqlDirFiles(ns, table, meta, d, partitionSchema),
       partitionStrings,
       properties = Option(meta.get("properties"))
         .map(_.asInstanceOf[ObjectNode].properties().asScala
           .map(e => e.getKey -> e.getValue.asText()).toMap)
         .getOrElse(Map.empty))
+  }
+
+  /** The native SQL faces' partition schema: the spec's identity columns,
+    * which its readers restore from each file's partition values. */
+  private def sqlPartitionSchema(
+      partFields: Seq[SnapshotLakeCatalog.PartField]): StructType =
+    StructType(partFields.filter(_.transform == "identity")
+      .map(f => StructField(f.srcName, f.srcType)))
+
+  /** A dir's [[manifestFiles]] for the native SQL faces. They read one
+    * spec generation, which lays every dir out as `partitionSchema`; a dir
+    * laid out otherwise fails loudly, since its values would bind to the
+    * wrong columns. */
+  private def sqlDirFiles(ns: String, table: String, meta: ObjectNode,
+      d: String, partitionSchema: StructType): Seq[ManifestFileIndex.File] = {
+    val (layout, files) = manifestFiles(ns, table, meta, d)
+    if (files.nonEmpty && layout != partitionSchema)
+      throw new IllegalStateException(s"$ns.$table: directory $d lays " +
+        s"out ${layout.simpleString}, not the spec's " +
+        partitionSchema.simpleString)
+    files
   }
 
   /** Test seam: fired between compact's rewrite and its commit attempt,
@@ -3949,23 +3989,6 @@ object SnapshotLakeCatalog {
   case class StreamSnap(id: Long, operation: String,
                         addedFiles: Long, addedRecords: Long)
 
-  /** One live data file of a snapshot (manifest-sourced — no directory
-    * listing): absolute path, size, row count, the partition tuple
-    * (spec field name → path value, None = null/not derivable), and the
-    * manifest's per-column Appendix-D bounds and NaN counts (field id →
-    * encoded lower/upper, count — the stats-tier file-skipping input). */
-  case class SqlDataFile(path: String, sizeBytes: Long, rows: Long,
-                         partition: Map[String, Option[String]],
-                         lower: Seq[(Int, Array[Byte])] = Nil,
-                         upper: Seq[(Int, Array[Byte])] = Nil,
-                         nan: Seq[(Int, Long)] = Nil)
-
-  object SqlDataFile {
-    def of(path: String, e: AvroManifests.DataFileEntry): SqlDataFile =
-      SqlDataFile(path, e.fileSizeInBytes, e.recordCount,
-        e.partition.toMap, e.lowerBounds, e.upperBounds, e.nanValueCounts)
-  }
-
   /** One live data DIRECTORY of a snapshot, as scan planning first sees
     * it: just the name and the manifest-list `field_summary` bounds
     * (spec field name -> summary; None = written pre-summaries or under
@@ -3979,26 +4002,26 @@ object SnapshotLakeCatalog {
   /** The DSv2 plugin's planning snapshot of one table
     * ([[SnapshotLakeCatalog.sqlScanState]]): `composed` = Some(reason)
     * when only the composed [[SnapshotLakeCatalog.composedFrame]] plan
-    * reads the table exactly; `bucket` = the (source column, N) of the
+    * reads the table exactly; `partitionSchema` = the identity columns
+    * each file's values restore; `bucket` = the (source column, N) of the
     * spec's single bucket field, the storage-partitioned-join handle.
     * Per-dir manifests load lazily through [[filesOf]] (memoized — many
-    * scans of one table instance share the reads); [[files]] is the
-    * everything view for consumers that genuinely need the full list. */
+    * scans of one table instance share the reads). */
   case class SqlScanState(
       schema: org.apache.spark.sql.types.StructType,
       snapshotId: Long,
       composed: Option[String],
       partFields: Seq[PartField],
+      partitionSchema: org.apache.spark.sql.types.StructType,
       bucket: Option[(String, Int)],
       dirEntries: Seq[SqlDirEntry],
-      loadDir: String => Seq[SqlDataFile],
+      loadDir: String => Seq[ManifestFileIndex.File],
       partitionStrings: Seq[String],
       properties: Map[String, String]) {
-    @transient private lazy val dirCache =
-      new java.util.concurrent.ConcurrentHashMap[String, Seq[SqlDataFile]]()
-    def filesOf(d: SqlDirEntry): Seq[SqlDataFile] =
+    @transient private lazy val dirCache = new java.util.concurrent
+      .ConcurrentHashMap[String, Seq[ManifestFileIndex.File]]()
+    def filesOf(d: SqlDirEntry): Seq[ManifestFileIndex.File] =
       dirCache.computeIfAbsent(d.dir, dir => loadDir(dir))
-    lazy val files: Seq[SqlDataFile] = dirEntries.flatMap(filesOf)
   }
 
   private val FnRx =

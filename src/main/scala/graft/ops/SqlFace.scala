@@ -57,8 +57,9 @@ object SqlFace {
   private def scanFiles(df: DataFrame): Int = {
     deepCollect(finalPlan(df)) { case b: BatchScanExec => b }
       .flatMap(_.inputPartitions)
-      .flatMap(_.asInstanceOf[graft.sql.GraftInputPartition]
-        .files.map(_.path))
+      .flatMap(_.asInstanceOf[
+        org.apache.spark.sql.execution.datasources.FilePartition]
+        .files.map(_.urlEncodedPath))
       .distinct.size
   }
 

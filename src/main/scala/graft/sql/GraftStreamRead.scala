@@ -1,11 +1,9 @@
 package graft.sql
 
 import graft.lake.{ManifestPruning, SnapshotLakeCatalog}
-import graft.lake.SnapshotLakeCatalog.{PartField, SqlDataFile}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxFiles, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -39,8 +37,9 @@ object GraftStreamOffset {
   * exactly the files the snapshots in `(start, end]` appended
   * ([[SnapshotLakeCatalog.sqlAppendSlice]]) — manifest-exact, no
   * directory listing, no table scan, so a 100 TB table streams at the
-  * cost of its new data. Reads ride the same vectorized parquet closure
-  * and file packing as the batch scan ([[GraftParquetRead]]). Per-batch
+  * cost of its new data. Batches split, pack and read their files the way
+  * the batch scan does ([[GraftScan.filePartitions]],
+  * [[GraftScan.readerFactory]]: Spark's own file-source objects). Per-batch
   * FILE pruning (partition-tuple + column-bounds tiers over `pushed`)
   * is plumbed and shared with the batch scan, but Spark's planner
   * builds streaming scans WITHOUT invoking pushFilters (parity with
@@ -171,106 +170,17 @@ class GraftMicroBatchStream(spark: SparkSession, table: GraftTable,
     val pruning = new ManifestPruning(st.schema, st.partFields, pushed.toSeq)
     val files = lake
       .sqlAppendSlice(ns, tableName, from, to, skipDeletes, skipOverwrites)
-      .filter(pruning.fileCanMatch)
-    GraftParquetRead.pack(spark,
-      GraftParquetRead.slices(files, reqPart))
+      .filter(f => pruning.fileCanMatch(f.entry))
+    GraftScan.filePartitions(spark, files, st.partitionSchema, reqPart)
+      .toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val st = table.state
-    GraftParquetRead.readerFactory(spark, st.schema, st.partFields,
-      reqData, reqPart, pushed)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    GraftScan.readerFactory(spark, table.state, reqData, reqPart, pushed)
 
   override def deserializeOffset(json: String): Offset =
     GraftStreamOffset.parse(json)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
-}
-
-/** The file-to-task layer the batch scan and the micro-batch stream
-  * share: manifest entries → partition-value-carrying slices → split +
-  * greedy-packed input partitions → the vectorized parquet closure. One
-  * implementation, so the streaming read inherits every batch-scan
-  * discipline (maxPartitionBytes splitting, openCost packing,
-  * whole-stage-friendly columnar batches) by construction. */
-private[sql] object GraftParquetRead {
-
-  /** Slices with identity-partition values restored from the spec tuple
-    * (in the scan's required-partition-column order). */
-  def slices(files: Seq[SqlDataFile],
-             reqPart: StructType): Array[GraftFileSlice] = {
-    val parsers = reqPart.fields.map(pf =>
-      pf.name -> ManifestPruning.identityParser(pf.dataType))
-    files.map { f =>
-      val values: Array[Any] = parsers.map { case (name, parse) =>
-        f.partition.get(name).flatten.map(parse).orNull
-      }
-      GraftFileSlice(f.path, 0L, f.sizeBytes, f.sizeBytes, values)
-    }.toArray
-  }
-
-  /** Spark's file-source sizing discipline, applied to the manifest list:
-    * files larger than `spark.sql.files.maxPartitionBytes` SPLIT into
-    * byte ranges (parquet row groups align to whichever range holds their
-    * midpoint — the same contract FileSourceScanExec relies on), then
-    * ranges GREEDY-PACK largest-first so many small files share one task
-    * (`openCostInBytes` padding). Without this, one task per file means a
-    * 2 GB file serializes on one core and 10k tiny files cost 10k task
-    * launches — both scale killers at 100 TB. */
-  def pack(spark: SparkSession,
-           all: Array[GraftFileSlice]): Array[InputPartition] = {
-    val conf = spark.sessionState.conf
-    val maxBytes = conf.filesMaxPartitionBytes
-    val openCost = conf.filesOpenCostInBytes
-    val split = all.flatMap { s =>
-      (0L until math.max(1L, s.fileSize) by maxBytes).map(off =>
-        s.copy(start = off,
-          length = math.min(maxBytes, s.fileSize - off)))
-    }
-    val packed = Seq.newBuilder[Array[GraftFileSlice]]
-    val cur = Seq.newBuilder[GraftFileSlice]
-    var curBytes = 0L
-    var curN = 0
-    split.sortBy(-_.length).foreach { s =>
-      val cost = s.length + openCost
-      if (curN > 0 && curBytes + cost > maxBytes) {
-        packed += cur.result().toArray
-        cur.clear(); curBytes = 0L; curN = 0
-      }
-      cur += s; curBytes += cost; curN += 1
-    }
-    if (curN > 0) packed += cur.result().toArray
-    packed.result()
-      .map(fs => new GraftInputPartition(fs): InputPartition).toArray
-  }
-
-  /** Executors run the SAME vectorized parquet closure Spark's own file
-    * source ships ([[ParquetFileFormat.buildReaderWithPartitionValues]]):
-    * whole-stage-friendly columnar batches when the schema supports them,
-    * rows otherwise. */
-  def readerFactory(spark: SparkSession, tableSchema: StructType,
-                    partFields: Seq[PartField], reqData: StructType,
-                    reqPart: StructType,
-                    pushed: Array[Filter]): PartitionReaderFactory = {
-    val identityNames = partFields
-      .filter(_.transform == "identity").map(_.srcName).toSet
-    val dataSchema = StructType(
-      tableSchema.fields.filterNot(f => identityNames.contains(f.name)))
-    val dataCols = dataSchema.fieldNames.toSet
-    val parquetFilters = pushed
-      .filter(_.references.forall(dataCols.contains)).toSeq
-    val fmt = new ParquetFileFormat()
-    val readSchema = StructType(reqData.fields ++ reqPart.fields)
-    val columnar = fmt.supportBatch(spark, readSchema)
-    val readFunc = fmt.buildReaderWithPartitionValues(
-      spark, dataSchema, reqPart, reqData, parquetFilters,
-      // the format requires the caller to declare the batch contract
-      // explicitly (it must agree with supportBatch on the same schema)
-      Map(org.apache.spark.sql.execution.datasources.FileFormat
-        .OPTION_RETURNING_BATCH -> columnar.toString),
-      spark.sessionState.newHadoopConfWithOptions(Map.empty))
-    GraftReaderFactory(readFunc, columnar)
-  }
 }

@@ -1,23 +1,22 @@
 package graft.sql
 
-import graft.lake.{ManifestPruning, SnapshotLakeCatalog}
-import graft.lake.SnapshotLakeCatalog.{SqlDataFile, SqlScanState}
-import org.apache.spark.paths.SparkPath
+import graft.lake.{ManifestFileIndex, ManifestPruning, SnapshotLakeCatalog}
+import graft.lake.SnapshotLakeCatalog.SqlScanState
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
-import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsReportStatistics}
+import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsReportStatistics}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.connector.write.SupportsTruncate
-import org.apache.spark.sql.execution.datasources.PartitionedFile
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FilePartition, InMemoryFileIndex, PartitionDirectory, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.sources.{Filter, InsertableRelation}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import java.util.{OptionalLong, Set => JSet}
 import scala.jdk.CollectionConverters._
@@ -371,40 +370,41 @@ class GraftScanBuilder(spark: SparkSession, table: GraftTable,
 
   override def build(): Scan = {
     val st = table.state
-    val identityNames = st.partFields
-      .filter(_.transform == "identity").map(_.srcName).toSet
+    val partNames = st.partitionSchema.fieldNames.toSet
     // readSchema order: data columns first, then identity partition
-    // columns — the shape FileFormat readers emit (values appended from
-    // the partition tuple)
+    // columns — the shape file-source readers emit (each file's
+    // partition values appended)
     val reqData = StructType(required.fields.filterNot(f =>
-      identityNames.contains(f.name)))
+      partNames.contains(f.name)))
     val reqPart = StructType(required.fields.filter(f =>
-      identityNames.contains(f.name)))
+      partNames.contains(f.name)))
     // DIR tier first — manifest-list field_summary bounds drop whole dirs
     // WITHOUT opening their manifests (planning cost scales with
     // surviving dirs, the 100 TB discipline) — then each file's
     // partition tuple and column bounds
     val pruning = new ManifestPruning(st.schema, st.partFields, pushed.toSeq)
     val files = st.dirEntries.filter(d => pruning.dirCanMatch(d.summaries))
-      .flatMap(st.filesOf).filter(pruning.fileCanMatch)
+      .flatMap(st.filesOf).filter(f => pruning.fileCanMatch(f.entry))
     new GraftScan(spark, table, reqData, reqPart, pushed, files, options,
       batchUnreadable)
   }
 }
 
-/** One planned snapshot scan = its own [[Batch]]: manifest-exact file
-  * slices, per-file partition values restored from the spec tuple, and —
-  * when the spec is bucket-transform and every file carries its bucket id
-  * — `KeyGroupedPartitioning(bucket(N, src))` with one input partition
-  * per live bucket, each [[HasPartitionKey]]. Two tables bucketed with
-  * the same (N, family) then equi-join with ZERO Exchange once
-  * `spark.sql.sources.v2.bucketing.enabled` is on (the catalog resolves
-  * `bucket` to [[GraftBucketFunction]] for the compatibility proof).
-  * Statistics report manifest-summed bytes/rows so the planner can
-  * broadcast a small side without listing a single directory. */
+/** One planned snapshot scan = its own [[Batch]]: manifest-exact files,
+  * planned and read by Spark's own file-source objects
+  * ([[GraftScan.filePartitions]], [[GraftScan.readerFactory]]), each
+  * file's identity-partition values restored from the manifest loader —
+  * and, when the spec is bucket-transform and every file carries its
+  * bucket id, `KeyGroupedPartitioning(bucket(N, src))` with one input
+  * partition per live bucket, each [[HasPartitionKey]]. Two tables
+  * bucketed with the same (N, family) then equi-join with ZERO Exchange
+  * once `spark.sql.sources.v2.bucketing.enabled` is on (the catalog
+  * resolves `bucket` to [[GraftBucketFunction]] for the compatibility
+  * proof). Statistics report manifest-summed bytes/rows so the planner
+  * can broadcast a small side without listing a single directory. */
 class GraftScan(spark: SparkSession, table: GraftTable,
                 reqData: StructType, reqPart: StructType,
-                pushed: Array[Filter], files: Seq[SqlDataFile],
+                pushed: Array[Filter], files: Seq[ManifestFileIndex.File],
                 options: CaseInsensitiveStringMap =
                   CaseInsensitiveStringMap.empty(),
                 batchUnreadable: Option[String] = None)
@@ -418,7 +418,7 @@ class GraftScan(spark: SparkSession, table: GraftTable,
     * executed scan BEFORE [[planInputPartitions]], so a dynamic-partition-
     * pruning subquery (a join whose other side filters a partition-derived
     * column) drops whole files at runtime — the DSv2 analog of DPP. */
-  private var liveFiles: Seq[SqlDataFile] = files
+  private var liveFiles: Seq[ManifestFileIndex.File] = files
 
   /** Runtime-filterable columns: every partition-spec SOURCE. On the
     * bucket-grouped path the BUCKET source is excluded — shrinking the
@@ -443,7 +443,7 @@ class GraftScan(spark: SparkSession, table: GraftTable,
     // predicate keeps every file (the engine re-applies exactly)
     val pruning = new ManifestPruning(st.schema, st.partFields,
       predicates.flatMap(GraftFilterColumns.v2ToV1).toSeq)
-    liveFiles = liveFiles.filter(pruning.fileCanMatch)
+    liveFiles = liveFiles.filter(f => pruning.fileCanMatch(f.entry))
   }
 
   override def readSchema(): StructType =
@@ -473,32 +473,27 @@ class GraftScan(spark: SparkSession, table: GraftTable,
     override def sizeInBytes(): OptionalLong = {
       val factor = org.apache.spark.sql.internal.SQLConf.get
         .fileCompressionFactor
-      val scaled = (liveFiles.map(_.sizeBytes).sum * factor).toLong
-      val rowEst = liveFiles.map(_.rows).sum * math.max(
-        readSchema().defaultSize.toLong, 1L)
+      val scaled = (liveFiles.map(_.size).sum * factor).toLong
+      val rowEst = rows * math.max(readSchema().defaultSize.toLong, 1L)
       OptionalLong.of(math.max(scaled, rowEst))
     }
-    override def numRows(): OptionalLong =
-      OptionalLong.of(liveFiles.map(_.rows).sum)
+    override def numRows(): OptionalLong = OptionalLong.of(rows)
+    private def rows = liveFiles.map(_.entry.recordCount).sum
   }
 
-  /** (bucket spec field name, source, N) when bucket-grouped planning is
-    * on — requires every file to carry an int bucket tuple value. */
-  private lazy val bucketGroups: Option[(String, Int, Seq[(Int, Seq[SqlDataFile])])] =
+  /** (source, N, files per bucket id) when bucket-grouped planning is on
+    * — requires every file to carry an int bucket tuple value. */
+  private lazy val bucketGroups
+      : Option[(String, Int, Seq[(Int, Seq[ManifestFileIndex.File])])] =
     st.bucket.flatMap { case (src, n) =>
-      val fieldName = st.partFields
-        .find(_.transform == s"bucket[$n]").map(_.specName)
-      fieldName.flatMap { fn =>
-        val keyed = files.map(f =>
-          f.partition.get(fn).flatten.flatMap(_.toIntOption) -> f)
+      st.partFields.find(_.transform == s"bucket[$n]").flatMap { pf =>
+        val keyed = files.map(f => f.entry.partition.collectFirst {
+          case (pf.specName, v) => v
+        }.flatten.flatMap(_.toIntOption) -> f)
         if (keyed.exists(_._1.isEmpty)) None
-        else Some((src, n,
-          keyed.map { case (k, f) => (k.get, f) }
-            .groupBy(_._1).view.mapValues(_.map(_._2)).toSeq.sortBy(_._1)))
-      }.map { case (s2, n2, g) => (s2: String, n2, g) }
-    } match {
-      case Some((src, n, g)) => Some((src, n, g))
-      case None => None
+        else Some((src, n, keyed.groupBy(_._1.get).view
+          .mapValues(_.map(_._2)).toSeq.sortBy(_._1)))
+      }
     }
 
   override def outputPartitioning(): Partitioning = bucketGroups match {
@@ -508,12 +503,6 @@ class GraftScan(spark: SparkSession, table: GraftTable,
     case None => new UnknownPartitioning(liveFiles.length)
   }
 
-  private def slices(fs: Seq[SqlDataFile]): Array[GraftFileSlice] =
-    GraftParquetRead.slices(fs, reqPart)
-
-  /** Spark's file-source sizing discipline
-    * ([[GraftParquetRead.pack]] — shared with the micro-batch stream):
-    * oversized files split, small files greedy-pack. */
   override def planInputPartitions(): Array[InputPartition] = {
     // the debt-only BATCH face fails deferred (planners probe scans they
     // never run; the extensions substitute the composed read before any
@@ -527,82 +516,102 @@ class GraftScan(spark: SparkSession, table: GraftTable,
         // WITHIN groups; a fully-filtered group stays as an EMPTY
         // partition so the group set matches the reported partitioning.
         val live = liveFiles.map(_.path).toSet
-        groups.map { case (bucketId, fs) =>
-          new KeyedGraftInputPartition(
-            slices(fs.filter(f => live(f.path))), bucketId): InputPartition
+        groups.zipWithIndex.map { case ((bucketId, fs), i) =>
+          new KeyedFilePartition(i, GraftScan.wholeFiles(
+            fs.filter(f => live(f.path)), st.partitionSchema, reqPart),
+            bucketId): InputPartition
         }.toArray
       case None =>
-        GraftParquetRead.pack(spark, slices(liveFiles))
+        GraftScan.filePartitions(spark, liveFiles, st.partitionSchema,
+          reqPart).toArray
     }
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
     batchUnreadable.foreach(m => throw new UnsupportedOperationException(m))
-    GraftParquetRead.readerFactory(spark, st.schema, st.partFields,
-      reqData, reqPart, pushed)
+    GraftScan.readerFactory(spark, st, reqData, reqPart, pushed)
   }
 }
 
-/** One parquet byte range + the identity-partition values its rows carry
-  * (in the scan's required-partition-column order). `start`/`length`
-  * bound the range (row groups align by midpoint), `fileSize` is the
-  * whole file's. */
-case class GraftFileSlice(path: String, start: Long, length: Long,
-                          fileSize: Long,
-                          partValues: Array[Any]) extends Serializable
+/** The file-to-task layer the batch scan and the micro-batch stream share,
+  * made of Spark's own file-source objects: the manifest files group into
+  * [[ManifestFileIndex]] directories, split and pack the way
+  * `FileSourceScanExec` plans a parquet relation, and read through the
+  * v2 parquet reader factory. */
+object GraftScan {
 
-class GraftInputPartition(val files: Array[GraftFileSlice])
-    extends InputPartition
+  private def directories(files: Seq[ManifestFileIndex.File],
+                          partitionSchema: StructType)
+      : Seq[PartitionDirectory] =
+    new ManifestFileIndex(files, partitionSchema).listFiles(Nil, Nil)
 
-/** A bucket's worth of files: `partitionKey` is what
-  * `KeyGroupedPartitioning` groups and the SPJ matcher compares. */
-class KeyedGraftInputPartition(files: Array[GraftFileSlice],
-                               val bucketId: Int)
-    extends GraftInputPartition(files) with HasPartitionKey {
-  override def partitionKey(): InternalRow =
-    new GenericInternalRow(Array[Any](bucketId))
+  /** Each file as byte ranges of at most `maxSplitBytes` (None: whole),
+    * carrying the values of the `reqPart` columns. Parquet row groups
+    * align to whichever range holds their midpoint. */
+  private def splitFiles(dirs: Seq[PartitionDirectory],
+                         partitionSchema: StructType, reqPart: StructType,
+                         maxSplitBytes: Option[Long]): Seq[PartitionedFile] = {
+    val pick = reqPart.fieldNames.map(partitionSchema.fieldIndex)
+    dirs.flatMap { d =>
+      val values = new GenericInternalRow(pick.map(i =>
+        d.values.get(i, partitionSchema(i).dataType)))
+      d.files.flatMap(f => maxSplitBytes match {
+        case Some(max) => PartitionedFileUtil.splitFiles(f, f.getPath,
+          isSplitable = true, max, values)
+        case None => Seq(PartitionedFileUtil.getPartitionedFile(f,
+          f.getPath, values, 0L, f.getLen))
+      })
+    }
+  }
+
+  /** The files whole, as the bucket-grouped scan reads them. */
+  def wholeFiles(files: Seq[ManifestFileIndex.File],
+                 partitionSchema: StructType,
+                 reqPart: StructType): Array[PartitionedFile] =
+    splitFiles(directories(files, partitionSchema), partitionSchema,
+      reqPart, None).toArray
+
+  /** Spark's split sizing and packing: `FilePartition.maxSplitBytes`
+    * (the smaller of `maxPartitionBytes` and the larger of
+    * `openCostInBytes` and bytes per core), ranges largest first, then
+    * `FilePartition.getFilePartitions` packs them. */
+  def filePartitions(spark: SparkSession, files: Seq[ManifestFileIndex.File],
+                     partitionSchema: StructType,
+                     reqPart: StructType): Seq[FilePartition] = {
+    val dirs = directories(files, partitionSchema)
+    val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
+    FilePartition.getFilePartitions(spark,
+      splitFiles(dirs, partitionSchema, reqPart, Some(maxSplit))
+        .sortBy(-_.length), maxSplit)
+  }
+
+  /** The v2 parquet reader factory over the table's files, which hold
+    * its columns minus the identity partition columns: vectorized batches
+    * when the read schema supports them, rows otherwise. Pushed filters on
+    * data columns prune row groups. `ParquetScan` sets the parquet read
+    * keys on the Hadoop conf and broadcasts it; the factory never reads
+    * its file index, so an empty one stands in. */
+  def readerFactory(spark: SparkSession, st: SqlScanState,
+                    reqData: StructType, reqPart: StructType,
+                    pushed: Array[Filter]): PartitionReaderFactory = {
+    val partNames = st.partitionSchema.fieldNames.toSet
+    val dataSchema =
+      StructType(st.schema.fields.filterNot(f => partNames(f.name)))
+    val dataCols = dataSchema.fieldNames.toSet
+    ParquetScan(spark, spark.sessionState.newHadoopConf(),
+      new InMemoryFileIndex(spark, Nil, Map.empty, None), dataSchema,
+      reqData, reqPart, pushed.filter(_.references.forall(dataCols)),
+      CaseInsensitiveStringMap.empty()).createReaderFactory()
+  }
 }
 
-/** Executors run the SAME vectorized parquet closure Spark's own file
-  * source ships ([[ParquetFileFormat.buildReaderWithPartitionValues]]):
-  * whole-stage-friendly columnar batches when the schema supports them,
-  * rows otherwise — one slice list in, one stream out. */
-case class GraftReaderFactory(
-    readFunc: PartitionedFile => Iterator[InternalRow],
-    columnar: Boolean) extends PartitionReaderFactory {
-
-  private def rawIter(p: InputPartition): Iterator[InternalRow] =
-    p.asInstanceOf[GraftInputPartition].files.iterator.flatMap { f =>
-      readFunc(PartitionedFile(
-        new GenericInternalRow(f.partValues),
-        SparkPath.fromPathString(f.path), f.start, f.length,
-        Array.empty[String], 0L, f.fileSize))
-    }
-
-  override def supportColumnarReads(p: InputPartition): Boolean = columnar
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      private val it = rawIter(p)
-      private var cur: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { cur = it.next(); true } else false
-      override def get(): InternalRow = cur
-      override def close(): Unit = ()
-    }
-
-  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] =
-    new PartitionReader[ColumnarBatch] {
-      // the parquet closure yields ColumnarBatch disguised as InternalRow
-      // when built batch-capable — Spark's own FileScanRDD does this cast
-      private val it = rawIter(p)
-      private var cur: ColumnarBatch = _
-      override def next(): Boolean =
-        if (it.hasNext) { cur = it.next().asInstanceOf[ColumnarBatch]; true }
-        else false
-      override def get(): ColumnarBatch = cur
-      override def close(): Unit = ()
-    }
+/** A bucket's worth of whole files: `partitionKey` is what
+  * `KeyGroupedPartitioning` groups and the SPJ matcher compares. */
+class KeyedFilePartition(index: Int, files: Array[PartitionedFile],
+                         val bucketId: Int)
+    extends FilePartition(index, files) with HasPartitionKey {
+  override def partitionKey(): InternalRow =
+    new GenericInternalRow(Array[Any](bucketId))
 }
 
 /** `INSERT INTO` = append, `INSERT OVERWRITE`/`TRUNCATE` = overwrite —

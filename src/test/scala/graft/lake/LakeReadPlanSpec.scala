@@ -160,6 +160,23 @@ class LakeReadPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         s"read-back jobs at depth 3 vs 40: ${jobs.mkString(" vs ")}")
     }
 
+    test(s"[${impl.name}] the footer-schema memo forgets the dirs " +
+      "expiry and DROP TABLE delete") {
+      val (cat, ns) = fresh(impl)
+      appendOnly(cat, ns, 20)
+      assert(cat.load(ns, "t").count() == 200)
+      cat.compact(ns, "t", 1)
+      cat.expireSnapshots(ns, "t", keepLast = 1)
+      assert(cat.load(ns, "t").count() == 200)
+      val live = liveFiles(cat, ns).map(f => impl.dataRoot(cat, ns, "t")
+        .relativize(Paths.get(f)).getName(0)).distinct.size
+      assert(live == 1)
+      assert(cat.fileSchemaMemoSize <= live,
+        s"${cat.fileSchemaMemoSize} memoized schemas for $live live dir")
+      cat.dropTable(ns, "t")
+      assert(cat.fileSchemaMemoSize == 0)
+    }
+
     test(s"[${impl.name}] an added column reads as two schema groups, " +
       "rows equal to the per-directory read") {
       val (cat, ns) = fresh(impl)
@@ -474,6 +491,17 @@ class LakeReadPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     lists.foreach(l => assert(
       Files.size(Paths.get(l.manifestPath)) == l.manifestLength,
       l.manifestPath))
+  }
+
+  test("renameTable moves the footer-schema memo's dirs with the table") {
+    val (cat, ns) = fresh(impls.head)
+    appendOnly(cat, ns, 3)
+    assert(cat.load(ns, "t").count() == 30)
+    assert(cat.fileSchemaMemoSize == 3)
+    cat.asInstanceOf[DirectoryLakeCatalog].renameTable(ns, "t", ns, "u")
+    assert(cat.fileSchemaMemoSize == 0)
+    assert(cat.load(ns, "u").count() == 30)
+    assert(cat.fileSchemaMemoSize == 3)
   }
 
   test("lake writes leave no _SUCCESS marker in snapshot or delete-file " +

@@ -1,10 +1,16 @@
 package graft.sql
 
 import graft.TestSpark
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog}
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsAdmissionControl}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
@@ -80,7 +86,7 @@ class GraftSqlCatalogSpec extends AnyFunSuite {
     def scanParts(p: SparkPlan): Int =
       collectPlan(p) { case b: BatchScanExec => b }.head
         .inputPartitions
-        .flatMap(_.asInstanceOf[GraftInputPartition].files.map(_.path))
+        .flatMap(_.asInstanceOf[FilePartition].files.map(_.filePath))
         .distinct.length
     assert(scanParts(filtered) < scanParts(all),
       s"lang='en' must prune files: ${scanParts(filtered)} vs " +
@@ -212,7 +218,7 @@ class GraftSqlCatalogSpec extends AnyFunSuite {
       val df = spark.sql(q); df.collect()
       collectPlan(finalPlan(df)) { case b: BatchScanExec => b }
         .flatMap(_.inputPartitions)
-        .flatMap(_.asInstanceOf[GraftInputPartition].files.map(_.path))
+        .flatMap(_.asInstanceOf[FilePartition].files.map(_.filePath))
         .distinct.length
     }
     val all = files(s"SELECT id FROM $cat.meta.t")
@@ -291,7 +297,7 @@ class GraftSqlCatalogSpec extends AnyFunSuite {
       val d = spark.sql(q); d.collect()
       collectPlan(finalPlan(d)) { case b: BatchScanExec => b }
         .flatMap(_.inputPartitions)
-        .flatMap(_.asInstanceOf[GraftInputPartition].files.map(_.path))
+        .flatMap(_.asInstanceOf[FilePartition].files.map(_.filePath))
         .distinct.length
     }
     val all = files(s"SELECT id FROM $cat.stats.t")
@@ -355,7 +361,7 @@ class GraftSqlCatalogSpec extends AnyFunSuite {
         .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
         .asInstanceOf[GraftScan]
     def fileCount(s: GraftScan): Int = s.toBatch.planInputPartitions()
-      .flatMap(_.asInstanceOf[GraftInputPartition].files.map(_.path))
+      .flatMap(_.asInstanceOf[FilePartition].files.map(_.filePath))
       .distinct.length
     val scan = newScan("t")
     assert(scan.filterAttributes().map(_.fieldNames().mkString("."))
@@ -419,7 +425,7 @@ class GraftSqlCatalogSpec extends AnyFunSuite {
     assert(scan.outputPartitioning().isInstanceOf[KeyGroupedPartitioning])
     def parts = scan.toBatch.planInputPartitions()
     def fileCount = parts
-      .flatMap(_.asInstanceOf[GraftInputPartition].files.map(_.path))
+      .flatMap(_.asInstanceOf[FilePartition].files.map(_.filePath))
       .distinct.length
     val (groupsBefore, filesBefore) = (parts.length, fileCount)
     // runtime ts range (catalyst micros literal, the DPP delivery form)
@@ -611,5 +617,104 @@ class GraftSqlCatalogSpec extends AnyFunSuite {
         spark.sql(s"DROP NAMESPACE $c.wb CASCADE")
       }
     } finally server.stop()
+  }
+
+  /** (file, start, length) of every range some file partitions hold. */
+  private def ranges(parts: Seq[InputPartition]): Set[(String, Long, Long)] =
+    parts.flatMap(_.asInstanceOf[FilePartition].files
+      .map(f => (f.urlEncodedPath, f.start, f.length))).toSet
+
+  test("one read plan: with files split into ranges, the SQL scan, load " +
+    "and the micro-batch stream plan the same ranges on the directory " +
+    "and REST carriers, rows exact") {
+    val server = graft.lake.RestCatalogStub.start()
+    try {
+      val restWh = Files.createTempDirectory("graft-plan-rest-").toString
+      spark.conf.set("spark.sql.catalog.gplanrest", "graft.sql.GraftSqlCatalog")
+      spark.conf.set("spark.sql.catalog.gplanrest.uri", server.uri)
+      spark.conf.set("spark.sql.catalog.gplanrest.warehouse", restWh)
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+      for (c <- Seq(cat, "gplanrest")) {
+        val catalog = spark.sessionState.catalogManager.catalog(c)
+        val lake = catalog.asInstanceOf[GraftSqlCatalog].lake
+        spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $c.plan")
+        spark.sql(s"CREATE TABLE $c.plan.t (id BIGINT, v STRING, " +
+          "lang STRING) PARTITIONED BY (lang)")
+        for (k <- 0 until 2)
+          spark.sql(s"INSERT INTO $c.plan.t SELECT id, concat('v', id), " +
+            "CASE WHEN id % 3 = 0 THEN 'en' ELSE 'de' END FROM " +
+            s"range(${k * 5000}, ${(k + 1) * 5000})")
+        val expected = (0L until 10000L)
+          .map(i => (i, s"v$i", if (i % 3 == 0) "en" else "de"))
+        def rows(df: DataFrame): Seq[(Long, String, String)] =
+          df.select("id", "v", "lang").collect()
+            .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+            .sortBy(_._1).toSeq
+        // the library face: FileSourceScanExec over the manifest index
+        val loaded = lake.load("plan", "t")
+        val loadRanges = ranges(collectPlan(loaded.queryExecution
+          .executedPlan) { case s: FileSourceScanExec => s }
+          .flatMap(_.inputRDD.partitions.map(_.asInstanceOf[FilePartition])))
+        assert(loadRanges.map(_._1).size < loadRanges.size,
+          s"$c: no file split into ranges")
+        assert(rows(loaded) == expected, c)
+        val sqlDf = spark.sql(s"SELECT id, v, lang FROM $c.plan.t")
+        val sqlRanges = ranges(collectPlan(finalPlan(sqlDf)) {
+          case b: BatchScanExec => b }.flatMap(_.inputPartitions))
+        assert(sqlRanges == loadRanges, c)
+        assert(rows(sqlDf) == expected, c)
+        // the stream over the same two appends
+        val stream = catalog.asInstanceOf[TableCatalog]
+          .loadTable(Identifier.of(Array("plan"), "t"))
+          .asInstanceOf[GraftTable].newScanBuilder(CaseInsensitiveStringMap.empty()).build()
+          .toMicroBatchStream(
+            Files.createTempDirectory("graft-plan-ckpt-").toString)
+        val start = stream.initialOffset()
+        val end = stream.asInstanceOf[SupportsAdmissionControl]
+          .latestOffset(start, ReadLimit.allAvailable())
+        assert(ranges(stream.planInputPartitions(start, end).toSeq) ==
+          loadRanges, c)
+        val streamed = scala.collection.mutable.ArrayBuffer
+          .empty[(Long, String, String)]
+        spark.readStream.table(s"$c.plan.t").writeStream
+          .foreachBatch { (b: DataFrame, _: Long) =>
+            streamed.synchronized { streamed ++= rows(b) }; ()
+          }
+          .option("checkpointLocation",
+            Files.createTempDirectory("graft-plan-ckpt-").toString)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start().awaitTermination()
+        assert(streamed.sortBy(_._1).toSeq == expected, c)
+        spark.sql(s"DROP NAMESPACE $c.plan CASCADE")
+      }
+    } finally {
+      spark.conf.unset("spark.sql.files.maxPartitionBytes")
+      server.stop()
+    }
+  }
+
+  test("input_file_name() on the SQL face returns each row's file") {
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ifn")
+    spark.sql(s"CREATE TABLE $cat.ifn.t (id BIGINT, lang STRING) " +
+      "PARTITIONED BY (lang)")
+    spark.sql(s"INSERT INTO $cat.ifn.t SELECT id, CASE WHEN id % 2 = 0 " +
+      "THEN 'en' ELSE 'de' END FROM range(100)")
+    spark.sql(s"INSERT INTO $cat.ifn.t SELECT id, 'fr' FROM range(100, 120)")
+    def local(p: String): String = new java.net.URI(p).getPath
+    val byFile = spark.sql(
+      s"SELECT id, input_file_name() AS f FROM $cat.ifn.t").collect()
+      .groupBy(_.getString(1)).map { case (f, rs) =>
+        local(f) -> rs.map(_.getLong(0)).toSet }
+    val live = spark.sql(
+      s"SELECT file_path FROM $cat.ifn.t.files WHERE content = 0")
+      .collect().map(_.getString(0)).toSet
+    assert(byFile.keySet == live)
+    // each file, read on its own, holds exactly the rows attributed to it
+    byFile.foreach { case (f, ids) =>
+      assert(spark.read.parquet(f).select("id").collect()
+        .map(_.getLong(0)).toSet == ids, f)
+    }
+    assert(byFile.values.map(_.size).sum == 120)
+    spark.sql(s"DROP NAMESPACE $cat.ifn CASCADE")
   }
 }

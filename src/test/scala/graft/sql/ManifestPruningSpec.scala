@@ -4,6 +4,7 @@ import graft.TestSpark
 import graft.lake.SnapshotLakeCatalog
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min, when}
 import org.scalatest.funsuite.AnyFunSuite
@@ -48,8 +49,8 @@ class ManifestPruningSpec extends AnyFunSuite {
       case p => p
     }
     plan.collect { case b: BatchScanExec => b }.headOption.map(
-      _.inputPartitions.flatMap(_.asInstanceOf[GraftInputPartition]
-        .files.map(f => norm(f.path))).toSet)
+      _.inputPartitions.flatMap(_.asInstanceOf[FilePartition]
+        .files.map(f => norm(f.urlEncodedPath))).toSet)
   }
 
   /** Per file of the unpruned read: (min, max, rows matching `pred`). */
@@ -218,8 +219,10 @@ class ManifestPruningSpec extends AnyFunSuite {
       java.lang.Double.valueOf(v)).get)
     // manifest bounds exclude NaN: this file's non-NaN values are all 1.0
     def file(nan: Seq[(Int, Long)]) =
-      SnapshotLakeCatalog.SqlDataFile("f", 1L, 2L, Map.empty, b(1.0),
-        b(1.0), nan)
+      AvroManifests.DataFileEntry(status = 1, content = 0, filePath = "f",
+        fileFormat = "PARQUET", partition = Nil, recordCount = 2L,
+        fileSizeInBytes = 1L, lowerBounds = b(1.0), upperBounds = b(1.0),
+        nanValueCounts = nan)
     def may(f: Filter, nan: Seq[(Int, Long)]) =
       new ManifestPruning(schema, Nil, Seq(f)).fileCanMatch(file(nan))
     val ge = GreaterThanOrEqual("x", 2.0)
