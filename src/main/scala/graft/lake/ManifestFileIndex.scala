@@ -85,17 +85,20 @@ final class ManifestFileIndex(files: Seq[ManifestFileIndex.File],
 
 object ManifestFileIndex {
 
-  /** One manifest entry and the Catalyst values of the index's partition
-    * columns, in schema order. The index reads the entry's qualified path
-    * and recorded size; the SQL scan also prunes on its tuple and bounds
-    * and sums its row counts. */
-  case class File(entry: AvroManifests.DataFileEntry, values: Seq[Any]) {
-    val path: HPath = qualify(entry.filePath)
-    def size: Long = entry.fileSizeInBytes
+  /** One manifest entry as the index needs it: the qualified path, the
+    * recorded size, and the Catalyst values of the index's partition
+    * columns, in schema order. */
+  case class File(path: HPath, size: Long, values: Seq[Any]) {
     /** `file:` plus the URI-encoded path — the string Spark's own listing
       * gives `_metadata.file_path`, which position deletes bind to. */
     def uri: String = path.toUri.toString
   }
+
+  /** What the manifest loader gives per file: the manifest entry (rows,
+    * partition tuple, bounds, NaN counts) and its index [[File]]. The SQL
+    * faces prune on the entry and sum its rows; a library relation keeps
+    * only the File. */
+  case class LoadedFile(entry: AvroManifests.DataFileEntry, file: File)
 
   /** A manifest entry's local path, qualified the way Spark's listing
     * qualifies it. */

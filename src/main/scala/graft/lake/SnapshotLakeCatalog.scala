@@ -1541,7 +1541,7 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     * batch scan's [[sqlScanState]] flips to composed. */
   private[graft] def sqlAppendSlice(ns: String, table: String,
       fromId: Long, toId: Long, skipDeletes: Boolean,
-      skipOverwrites: Boolean): Seq[ManifestFileIndex.File] = {
+      skipOverwrites: Boolean): Seq[ManifestFileIndex.LoadedFile] = {
     val meta = readMeta(ns, table)
     require(meta.get("schemas").size() <= 1,
       s"$ns.$table carries schema evolution history — the streaming " +
@@ -3093,15 +3093,22 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     * one write gives every file the same physical schema; [[writeSnapshot]]
     * seeds the memo for the flat dirs it writes, so their first read needs
     * no footer open at all. Entries leave with their dirs
-    * ([[forgetDirSchemas]]), so the memo holds at most the dirs on disk. */
+    * ([[forgetDirSchemas]]), so the memo holds at most the dirs on disk.
+    * Keys are sorted path strings, so the dirs under one root are one key
+    * range. */
   private val fileSchemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]
+    new java.util.concurrent.ConcurrentSkipListMap[String, StructType]
 
   /** Drop the memoized schemas of every dir at or under `root`: dirs
-    * leave through [[deleteTree]], or move with a renamed table. */
+    * leave through [[deleteTree]], or move with a renamed table. The
+    * paths under `root` are the keys from `root/` up to, not including,
+    * the string with the separator's successor char in its place, so the
+    * cost is that of the entries removed, not of the whole memo. */
   protected def forgetDirSchemas(root: Path): Unit = {
-    fileSchemaMemo.keySet.removeIf(k => Path.of(k).startsWith(root))
-    ()
+    val r = root.toString
+    val sep = root.getFileSystem.getSeparator
+    fileSchemaMemo.remove(r)
+    fileSchemaMemo.subMap(r + sep, r + (sep.head + 1).toChar).clear()
   }
 
   private[lake] def fileSchemaMemoSize: Int = fileSchemaMemo.size
@@ -3154,9 +3161,11 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     * every read face plans from: the library relations ([[planDir]]), the
     * SQL scan ([[sqlScanState]]) and the micro-batch stream
     * ([[sqlAppendSlice]]). Each entry that passes `fileFilter` comes with
-    * its identity-partition values; nothing is listed, stat'ed or opened
-    * (the manifest is the file list, as for an Iceberg reader), which is
-    * what makes manifest-level pruning possible without touching storage.
+    * its qualified path, recorded size and identity-partition values
+    * ([[ManifestFileIndex.LoadedFile]]); nothing is listed, stat'ed or
+    * opened (the manifest is the file list, as for an Iceberg reader),
+    * which is what makes manifest-level pruning possible without touching
+    * storage.
     * Data and delete dirs load alike.
     *
     * Partition columns come from the path segments between the dir and
@@ -3170,7 +3179,7 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
   private def manifestFiles(ns: String, table: String, meta: ObjectNode,
       s: String,
       fileFilter: Option[AvroManifests.DataFileEntry => Boolean] = None)
-      : (StructType, Seq[ManifestFileIndex.File]) = {
+      : (StructType, Seq[ManifestFileIndex.LoadedFile]) = {
     val dir = dataDir(ns, table).resolve(s)
     val entries = AvroManifests.readManifest(manifestPathFor(ns, table, s))
       .filter(e => fileFilter.forall(_(e)))
@@ -3196,9 +3205,11 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
       c.name -> ManifestPruning.identityParser(c.dataType)).toMap
     (StructType(partCols), entries.map { e =>
       lazy val vals = segments(e).toMap
-      ManifestFileIndex.File(e, partCols.map(c => vals.get(c.name)
-        .filter(_ != "__HIVE_DEFAULT_PARTITION__")
-        .map(parsers(c.name)).orNull))
+      ManifestFileIndex.LoadedFile(e, ManifestFileIndex.File(
+        ManifestFileIndex.qualify(e.filePath), e.fileSizeInBytes,
+        partCols.map(c => vals.get(c.name)
+          .filter(_ != "__HIVE_DEFAULT_PARTITION__")
+          .map(parsers(c.name)).orNull)))
     })
   }
 
@@ -3221,8 +3232,8 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
         .parquet(dir.toString)))
     val (partitionSchema, files) =
       manifestFiles(ns, table, meta, s, fileFilter)
-    files.headOption.map(f => Left(DirPlan(
-      dirSchema(dir, f.entry.filePath), partitionSchema, files)))
+    files.headOption.map(f => Left(DirPlan(dirSchema(dir, f.entry.filePath),
+      partitionSchema, files.map(_.file))))
   }
 
   /** One relation over manifest-planned files of one physical schema:
@@ -3249,10 +3260,8 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     * delete file whose manifest still names the old path). */
   protected def fileFrame(file: Path): DataFrame =
     manifestRelation(DirPlan(dirSchema(file.getParent, file.toString),
-      StructType(Nil), Seq(ManifestFileIndex.File(AvroManifests.DataFileEntry(
-        status = 1, content = 1, filePath = file.toString,
-        fileFormat = "PARQUET", partition = Nil, recordCount = 0L,
-        fileSizeInBytes = Files.size(file)), Nil))))
+      StructType(Nil), Seq(ManifestFileIndex.File(
+        ManifestFileIndex.qualify(file.toString), Files.size(file), Nil))))
 
   /** A delete-file group's rows (a committed group always lists files). */
   private def deleteFrame(ns: String, table: String, meta: ObjectNode,
@@ -3831,7 +3840,8 @@ abstract class SnapshotLakeCatalog(spark: SparkSession) extends LakeCatalog {
     * laid out otherwise fails loudly, since its values would bind to the
     * wrong columns. */
   private def sqlDirFiles(ns: String, table: String, meta: ObjectNode,
-      d: String, partitionSchema: StructType): Seq[ManifestFileIndex.File] = {
+      d: String, partitionSchema: StructType)
+      : Seq[ManifestFileIndex.LoadedFile] = {
     val (layout, files) = manifestFiles(ns, table, meta, d)
     if (files.nonEmpty && layout != partitionSchema)
       throw new IllegalStateException(s"$ns.$table: directory $d lays " +
@@ -4015,12 +4025,12 @@ object SnapshotLakeCatalog {
       partitionSchema: org.apache.spark.sql.types.StructType,
       bucket: Option[(String, Int)],
       dirEntries: Seq[SqlDirEntry],
-      loadDir: String => Seq[ManifestFileIndex.File],
+      loadDir: String => Seq[ManifestFileIndex.LoadedFile],
       partitionStrings: Seq[String],
       properties: Map[String, String]) {
     @transient private lazy val dirCache = new java.util.concurrent
-      .ConcurrentHashMap[String, Seq[ManifestFileIndex.File]]()
-    def filesOf(d: SqlDirEntry): Seq[ManifestFileIndex.File] =
+      .ConcurrentHashMap[String, Seq[ManifestFileIndex.LoadedFile]]()
+    def filesOf(d: SqlDirEntry): Seq[ManifestFileIndex.LoadedFile] =
       dirCache.computeIfAbsent(d.dir, dir => loadDir(dir))
   }
 

@@ -171,8 +171,8 @@ class GraftMicroBatchStream(spark: SparkSession, table: GraftTable,
     val files = lake
       .sqlAppendSlice(ns, tableName, from, to, skipDeletes, skipOverwrites)
       .filter(f => pruning.fileCanMatch(f.entry))
-    GraftScan.filePartitions(spark, files, st.partitionSchema, reqPart)
-      .toArray
+    GraftScan.filePartitions(spark, files.map(_.file), st.partitionSchema,
+      reqPart).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

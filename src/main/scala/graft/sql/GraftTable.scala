@@ -404,7 +404,8 @@ class GraftScanBuilder(spark: SparkSession, table: GraftTable,
   * can broadcast a small side without listing a single directory. */
 class GraftScan(spark: SparkSession, table: GraftTable,
                 reqData: StructType, reqPart: StructType,
-                pushed: Array[Filter], files: Seq[ManifestFileIndex.File],
+                pushed: Array[Filter],
+                files: Seq[ManifestFileIndex.LoadedFile],
                 options: CaseInsensitiveStringMap =
                   CaseInsensitiveStringMap.empty(),
                 batchUnreadable: Option[String] = None)
@@ -418,7 +419,7 @@ class GraftScan(spark: SparkSession, table: GraftTable,
     * executed scan BEFORE [[planInputPartitions]], so a dynamic-partition-
     * pruning subquery (a join whose other side filters a partition-derived
     * column) drops whole files at runtime — the DSv2 analog of DPP. */
-  private var liveFiles: Seq[ManifestFileIndex.File] = files
+  private var liveFiles: Seq[ManifestFileIndex.LoadedFile] = files
 
   /** Runtime-filterable columns: every partition-spec SOURCE. On the
     * bucket-grouped path the BUCKET source is excluded — shrinking the
@@ -473,7 +474,7 @@ class GraftScan(spark: SparkSession, table: GraftTable,
     override def sizeInBytes(): OptionalLong = {
       val factor = org.apache.spark.sql.internal.SQLConf.get
         .fileCompressionFactor
-      val scaled = (liveFiles.map(_.size).sum * factor).toLong
+      val scaled = (liveFiles.map(_.file.size).sum * factor).toLong
       val rowEst = rows * math.max(readSchema().defaultSize.toLong, 1L)
       OptionalLong.of(math.max(scaled, rowEst))
     }
@@ -484,7 +485,7 @@ class GraftScan(spark: SparkSession, table: GraftTable,
   /** (source, N, files per bucket id) when bucket-grouped planning is on
     * — requires every file to carry an int bucket tuple value. */
   private lazy val bucketGroups
-      : Option[(String, Int, Seq[(Int, Seq[ManifestFileIndex.File])])] =
+      : Option[(String, Int, Seq[(Int, Seq[ManifestFileIndex.LoadedFile])])] =
     st.bucket.flatMap { case (src, n) =>
       st.partFields.find(_.transform == s"bucket[$n]").flatMap { pf =>
         val keyed = files.map(f => f.entry.partition.collectFirst {
@@ -515,15 +516,15 @@ class GraftScan(spark: SparkSession, table: GraftTable,
         // layout's own N-vs-data choice. Runtime filters drop files
         // WITHIN groups; a fully-filtered group stays as an EMPTY
         // partition so the group set matches the reported partitioning.
-        val live = liveFiles.map(_.path).toSet
+        val live = liveFiles.map(_.file.path).toSet
         groups.zipWithIndex.map { case ((bucketId, fs), i) =>
           new KeyedFilePartition(i, GraftScan.wholeFiles(
-            fs.filter(f => live(f.path)), st.partitionSchema, reqPart),
-            bucketId): InputPartition
+            fs.map(_.file).filter(f => live(f.path)), st.partitionSchema,
+            reqPart), bucketId): InputPartition
         }.toArray
       case None =>
-        GraftScan.filePartitions(spark, liveFiles, st.partitionSchema,
-          reqPart).toArray
+        GraftScan.filePartitions(spark, liveFiles.map(_.file),
+          st.partitionSchema, reqPart).toArray
     }
   }
 
@@ -545,22 +546,19 @@ object GraftScan {
       : Seq[PartitionDirectory] =
     new ManifestFileIndex(files, partitionSchema).listFiles(Nil, Nil)
 
-  /** Each file as byte ranges of at most `maxSplitBytes` (None: whole),
-    * carrying the values of the `reqPart` columns. Parquet row groups
-    * align to whichever range holds their midpoint. */
+  /** Each file as byte ranges of at most `maxSplitBytes` (whole when not
+    * `isSplitable`), carrying the values of the `reqPart` columns. Parquet
+    * row groups align to whichever range holds their midpoint. */
   private def splitFiles(dirs: Seq[PartitionDirectory],
                          partitionSchema: StructType, reqPart: StructType,
-                         maxSplitBytes: Option[Long]): Seq[PartitionedFile] = {
+                         isSplitable: Boolean,
+                         maxSplitBytes: Long): Seq[PartitionedFile] = {
     val pick = reqPart.fieldNames.map(partitionSchema.fieldIndex)
     dirs.flatMap { d =>
       val values = new GenericInternalRow(pick.map(i =>
         d.values.get(i, partitionSchema(i).dataType)))
-      d.files.flatMap(f => maxSplitBytes match {
-        case Some(max) => PartitionedFileUtil.splitFiles(f, f.getPath,
-          isSplitable = true, max, values)
-        case None => Seq(PartitionedFileUtil.getPartitionedFile(f,
-          f.getPath, values, 0L, f.getLen))
-      })
+      d.files.flatMap(f => PartitionedFileUtil.splitFiles(f, f.getPath,
+        isSplitable, maxSplitBytes, values))
     }
   }
 
@@ -569,7 +567,7 @@ object GraftScan {
                  partitionSchema: StructType,
                  reqPart: StructType): Array[PartitionedFile] =
     splitFiles(directories(files, partitionSchema), partitionSchema,
-      reqPart, None).toArray
+      reqPart, isSplitable = false, Long.MaxValue).toArray
 
   /** Spark's split sizing and packing: `FilePartition.maxSplitBytes`
     * (the smaller of `maxPartitionBytes` and the larger of
@@ -581,7 +579,7 @@ object GraftScan {
     val dirs = directories(files, partitionSchema)
     val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
     FilePartition.getFilePartitions(spark,
-      splitFiles(dirs, partitionSchema, reqPart, Some(maxSplit))
+      splitFiles(dirs, partitionSchema, reqPart, isSplitable = true, maxSplit)
         .sortBy(-_.length), maxSplit)
   }
 

@@ -504,6 +504,24 @@ class LakeReadPlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(cat.fileSchemaMemoSize == 3)
   }
 
+  test("expiry and DROP TABLE forget only their own table's memoized " +
+    "schemas, not those of a table whose name extends its name") {
+    val (cat, ns) = fresh(impls.head)
+    appendOnly(cat, ns, 20)
+    cat.ensureTable(ns, "t0", batch(0, 1).schema)
+    (0 until 20).foreach(i => cat.append(ns, "t0", batch(i * 10, 10)))
+    assert(cat.load(ns, "t").count() == 200)
+    assert(cat.load(ns, "t0").count() == 200)
+    assert(cat.fileSchemaMemoSize == 40)
+    cat.compact(ns, "t", 1)
+    cat.expireSnapshots(ns, "t", keepLast = 1)
+    assert(cat.load(ns, "t").count() == 200)
+    assert(cat.fileSchemaMemoSize == 20 + 1)
+    cat.dropTable(ns, "t")
+    assert(cat.fileSchemaMemoSize == 20)
+    assert(cat.load(ns, "t0").count() == 200)
+  }
+
   test("lake writes leave no _SUCCESS marker in snapshot or delete-file " +
     "dirs") {
     val (cat, ns) = dirCat()
